@@ -1306,7 +1306,7 @@ def oracle_sql() -> dict[str, str]:
         "FROM embeddings ORDER BY cosine DESC, vec_id ASC LIMIT 20"
     )
 
-    # mirrors pipelines/similarity.kmeans_centroids + ivf_topk: centroids
+    # mirrors pipelines/similarity.kmeans_centroids + topk_brute_and_ivf: centroids
     # initialized from the 16 rows first in md5(vec_id) order, refined by
     # ONE Lloyd round with per-dimension means rounded to 6 decimals (the
     # rounding is what makes Spark's and DuckDB's float summation orders

@@ -158,24 +158,36 @@ def _has_cdt_terms(df: DataFrame) -> bool:
     return cond is not None and not df.filter(cond).isEmpty()
 
 
-def _write_meta(out_dir: str, meta: dict) -> None:
+def atomic_write_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` so that readers only ever see
+    the old or the complete new file: dump to a temp file in the same
+    directory, fsync it, then ``os.replace``.  The temp name starts with
+    ``_`` because a store's sidecar sits inside a parquet directory, and
+    Spark's file listing skips ``_``-prefixed files — a temp file left by
+    a crash must not be read as data."""
     import json
     import tempfile
 
-    os.makedirs(out_dir, exist_ok=True)
-    # atomic replace — a crash mid-dump must never leave a truncated
-    # meta.json for a concurrent/subsequent reader
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".meta.tmp")
+    fd, tmp = tempfile.mkstemp(
+        dir=os.path.dirname(path), prefix="_", suffix=".json.tmp"
+    )
     try:
         with os.fdopen(fd, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(out_dir, "meta.json"))
+            json.dump(obj, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
     except BaseException:
         try:
             os.unlink(tmp)
         except OSError:
             pass
         raise
+
+
+def _write_meta(out_dir: str, meta: dict) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    atomic_write_json(os.path.join(out_dir, "meta.json"), meta)
 
 
 ENC_PERMUTATIONS: Dict[str, Sequence[str]] = {
@@ -508,7 +520,9 @@ def choose_index_encoded(
         try:
             with open(os.path.join(out_dir, "meta.json")) as f:
                 meta = json.load(f)
-        except OSError:
+        except (OSError, ValueError):
+            # missing, or torn by a crash (JSONDecodeError): scan every
+            # p_part directory instead of failing the query
             meta = None
         if meta:
             h = (

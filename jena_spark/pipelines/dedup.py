@@ -1,8 +1,10 @@
 """Deduplication operators: exact, MinHash(+LSH), SimHash, n-gram Jaccard.
 
-Every operator here is pure ``pyspark.sql.functions`` (JVM-side,
-whole-stage codegen) — no Python UDFs in the hot path.  The hash
-primitives are md5-string-based so a DuckDB oracle can reproduce values
+The per-character work — shingle hashing for MinHash signatures and
+Jaccard sets, SimHash, and the Jaccard intersection counts — runs in
+Arrow-batched ``mapInPandas`` stages with numpy kernels; grouping,
+banding, joins and the final score expressions stay JVM-side.  The hash
+primitives are md5-based so a DuckDB oracle can reproduce values
 bit-for-bit (md5 is the one hash both engines share).
 
 Scale notes (100 TB design point):
@@ -12,13 +14,15 @@ Scale notes (100 TB design point):
   band groupBy); candidate pairs come from a band-bucket self-join whose
   key cardinality grows with corpus size → hash-partition naturally;
   skewed buckets (boilerplate docs) are handled by AQE skew-join;
-- pairwise verification (Jaccard) joins only candidate pairs, never the
-  full cross product.
+- pairwise verification (Jaccard) touches only candidate pairs, never
+  the full cross product: on driver-broadcast sets below one size gate,
+  through a JVM join above it.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+import hashlib
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,26 +55,14 @@ def _shingles(text_col: str, k: int) -> F.Column:
 
 
 _MERSENNE = 2147483647  # 2^31 - 1
-
-# worker-side cache of the packed jaccard set arrays, keyed by temp-dir
-# path (python workers are reused across tasks — spark.python.worker.reuse)
-_JACCARD_SETS_CACHE: dict = {}
-
-# bitset fast-path gates (see _jaccard_verify_py): probe a slot sample for
-# the distinct-hash count; dictionary-encode the corpus only when the
-# sample says the global shingle space is tiny (boilerplate/shared-vocab
-# corpora — exactly the ones that explode the LSH candidate set)
-_BITSET_SAMPLE_SLOTS = 262144
-_BITSET_SAMPLE_DISTINCT = 4096
-_BITSET_MAX_BYTES = 256 * 1024 * 1024
-# measured cost model for the bitset-vs-loop decision: the sorted-merge
-# loop runs IN PARALLEL across the workers (~14 µs/pair each), while the
-# bitset build is serial driver work (~0.13 µs/slot: dictionary encode +
-# bool scatter + packbits).  Bitset only pays when the per-pair saving
-# beats the build — i.e. when candidate pairs vastly outnumber corpus
-# shingle slots (the quadratic-bucket blow-up case).
-_BITSET_LOOP_US_PER_PAIR = 14.0
-_BITSET_BUILD_US_PER_SLOT = 0.13
+# Below this upper bound of the hashed-set payload (8 bytes per shingle
+# position + 32 per doc) both Jaccard entry points collect the sets to
+# the driver and broadcast them to the Python verify; above it the JVM
+# join runs, the only form that needs no driver-side copy of the sets.
+_DRIVER_SETS_MAX_BYTES = 256 * 1024 * 1024
+# The JVM join broadcasts its (measured) set table below this size and
+# falls back to a sort-merge join above it.
+_JVM_BROADCAST_MAX_BYTES = 512 * 1024 * 1024
 
 
 def perm_consts(num_perm: int):
@@ -78,8 +70,6 @@ def perm_consts(num_perm: int):
     a_i ∈ [1, P-1], b_i ∈ [0, P-1], derived from md5("a<i>")/md5("b<i>")
     so the DuckDB oracles can inline the SAME literals (the formula is
     the contract, not the numbers)."""
-    import hashlib
-
     out = []
     for i in range(num_perm):
         a = int(hashlib.md5(f"a{i}".encode()).hexdigest()[:8], 16) \
@@ -87,6 +77,105 @@ def perm_consts(num_perm: int):
         b = int(hashlib.md5(f"b{i}".encode()).hexdigest()[:8], 16) % _MERSENNE
         out.append((a, b))
     return out
+
+
+def _shingle_digests(texts: list, k: int):
+    """Distinct character k-shingles of each text → the first 64 bits of
+    their md5 digest, the one hash every signature and set derives from.
+    Digests are memoized per batch, so each DISTINCT shingle is hashed
+    once (shared-vocabulary corpora repeat shingles heavily).  A text
+    shorter than k is its own single shingle, as in the column form
+    ``sequence(1, greatest(len-k+1, 0))`` the oracles mirror; null texts
+    are skipped.
+
+    Returns (rows, seg_lens, digests): the positions of the non-null
+    texts, each one's distinct-shingle count, and their concatenated
+    uint64 digests."""
+    import numpy as np
+
+    md5 = hashlib.md5
+    rows: list = []
+    seg_lens: list = []
+    digests: list = []
+    memo: dict = {}
+    for i, text in enumerate(texts):
+        if not isinstance(text, str):
+            continue
+        n = len(text)
+        shset = {text[j : j + k] for j in range(n - k + 1)} if n >= k else {text}
+        rows.append(i)
+        seg_lens.append(len(shset))
+        for s in shset:
+            h = memo.get(s)
+            if h is None:
+                h = memo[s] = int.from_bytes(md5(s.encode("utf-8")).digest()[:8], "big")
+            digests.append(h)
+    return rows, np.array(seg_lens, dtype=np.int64), np.array(digests, dtype=np.uint64)
+
+
+def _shingle_stage(
+    docs: DataFrame, text_col: str, id_col: str, k: int, num_perm: int, with_sets: bool
+) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` over (id, text) that emits the
+    MinHash columns ``mh_0..mh_{num_perm-1}`` when ``num_perm`` > 0 and
+    the sorted hashed-set column ``sh`` when ``with_sets``, each derived
+    from :func:`_shingle_digests` only when emitted.  A null text gives
+    an all-null signature row (it can still band) with a null set; a
+    sets-only stage gives it no row.  Only (id, text) crosses the Arrow
+    boundary and there is no shuffle."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import ArrayType
+
+    consts = perm_consts(num_perm)
+    a_mat = np.array([a for a, _ in consts], dtype=np.int64)[:, None]
+    b_mat = np.array([b for _, b in consts], dtype=np.int64)[:, None]
+    id_field = docs.schema[id_col]
+    fields = [StructField(id_field.name, id_field.dataType, True)]
+    fields += [StructField(f"mh_{i}", LongType(), True) for i in range(num_perm)]
+    if with_sets:
+        fields.append(StructField("sh", ArrayType(LongType(), True), True))
+    M = _MERSENNE
+
+    def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            texts = pdf[text_col].tolist()
+            rows, seg_lens, digests = _shingle_digests(texts, k)
+            null_rows = (
+                [i for i, t in enumerate(texts) if not isinstance(t, str)]
+                if num_perm else []
+            )
+            starts = np.zeros(len(rows), dtype=np.int64)
+            np.cumsum(seg_lens[:-1], out=starts[1:])
+            data = {
+                id_field.name: pdf[id_col].iloc[rows + null_rows].reset_index(drop=True)
+            }
+            if num_perm:
+                # signature base = first 60 bits mod P; permutation i is
+                # the per-doc minimum of (a_i·h + b_i) mod P — all 64-bit
+                # integer arithmetic (a, h < 2^31), so no rounding
+                h = ((digests >> np.uint64(4)) % np.uint64(M)).astype(np.int64)
+                if rows:
+                    mins = np.minimum.reduceat((a_mat * h + b_mat) % M, starts, axis=1)
+                else:
+                    mins = np.empty((num_perm, 0), dtype=np.int64)
+                pad = [None] * len(null_rows)
+                for i in range(num_perm):
+                    data[f"mh_{i}"] = pd.array(list(mins[i]) + pad, dtype="Int64")
+            if with_sets:
+                # set hash = the whole 64-bit digest, sign-wrapped
+                signed = digests.view(np.int64)
+                sets = [np.sort(signed[s : s + n])
+                        for s, n in zip(starts.tolist(), seg_lens.tolist())]
+                # dtype=object even when empty: an all-null-text batch
+                # otherwise defaults the column to float64, which Arrow
+                # cannot convert to list<int64>
+                data["sh"] = pd.Series(sets + [None] * len(null_rows), dtype=object)
+            yield pd.DataFrame(data)
+
+    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
+        batches_fn, StructType(fields)
+    )
 
 
 def minhash_signatures(
@@ -99,93 +188,11 @@ def minhash_signatures(
     """Per-doc MinHash signature, textbook affine-permutation form:
     each shingle hashes ONCE (md5 → 60-bit int → mod P, P = 2^31-1),
     then permutation i is min over shingles of (a_i·h + b_i) mod P.
-    Columns: id, mh_0..mh_{num_perm-1} (BIGINT).
-
-    Round 7: the per-shingle chain (md5 → hex substring → base-16 parse
-    → mod, then num_perm affine transforms + array_min) used to run as
-    interpreted higher-order column functions — ~11 lambda evaluations
-    per character of input, the single most expensive expression tree in
-    the bench (16.6 s of the 19.9 s dedup_minhash_pairs at sf1).  It is
-    now ONE Arrow-batched ``mapInPandas`` stage: shingle→hash values are
-    memoized per batch (shared-vocabulary corpora repeat shingles
-    heavily) and the affine minima are a vectorized numpy
-    (num_perm × n_shingles) matrix + ``minimum.reduceat`` per document.
-    Everything is 64-bit INTEGER arithmetic, so the values are
-    bit-identical to the old column form (pinned by
+    Columns: id, mh_0..mh_{num_perm-1} (BIGINT); a null text gives an
+    all-null row.  Values are pinned by
     tests/test_pipelines.py::test_minhash_signatures_exact_values and
-    the DuckDB oracle, which still computes the md5 formula itself).
-    The stage stays embarrassingly parallel — only (id, text) crosses
-    the Arrow boundary, no shuffle."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    consts = perm_consts(num_perm)
-    a_mat = np.array([a for a, _ in consts], dtype=np.int64)[:, None]
-    b_mat = np.array([b for _, b in consts], dtype=np.int64)[:, None]
-    id_field = docs.schema[id_col]
-    schema = StructType(
-        [StructField(id_field.name, id_field.dataType, True)]
-        + [StructField(f"mh_{i}", LongType(), True) for i in range(num_perm)]
-    )
-    md5 = hashlib.md5
-    M = _MERSENNE
-
-    def sig_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            null_ids: list = []
-            hashes: list = []
-            seg_lens: list = []
-            memo: dict = {}  # shingle → hashed value, batch-scoped
-            for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                if not isinstance(text, str):
-                    # null text → all-null signature row (JVM-form parity)
-                    null_ids.append(did)
-                    continue
-                n = len(text)
-                if n >= k:
-                    shset = {text[i : i + k] for i in range(n - k + 1)}
-                else:
-                    # mirrors the former column form exactly: sequence(1,
-                    # greatest(len-4,0)) over a too-short string yields the
-                    # whole text as the single (distinct) shingle
-                    shset = {text}
-                ids.append(did)
-                seg_lens.append(len(shset))
-                for s in shset:
-                    h = memo.get(s)
-                    if h is None:
-                        # == conv(substr(md5(s),1,15),16,10) % P: the first
-                        # 15 hex digits are the first 60 bits of the digest
-                        h = (
-                            int.from_bytes(md5(s.encode("utf-8")).digest()[:8],
-                                           "big")
-                            >> 4
-                        ) % M
-                        memo[s] = h
-                    hashes.append(h)
-            data: dict = {}
-            if ids:
-                h_arr = np.array(hashes, dtype=np.int64)
-                perms = (a_mat * h_arr + b_mat) % M  # (num_perm, n_shingles)
-                starts = np.zeros(len(ids), dtype=np.int64)
-                np.cumsum(seg_lens[:-1], out=starts[1:])
-                mins = np.minimum.reduceat(perms, starts, axis=1)
-            else:
-                mins = np.empty((num_perm, 0), dtype=np.int64)
-            data[id_field.name] = pd.Series(ids + null_ids, dtype=pdf[id_col].dtype)
-            nnull = len(null_ids)
-            for i in range(num_perm):
-                data[f"mh_{i}"] = pd.array(
-                    list(mins[i]) + [None] * nnull, dtype="Int64"
-                )
-            yield pd.DataFrame(data)
-
-    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        sig_batches, schema
-    )
+    by the DuckDB oracle, which computes the md5 formula itself."""
+    return _shingle_stage(docs, text_col, id_col, k, num_perm, with_sets=False)
 
 
 def hashed_shingle_sets(
@@ -195,74 +202,16 @@ def hashed_shingle_sets(
     k: int = 5,
 ) -> DataFrame:
     """(id, sorted distinct 64-bit shingle-hash array) — the exact-set
-    side of Jaccard verification, as one Arrow-batched stage with the
-    same batch-scoped shingle→hash memoization as
-    :func:`minhash_signatures` (the former in-plan ``transform(…,
-    xxhash64)`` was ~39M interpreted lambda evaluations at sf1).
+    side of Jaccard verification.
 
     The hash is the first 8 bytes of md5 (sign-wrapped into int64).
     Set Jaccard is invariant under ANY injective hash, so the function
     used here is an internal detail — the DuckDB oracle keeps computing
     on raw shingle strings and agrees as long as no 64-bit collision
-    lands inside one pair's union, the same bound the previous
-    xxhash64 encoding relied on.  Rows with a null text yield no row
-    (they cannot be LSH candidates — their signature is all-null)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType
-
-    id_field = docs.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_field.name, id_field.dataType, True),
-            StructField("sh", ArrayType(LongType(), True), True),
-        ]
-    )
-    md5 = hashlib.md5
-
-    def set_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            sets: list = []
-            memo: dict = {}
-            for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                if not isinstance(text, str):
-                    continue
-                n = len(text)
-                if n >= k:
-                    shset = {text[i : i + k] for i in range(n - k + 1)}
-                else:
-                    shset = {text}
-                hs = []
-                for s in shset:
-                    h = memo.get(s)
-                    if h is None:
-                        h = int.from_bytes(
-                            md5(s.encode("utf-8")).digest()[:8], "big"
-                        )
-                        if h >= 1 << 63:
-                            h -= 1 << 64
-                        memo[s] = h
-                    hs.append(h)
-                ids.append(did)
-                arr = np.array(hs, dtype=np.int64)
-                arr.sort()
-                sets.append(arr)
-            yield pd.DataFrame(
-                {
-                    id_field.name: pd.Series(ids, dtype=pdf[id_col].dtype),
-                    # dtype=object even when empty: an all-null-text batch
-                    # otherwise defaults the column to float64, which
-                    # Arrow cannot convert to list<int64>
-                    "sh": pd.Series(sets, dtype=object),
-                }
-            )
-
-    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        set_batches, schema
-    )
+    lands inside one pair's union (that needs ~2^32 shingles per doc).
+    Rows with a null text yield no row (they cannot be LSH candidates —
+    their signature is all-null)."""
+    return _shingle_stage(docs, text_col, id_col, k, 0, with_sets=True)
 
 
 def _band_structs(sig_cols, bands: int, rows_per_band: int) -> F.Column:
@@ -370,97 +319,12 @@ def minhash_sigs_and_sets(
     k: int = 5,
     num_perm: int = 8,
 ) -> DataFrame:
-    """(id, mh_0..mh_{num_perm-1}, sh) in ONE Arrow stage — round 7.
-
-    The dedup_jaccard pipeline ran :func:`minhash_signatures` and
-    :func:`hashed_shingle_sets` as two separate passes over the same
-    text; both derive from the same per-shingle md5 digest (signature
-    base = first 60 bits mod P, set hash = first 64 bits sign-wrapped),
-    so one digest per DISTINCT shingle now feeds both.  Values are
-    bit-identical to the two split stages (pinned by
-    tests/test_pipelines.py::test_sigs_and_sets_matches_split_stages).
-    Null-text rows keep the all-null signature row (they can still
-    band) with a null ``sh`` (they have no set — consumers drop them
-    exactly like the split path's missing row)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType
-
-    consts = perm_consts(num_perm)
-    a_mat = np.array([a for a, _ in consts], dtype=np.int64)[:, None]
-    b_mat = np.array([b for _, b in consts], dtype=np.int64)[:, None]
-    id_field = docs.schema[id_col]
-    schema = StructType(
-        [StructField(id_field.name, id_field.dataType, True)]
-        + [StructField(f"mh_{i}", LongType(), True) for i in range(num_perm)]
-        + [StructField("sh", ArrayType(LongType(), True), True)]
-    )
-    md5 = hashlib.md5
-    M = _MERSENNE
-    WRAP = 1 << 64
-    SIGN = 1 << 63
-
-    def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            null_ids: list = []
-            hashes: list = []
-            seg_lens: list = []
-            sets: list = []
-            memo: dict = {}  # shingle → (sig_hash, set_hash)
-            for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                if not isinstance(text, str):
-                    null_ids.append(did)
-                    continue
-                n = len(text)
-                if n >= k:
-                    shset = {text[i : i + k] for i in range(n - k + 1)}
-                else:
-                    shset = {text}
-                ids.append(did)
-                seg_lens.append(len(shset))
-                hs = []
-                for s in shset:
-                    pair = memo.get(s)
-                    if pair is None:
-                        h64 = int.from_bytes(
-                            md5(s.encode("utf-8")).digest()[:8], "big"
-                        )
-                        pair = (
-                            (h64 >> 4) % M,
-                            h64 - WRAP if h64 >= SIGN else h64,
-                        )
-                        memo[s] = pair
-                    hashes.append(pair[0])
-                    hs.append(pair[1])
-                arr = np.array(hs, dtype=np.int64)
-                arr.sort()
-                sets.append(arr)
-            if ids:
-                h_arr = np.array(hashes, dtype=np.int64)
-                perms = (a_mat * h_arr + b_mat) % M
-                starts = np.zeros(len(ids), dtype=np.int64)
-                np.cumsum(seg_lens[:-1], out=starts[1:])
-                mins = np.minimum.reduceat(perms, starts, axis=1)
-            else:
-                mins = np.empty((num_perm, 0), dtype=np.int64)
-            nnull = len(null_ids)
-            data: dict = {
-                id_field.name: pd.Series(ids + null_ids,
-                                         dtype=pdf[id_col].dtype)
-            }
-            for i in range(num_perm):
-                data[f"mh_{i}"] = pd.array(
-                    list(mins[i]) + [None] * nnull, dtype="Int64"
-                )
-            data["sh"] = pd.Series(sets + [None] * nnull, dtype=object)
-            yield pd.DataFrame(data)
-
-    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        batches_fn, schema
-    )
+    """(id, mh_0..mh_{num_perm-1}, sh) in ONE Arrow stage: the columns of
+    :func:`minhash_signatures` and :func:`hashed_shingle_sets` from one
+    md5 digest per distinct shingle.  Null-text rows keep the all-null
+    signature row (they can still band) with a null ``sh`` (they have
+    no set — consumers drop them)."""
+    return _shingle_stage(docs, text_col, id_col, k, num_perm, with_sets=True)
 
 
 def dedup_jaccard_pipeline(
@@ -473,32 +337,23 @@ def dedup_jaccard_pipeline(
     rows_per_band: int = 4,
     max_bucket_size: int = 1000,
     threshold: float = 0.0,
-    py_broadcast_bytes: int = 256 * 1024 * 1024,
     log_fn=None,
 ) -> DataFrame:
-    """signatures → LSH banding → exact Jaccard verify, end to end, with
-    the signature and shingle-set computation FUSED into one text pass
-    when the set payload fits the python-broadcast gate (round 7; see
-    :func:`minhash_sigs_and_sets`).  Identical rows to the split
-    ``minhash_signatures`` → ``minhash_candidates`` → ``jaccard_pairs``
-    chain (pinned by test_dedup_jaccard_pipeline_matches_split); above
-    the gate it runs exactly that chain."""
-    ub = docs.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.greatest(F.length(text_col) - F.lit(k - 1), F.lit(1))),
-            F.lit(0),
-        ).alias("pos"),
-    ).collect()[0]
-    est_ub = ub["pos"] * 8 + ub["n"] * 32
-    if est_ub > py_broadcast_bytes:
+    """signatures → LSH banding → exact Jaccard verify, end to end.
+    Returns (id_a, id_b, jaccard), the same rows as
+    ``minhash_signatures`` → ``minhash_candidates`` → ``jaccard_pairs``.
+
+    Below the size gate (:func:`_sets_fit_driver`) signatures and
+    shingle sets come from one text pass (:func:`minhash_sigs_and_sets`)
+    and the verify runs on the driver-shipped sets; above it the
+    signatures feed the JVM join."""
+    if not _sets_fit_driver(docs, text_col, k):
         sigs = minhash_signatures(docs, text_col, id_col, k, num_perm)
         cands = minhash_candidates(
             sigs, id_col, bands, rows_per_band, max_bucket_size, log_fn
         )
-        return jaccard_pairs(
-            docs, cands, text_col, id_col, k, threshold,
-            py_broadcast_bytes=py_broadcast_bytes,
+        return _jaccard_scores(
+            _jaccard_jvm(docs, cands, text_col, id_col, k), threshold
         )
     combined = minhash_sigs_and_sets(
         docs, text_col, id_col, k, num_perm
@@ -507,345 +362,19 @@ def dedup_jaccard_pipeline(
         combined.drop("sh"), id_col, bands, rows_per_band,
         max_bucket_size, log_fn,
     )
-    sets_tbl = (
-        combined.filter(F.col("sh").isNotNull())
-        .select(F.col(id_col).alias("id"), "sh")
-        .toArrow()
-    )
-    # the candidate table is an eager localCheckpoint — counting it is a
-    # cheap cached-scan job, and the count drives the verify kernel's
-    # bitset-vs-loop decision
-    counted = _jaccard_verify_py(cands, sets_tbl, id_col,
-                                 n_pairs=cands.count())
-    out = counted.select(
-        "id_a",
-        "id_b",
-        F.round(F.col("__i") / (F.col("__s") - F.col("__i")), 6).alias(
-            "jaccard"
-        ),
-    )
-    return out.filter(F.col("jaccard") >= threshold) if threshold > 0 else out
+    sets = combined.filter(F.col("sh").isNotNull()).select(id_col, "sh")
+    return _jaccard_scores(_jaccard_verify_py(cands, sets, id_col), threshold)
 
 
 # ---------------------------------------------------------------------------
 # n-gram Jaccard verification
 # ---------------------------------------------------------------------------
 
-def _jaccard_verify_py(
-    candidates: DataFrame,
-    sets_pdf,
-    id_col: str,
-    n_pairs: Optional[int] = None,
-) -> DataFrame:
-    """Pairs-only intersection stage (round 7): the hashed shingle sets
-    are shipped to the Python workers ONCE as a compact Spark broadcast
-    (one concatenated int64 value array + offsets + id→slot dict), and
-    the candidate pairs — 16 bytes each, the §8.4 lightweight proxy —
-    stream through a single ``mapInPandas`` that counts each pair's
-    sorted-array intersection with ``np.searchsorted``.
-
-    Why: the JVM form attaches both 8-byte-hashed shingle arrays to
-    every pair (broadcast hash join) and evaluates ``array_intersect``
-    per pair — measured ~74 µs of boxed-hash-set build + result-array
-    allocation per pair per core at sf1 (1.3M pairs → ~3 s and heavy GC
-    churn; join-only noop with the intersect removed was 0.55 s).  The
-    vectorized searchsorted count is ~8 µs/pair with zero JVM
-    allocation.  Only the INTEGER intersection/size counts come back —
-    the jaccard division and round(…, 6) stay in the JVM, so the output
-    values are bit-identical to the JVM form (pinned by
-    tests/test_pipelines.py::test_jaccard_py_path_matches_jvm_path).
-
-    Pairs referencing a doc id absent from the sets table (null-text
-    docs — their signature is all-null but they can still share the
-    all-null band bucket) are dropped, mirroring the inner joins of the
-    JVM form."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    spark = candidates.sparkSession
-    sc = spark.sparkContext
-
-    # sets_pdf is a pyarrow Table (id, sh: list<int64>) — unpack the
-    # list column via its contiguous values buffer + offsets (zero
-    # per-row object allocation; a pandas round-trip of 50k ndarray
-    # cells measured ~1.4 s slower at sf1), then re-pack sorted by id
-    # so workers resolve id → slot with one vectorized searchsorted
-    # instead of a 43k-entry dict
-    ids_np = sets_pdf["id"].to_numpy()
-    chunks = sets_pdf["sh"].combine_chunks()
-    raw_vals = chunks.flatten().to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False
-    )
-    raw_offs = chunks.offsets.to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False
-    )
-    order = np.argsort(ids_np, kind="stable")
-    ids_sorted = np.ascontiguousarray(ids_np[order]).astype(
-        np.int64, copy=False
-    )
-    lens = raw_offs[1:] - raw_offs[:-1]
-    sel_lens = lens[order]
-    offs = np.zeros(len(order) + 1, dtype=np.int64)
-    np.cumsum(sel_lens, out=offs[1:])
-    total = int(offs[-1])
-    # vectorized multi-range gather (the former per-set python loop was
-    # ~0.3 s at 50k sets): element j of the output block for set r is
-    # raw_offs[order[r]] + (j - offs[r])
-    if total:
-        rep = np.repeat(np.arange(len(order), dtype=np.int64), sel_lens)
-        gather = (
-            raw_offs[order][rep] + np.arange(total, dtype=np.int64)
-            - offs[rep]
-        )
-        vals = raw_vals[gather]
-    else:
-        rep = np.empty(0, dtype=np.int64)
-        vals = raw_vals[:0]
-
-    # --- adaptive bitset fast path (round 7) ---
-    # When the corpus' global distinct-shingle-hash count R is tiny
-    # (shared-vocab / boilerplate corpora — exactly the ones whose LSH
-    # buckets explode into millions of candidate pairs), each set is
-    # representable as an R-bit bitset and |A∩B| becomes one vectorized
-    # AND + popcount over the whole batch (~0.8 µs/pair measured vs
-    # ~16 µs/pair for the per-pair sorted-merge loop).  The loop runs in
-    # parallel across the workers but the bitset build is serial driver
-    # work, so the switch needs the candidate count: only when the
-    # parallel per-pair saving exceeds the build cost (pairs >> slots,
-    # the quadratic-bucket blow-up) is the bitset worth it — at the
-    # bench corpus (1.3M pairs / 10M slots / 32 cores) it is NOT, and
-    # callers that cannot supply a cheap count (n_pairs=None) keep the
-    # loop.  Probing a 256k-slot sample bounds the dictionary-encode
-    # cost for diverse corpora, where R is huge and the sets path stays
-    # in force regardless.  Any injective hash→rank mapping preserves
-    # intersection counts, so the emitted integers are identical to the
-    # sorted-merge ones.
-    par = max(sc.defaultParallelism, 1)
-    bitset_pays = (
-        n_pairs is not None
-        and n_pairs * _BITSET_LOOP_US_PER_PAIR / par
-        > total * _BITSET_BUILD_US_PER_SLOT
-    )
-    bitset = None
-    if total and bitset_pays:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        sample = vals[:_BITSET_SAMPLE_SLOTS]
-        if len(pc.unique(pa.array(sample))) <= _BITSET_SAMPLE_DISTINCT:
-            enc = pc.dictionary_encode(pa.array(vals))
-            R = len(enc.dictionary)
-            row_bytes = (R + 7) // 8
-            if len(ids_sorted) * row_bytes <= _BITSET_MAX_BYTES:
-                ranks = enc.indices.to_numpy().astype(np.int64, copy=False)
-                # chunked bool-scatter + packbits keeps the temporary
-                # n_rows × R bool block bounded
-                mat = np.empty((len(ids_sorted), row_bytes), dtype=np.uint8)
-                chunk = max(1, (64 << 20) // max(R, 1))
-                for lo in range(0, len(ids_sorted), chunk):
-                    hi = min(lo + chunk, len(ids_sorted))
-                    s, e = int(offs[lo]), int(offs[hi])
-                    blk = np.zeros((hi - lo, R), dtype=bool)
-                    blk[rep[s:e] - lo, ranks[s:e]] = True
-                    mat[lo:hi] = np.packbits(blk, axis=1)
-                if mat.shape[1] % 2:
-                    mat = np.ascontiguousarray(
-                        np.pad(mat, ((0, 0), (0, 1)))
-                    )
-                bitset = (np.ascontiguousarray(sel_lens), mat)
-
-    if sc.master.startswith("local") and ids_sorted.dtype.kind in "iu":
-        # local mode: every Python worker shares this machine — write
-        # the packed arrays ONCE into the context's shutdown-cleaned
-        # temp dir and mmap them per worker (zero-copy via page cache).
-        # Shipping the same 78 MB through sc.broadcast cost ~2.5 s of
-        # per-worker unpickle at sf1 (32 workers × full copy), 4× the
-        # actual intersection compute.  (Integer-id corpora only — an
-        # object-dtype id array cannot mmap; those fall through to the
-        # broadcast.)
-        import os
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="jaccard_sets_", dir=sc._temp_dir)
-        np.save(os.path.join(d, "ids.npy"), ids_sorted)
-        if bitset is not None:
-            np.save(os.path.join(d, "lens.npy"), bitset[0])
-            np.save(os.path.join(d, "bits.npy"), bitset[1])
-        else:
-            np.save(os.path.join(d, "offs.npy"), offs)
-            np.save(os.path.join(d, "vals.npy"), vals)
-        src = ("file", d)
-    elif bitset is not None:
-        src = ("bcast", sc.broadcast(
-            ("bits", ids_sorted, bitset[0], bitset[1])
-        ))
-    else:
-        src = ("bcast", sc.broadcast(("sets", ids_sorted, offs, vals)))
-
-    id_a_field = candidates.schema["id_a"]
-    id_b_field = candidates.schema["id_b"]
-    schema = StructType(
-        [
-            StructField("id_a", id_a_field.dataType, True),
-            StructField("id_b", id_b_field.dataType, True),
-            StructField("__i", LongType(), True),
-            StructField("__s", LongType(), True),
-        ]
-    )
-
-    def _load():
-        kind, ref = src
-        if kind == "bcast":
-            return ref.value
-        import os as _os
-
-        cached = _JACCARD_SETS_CACHE.get(ref)
-        if cached is None:
-            # plain load, not mmap: the file is hot in the page cache, so
-            # this is one ~40 ms memcpy per worker, and every subsequent
-            # kernel pass runs on ordinary RAM arrays (numpy memmap
-            # views measurably slow the hot loop)
-            if _os.path.exists(_os.path.join(ref, "bits.npy")):
-                cached = ("bits",) + tuple(
-                    np.load(_os.path.join(ref, f"{name}.npy"))
-                    for name in ("ids", "lens", "bits")
-                )
-            else:
-                cached = ("sets",) + tuple(
-                    np.load(_os.path.join(ref, f"{name}.npy"))
-                    for name in ("ids", "offs", "vals")
-                )
-            _JACCARD_SETS_CACHE.clear()  # keep at most one packed corpus
-            _JACCARD_SETS_CACHE[ref] = cached
-        return cached
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mode, ids_s, x2, x3 = _load()
-        n_sets = len(ids_s)
-        pop16 = None
-        if mode == "bits":
-            # 16-bit popcount LUT, ~5 ms once per task (kept closure-local
-            # so the task needs no jena_spark import on the workers)
-            pop16 = (
-                np.unpackbits(np.arange(65536, dtype="<u2").view(np.uint8))
-                .reshape(65536, 16)
-                .sum(axis=1)
-                .astype(np.uint16)
-            )
-        for pdf in batches:
-            ia = pdf["id_a"].to_numpy()
-            ib = pdf["id_b"].to_numpy()
-            n = len(ia)
-            inter = np.zeros(n, dtype=np.int64)
-            ssum = np.zeros(n, dtype=np.int64)
-            # vectorized id → slot: sets are packed sorted by id
-            pa = np.searchsorted(ids_s, ia)
-            pb = np.searchsorted(ids_s, ib)
-            pa_ok = (pa < n_sets) & (ids_s[np.minimum(pa, n_sets - 1)] == ia) \
-                if n_sets else np.zeros(n, dtype=bool)
-            pb_ok = (pb < n_sets) & (ids_s[np.minimum(pb, n_sets - 1)] == ib) \
-                if n_sets else np.zeros(n, dtype=bool)
-            keep = pa_ok & pb_ok
-            if mode == "bits":
-                # |A∩B| = popcount(bitset_a AND bitset_b), one vectorized
-                # pass over the whole batch — no per-pair python
-                set_lens, mat = x2, x3
-                kidx = np.nonzero(keep)[0]
-                ssum[kidx] = set_lens[pa[kidx]] + set_lens[pb[kidx]]
-                anded = mat[pa[kidx]] & mat[pb[kidx]]
-                inter[kidx] = pop16[anded.view(np.uint16)].sum(
-                    axis=1, dtype=np.int64
-                )
-            else:
-                o, v = x2, x3
-                for r in np.nonzero(keep)[0].tolist():
-                    sa = v[o[pa[r]] : o[pa[r] + 1]]
-                    sb = v[o[pb[r]] : o[pb[r] + 1]]
-                    ssum[r] = len(sa) + len(sb)
-                    if len(sb) < len(sa):
-                        sa, sb = sb, sa
-                    p = np.searchsorted(sb, sa)
-                    ok = p < len(sb)
-                    inter[r] = np.count_nonzero(sb[p[ok]] == sa[ok])
-            yield pd.DataFrame(
-                {
-                    "id_a": pd.Series(ia, dtype=pdf["id_a"].dtype)[keep],
-                    "id_b": pd.Series(ib, dtype=pdf["id_b"].dtype)[keep],
-                    "__i": inter[keep],
-                    "__s": ssum[keep],
-                }
-            )
-
-    return (
-        candidates.repartition(sc.defaultParallelism)
-        .mapInPandas(verify, schema)
-    )
-
-
-def jaccard_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    threshold: float = 0.0,
-    broadcast_bytes: int = 512 * 1024 * 1024,
-    py_broadcast_bytes: int = 256 * 1024 * 1024,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs only.
-
-    Joins each candidate pair to the two docs' (distinct) shingle arrays
-    and computes |A∩B| with ``array_intersect`` — two joins total and no
-    exploded shingle shuffle (an explode-join was ~10× slower at 5k docs:
-    the candidate set grows quadratically inside near-dup clusters).
-
-    Round 6: each shingle is hashed to a 64-bit long (``xxhash64``, pure
-    JVM) INSIDE the array before the join — set Jaccard is invariant
-    under an injective hash, so the value (and the DuckDB oracle, which
-    keeps computing on raw shingle strings) is unchanged while the join
-    ships 8 bytes per shingle instead of a k-char string (~5× less
-    payload on k=5; this was the single most expensive bench query).
-    A 64-bit collision inside one pair's union would need ~2^32 shingles
-    per doc — not a realistic document.
-
-    Round 7: only docs that actually appear in a candidate pair get
-    their shingle sets computed — a semi-join on the (distinct) pair
-    ids runs BEFORE the shingle transform, so the heavyweight per-doc
-    array work is proportional to the candidate set, not the corpus
-    (guide §8.4: decide with small rows, touch big rows once).  The
-    surviving (id, hashed-shingle-array) table is pinned with an eager
-    localCheckpoint so (a) it is computed once, not once per join side
-    and once per pushed size()-filter — the old plan evaluated the
-    transform 4× — and (b) the planner cannot blow it up (at sf1 it
-    chose to broadcast the full 50k-doc array table TWICE, ~12 s of the
-    37 s query).
-
-    Join strategy (guide §3.1, decided from MEASURED size, not
-    estimates): attaching both arrays to each pair necessarily
-    materializes pairs × array once — unless the array table is the
-    BUILD side of a broadcast join, in which case the pairs never move
-    with array payloads at all.  The pinned table's true size is known
-    (one count over the checkpoint), so if it fits under
-    ``broadcast_bytes`` it is broadcast — both joins key on the same
-    ``id`` column, so Catalyst reuses ONE exchange for the two probes.
-    Otherwise (100 TB-scale candidate sets) it degrades to the
-    sort-merge join, whose second exchange carries pairs × array — the
-    unavoidable lower bound for a shuffle-based attach.
-    Round 7 (python-broadcast fast path): below ``py_broadcast_bytes``
-    the hashed-set table is collected (Arrow ``toPandas``) and shipped
-    to the Python workers, and the verify runs as a pairs-only
-    ``mapInPandas`` (:func:`_jaccard_verify_py`) — no per-pair JVM set
-    allocation, 16 bytes/row through the exchange.  The size gate uses
-    an UPPER BOUND computable without building the sets (distinct
-    shingles ≤ shingle positions ≤ text length), so the decision costs
-    one narrow length-sum over the candidate docs.  Above the gate the
-    JVM join path below is unchanged (the 100 TB degrade story).
-
-    Returns (id_a, id_b, jaccard)."""
-    # size gate from ALL docs (a pure narrow length-sum, no join): a
-    # superset upper bound of the full hashed-set payload, so the python
-    # path is entered only conservatively
+def _sets_fit_driver(docs: DataFrame, text_col: str, k: int) -> bool:
+    """The one size gate of both Jaccard entry points: does an UPPER
+    BOUND of the hashed-set payload (distinct shingles ≤ shingle
+    positions ≤ text length) fit ``_DRIVER_SETS_MAX_BYTES``?  One narrow
+    aggregate over text lengths; no set is built to decide."""
     ub = docs.agg(
         F.count("*").alias("n"),
         F.coalesce(
@@ -853,28 +382,109 @@ def jaccard_pairs(
             F.lit(0),
         ).alias("pos"),
     ).collect()[0]
-    est_ub = ub["pos"] * 8 + ub["n"] * 32
-    if est_ub <= py_broadcast_bytes:
-        # below the gate, collecting every doc's set is already priced —
-        # skip the candidate-id distinct + semi-join outright (sets of
-        # docs that appear in no pair are never looked up, so the
-        # result is unchanged)
-        sets_tbl = (
-            hashed_shingle_sets(docs, text_col, id_col, k)
-            .withColumnRenamed(id_col, "id")
-            .toArrow()
-        )
-        counted = _jaccard_verify_py(candidates, sets_tbl, id_col)
-        out = counted.select(
-            "id_a",
-            "id_b",
-            F.round(F.col("__i") / (F.col("__s") - F.col("__i")), 6).alias(
-                "jaccard"
-            ),
-        )
-        return (
-            out.filter(F.col("jaccard") >= threshold) if threshold > 0 else out
-        )
+    return ub["pos"] * 8 + ub["n"] * 32 <= _DRIVER_SETS_MAX_BYTES
+
+
+def _jaccard_scores(counted: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, __i = |A∩B|, __s = |A|+|B|) → (id_a, id_b, jaccard):
+    the division and round(…, 6) are JVM expressions shared by both
+    verify paths, so their values agree bit for bit."""
+    out = counted.select(
+        "id_a",
+        "id_b",
+        F.round(F.col("__i") / (F.col("__s") - F.col("__i")), 6).alias("jaccard"),
+    )
+    return out.filter(F.col("jaccard") >= threshold) if threshold > 0 else out
+
+
+def _jaccard_verify_py(
+    candidates: DataFrame, sets: DataFrame, id_col: str
+) -> DataFrame:
+    """Pairs-only intersection counts below the size gate: the (id_col,
+    sh) set table is collected, packed id-sorted as one int64 value array
+    + offsets, and shipped to the Python workers once as a Spark
+    broadcast.  The candidate pairs — 16 bytes each — stream through one
+    ``mapInPandas`` that resolves id → slot with ``np.searchsorted`` and
+    counts each pair's sorted-array intersection.  The JVM form instead
+    attaches both shingle arrays to every pair and allocates a boxed
+    hash set per ``array_intersect``: ~74 µs per pair per core against
+    ~8 µs here, measured at sf1 on a 32-core host.  Returns (id_a, id_b, __i, __s) for :func:`_jaccard_scores`.
+
+    Ids keep their own type (integer or string).  Pairs referencing an
+    id absent from the set table (null-text docs — their all-null
+    signature can still share a band bucket) are dropped, mirroring the
+    inner joins of the JVM form."""
+    import numpy as np
+    import pandas as pd
+
+    tbl = sets.toArrow().sort_by(id_col)
+    sh = tbl["sh"].combine_chunks()
+    offsets = sh.offsets.to_numpy().astype(np.int64)
+    packed = (
+        tbl[id_col].to_numpy(),
+        offsets - offsets[0],
+        sh.flatten().to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+    )
+    sc = candidates.sparkSession.sparkContext
+    bc = sc.broadcast(packed)
+    schema = StructType(
+        [
+            StructField("id_a", candidates.schema["id_a"].dataType, True),
+            StructField("id_b", candidates.schema["id_b"].dataType, True),
+            StructField("__i", LongType(), True),
+            StructField("__s", LongType(), True),
+        ]
+    )
+
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids_s, offs, vals = bc.value
+
+        def slots(ids):
+            pos = np.searchsorted(ids_s, ids)
+            found = pos < len(ids_s)
+            found[found] = ids_s[pos[found]] == ids[found]
+            return pos, found
+
+        for pdf in batches:
+            pa, found_a = slots(pdf["id_a"].to_numpy())
+            pb, found_b = slots(pdf["id_b"].to_numpy())
+            keep = found_a & found_b
+            inter = np.zeros(len(pdf), dtype=np.int64)
+            ssum = np.zeros(len(pdf), dtype=np.int64)
+            for r in np.nonzero(keep)[0].tolist():
+                sa = vals[offs[pa[r]] : offs[pa[r] + 1]]
+                sb = vals[offs[pb[r]] : offs[pb[r] + 1]]
+                ssum[r] = len(sa) + len(sb)
+                if len(sb) < len(sa):
+                    sa, sb = sb, sa
+                p = np.searchsorted(sb, sa)
+                ok = p < len(sb)
+                inter[r] = np.count_nonzero(sb[p[ok]] == sa[ok])
+            yield pdf.loc[keep, ["id_a", "id_b"]].assign(
+                __i=inter[keep], __s=ssum[keep]
+            )
+
+    return candidates.repartition(sc.defaultParallelism).mapInPandas(verify, schema)
+
+
+def _jaccard_jvm(
+    docs: DataFrame, candidates: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """Above the size gate: (id_a, id_b, __i, __s) by joining each
+    candidate pair to the two docs' hashed shingle arrays and counting
+    |A∩B| with ``array_intersect`` — two joins total and no exploded
+    shingle shuffle (an explode-join was ~10× slower at 5k docs: the
+    candidate set grows quadratically inside near-dup clusters).
+
+    Only docs that appear in a candidate pair get their sets computed
+    (a semi-join on the distinct pair ids runs first), and that table is
+    pinned with an eager localCheckpoint so it is computed once, not once
+    per join side.  Its measured size then picks the join: under
+    ``_JVM_BROADCAST_MAX_BYTES`` it is broadcast (both joins key on the
+    same ``id`` column, so Catalyst reuses ONE exchange for the two
+    probes and the pairs never move with array payloads); above it the
+    sort-merge join's second exchange carries pairs × array, the lower
+    bound for a shuffle-based attach."""
     ids = (
         candidates.select(F.col("id_a").alias(id_col))
         .unionByName(candidates.select(F.col("id_b").alias(id_col)))
@@ -892,36 +502,50 @@ def jaccard_pairs(
         F.coalesce(F.sum(F.size("sh")), F.lit(0)).alias("total_sh"),
     ).collect()[0]
     # 8 bytes per hashed shingle + ~32 bytes row overhead in the relation
-    est_bytes = stats["total_sh"] * 8 + stats["n"] * 32
-    if est_bytes <= broadcast_bytes:
+    if stats["total_sh"] * 8 + stats["n"] * 32 <= _JVM_BROADCAST_MAX_BYTES:
         sets = F.broadcast(sets)
     a = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     # candidates is an AQE-coalesced checkpoint (bytes-tiny, compute-heavy
     # probe rows) — round-robin it across the cluster before the
-    # per-pair intersections (16 bytes/row, the §8.4 lightweight proxy)
+    # per-pair intersections
     sc = candidates.sparkSession.sparkContext
     joined = (
         candidates.repartition(sc.defaultParallelism)
         .join(a, "id_a")
         .join(b, "id_b")
     )
-    # two-step projection so array_intersect evaluates ONCE per pair —
-    # referencing `i` twice in the same projection re-evaluated it (the
-    # upper select cannot be collapsed into the lower one because the
-    # alias is referenced twice and is non-cheap)
-    mid = joined.select(
+    # __i is projected here, below _jaccard_scores' projection, so
+    # array_intersect evaluates ONCE per pair (referencing it twice in
+    # one projection re-evaluated it)
+    return joined.select(
         "id_a",
         "id_b",
         F.size(F.array_intersect("sh_a", "sh_b")).alias("__i"),
         (F.size("sh_a") + F.size("sh_b")).alias("__s"),
     )
-    out = mid.select(
-        "id_a",
-        "id_b",
-        F.round(F.col("__i") / (F.col("__s") - F.col("__i")), 6).alias("jaccard"),
-    )
-    return out.filter(F.col("jaccard") >= threshold) if threshold > 0 else out
+
+
+def jaccard_pairs(
+    docs: DataFrame,
+    candidates: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 5,
+    threshold: float = 0.0,
+) -> DataFrame:
+    """Exact shingle-set Jaccard for candidate pairs only → (id_a, id_b,
+    jaccard).  Below the size gate (:func:`_sets_fit_driver`) every
+    doc's set is collected and the pairs are verified in Python
+    (:func:`_jaccard_verify_py`); sets of docs in no pair are never
+    looked up, so no candidate-id semi-join is needed.  Above it the JVM
+    join (:func:`_jaccard_jvm`) runs."""
+    if _sets_fit_driver(docs, text_col, k):
+        sets = hashed_shingle_sets(docs, text_col, id_col, k)
+        counted = _jaccard_verify_py(candidates, sets, id_col)
+    else:
+        counted = _jaccard_jvm(docs, candidates, text_col, id_col, k)
+    return _jaccard_scores(counted, threshold)
 
 
 # ---------------------------------------------------------------------------

@@ -1,26 +1,30 @@
 """Similarity search over an embedding column (array<float>).
 
-- :func:`cosine_topk` — brute-force cosine top-k: the correctness
-  baseline.  Dot products via ``F.zip_with`` + ``F.aggregate`` (JVM-side,
-  no Python).  At scale this is one narrow map + TakeOrderedAndProject —
-  no shuffle of the vectors themselves.
-- :func:`ivf_topk` — the scale path: IVF-style bucketing.  Centroids
-  start from a hash-ordered sample (md5 of the id — independent of id
-  assignment order, so a skewed or sorted corpus cannot bias the picks)
-  and are refined by :func:`kmeans_centroids` Lloyd iterations, all in
-  DataFrame ops (assignment = broadcast crossJoin + argmax; new means =
-  posexplode + per-dimension avg).  Every vector is assigned to its
-  nearest centroid once (narrow, cacheable); queries probe only the
-  ``n_probe`` nearest buckets → scan cost drops by n_centroids/n_probe.
-  On a cluster the assignment table is bucketed by centroid id so a
-  probe is partition-pruned.  Means are rounded to 6 decimals so an
-  external oracle (DuckDB) reproduces assignments bit-for-bit despite
-  float summation-order differences.
+- :func:`topk_brute_and_ivf` — cosine top-k to a constant query vector,
+  brute force AND IVF-bucketed, from one Arrow-batched scoring scan
+  (:func:`_scored_arrow`) that yields each vector's cosine to the query
+  and its nearest centroid.  Brute force is the exact baseline; IVF
+  ranks only the vectors whose centroid is among the ``n_probe``
+  centroids nearest the query, so on a cluster the assignment table can
+  be bucketed by centroid id and a probe partition-pruned.
+- :func:`kmeans_centroids` — the IVF centroids: init from a hash-ordered
+  sample (md5 of the id — independent of id assignment order, so a
+  skewed or sorted corpus cannot bias the picks), then Lloyd rounds whose
+  assignment + per-dimension partial sums run in one Arrow stage
+  (:func:`_assign_partial_sums`) before a small JVM aggregate.  Means are
+  rounded to 6 decimals so an external oracle (DuckDB) reproduces
+  assignments bit-for-bit despite float summation-order differences.
+- :func:`embedding_near_dup` — near-duplicate pairs via sign-bit LSH
+  banding and an exact cosine verify.
+
+Every cosine sums left to right in IEEE doubles (the JVM ``aggregate``
+fold, numpy ``cumsum`` and the driver's :func:`_py_norm` alike), so the
+JVM column form, the Arrow stages and the oracles agree bit for bit.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -55,95 +59,46 @@ def _py_norm(vec) -> float:
     return math.sqrt(s)
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
-) -> DataFrame:
-    """Brute-force top-k by cosine to a constant query vector."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col).cast("array<double>")
-    return (
-        embeddings.select(
-            F.col(id_col),
-            F.round(cosine_col(v, q), decimals).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def _nearest_col(cent_rows, vec_col: str) -> F.Column:
-    """Nearest-centroid assignment as ONE narrow column: the centroid
-    table is ≤ n_centroids rows (driver-small by construction), so it is
-    collected and inlined as literal vectors and the argmax runs over a
-    struct array — no crossJoin, no groupBy shuffle of the id set (the
-    round-4 form shuffled every id through a crossJoin + max agg).
-    Ties → lowest centroid_id; each dot product sums left-to-right
-    exactly like the former form, so assignments are bit-identical.
-    (ONE nested-array literal, not per-element F.lit()s — thousands of
-    scalar literal expressions measurably bloat plan compilation.)
-
-    Round 7: the per-centroid CENTROID norm is precomputed driver-side
-    (:func:`_py_norm` — the same left-to-right fold the in-plan
-    ``_norm`` does over the same literal, so every cosine is
-    bit-identical) and inlined as a literal, cutting the interpreted
-    higher-order-function work per (row × centroid) from three dot
-    products to two.  Higher-order functions do not participate in
-    whole-stage codegen, so lambda-evaluation count is the direct cost
-    driver of this expression — it dominated ann_topk/kmeans at sf1."""
-    v = F.col(vec_col).cast("array<double>")
-    cent_mat = F.lit([[float(x) for x in r["cvec"]] for r in cent_rows])
-    # (-centroid_id, |centroid|) pairs, one nested literal
-    meta = F.lit(
-        [
-            [float(-int(r["centroid_id"])), _py_norm(r["cvec"])]
-            for r in cent_rows
-        ]
-    )
-    scored = F.zip_with(
-        cent_mat,
-        meta,
-        lambda cv, m: F.struct(
-            (_dot(v, cv) / (_norm(v) * m.getItem(1))).alias("cos"),
-            m.getItem(0).alias("negc"),
-        ),
-    )
-    return (-F.array_max(scored)["negc"]).cast("long").alias("centroid_id")
-
-
-def _np_scores(vecs, cent_mat, cent_norms, query, query_norm):
-    """Vectorized mirror of the JVM scoring expressions over one numpy
-    batch of equal-length vectors (n × dim float64).
-
-    Bit-identical by construction: every dot product is
-    ``np.cumsum(products, axis=-1)[..., -1]`` — the same strict
-    left-to-right IEEE-double accumulation as the in-plan ``aggregate``
-    fold (elementwise products are identical, additions happen in the
-    same order, so every partial sum rounds identically); centroid and
-    query norms come from :func:`_py_norm` (same fold); each cosine is
-    dot / (norm_v * norm_other) with the multiply-then-divide order of
-    the column form.  Returns (cos_to_query, centroid_slot) — slot =
-    argmax over centroids of cos with ties to the FIRST (callers sort
-    centroid rows by centroid_id, mirroring the (cos, -id) struct-max
-    tie-break), NaN cosines ranking greatest exactly like Spark's
-    double ordering."""
+def _centroid_arrays(cent_rows):
+    """The collected (centroid_id, cvec) rows as numpy arrays sorted by
+    centroid id: (vectors, norms via :func:`_py_norm`, ids).  Sorting
+    makes an argmax tie resolve to the lowest centroid id."""
     import numpy as np
 
-    norm_v = np.sqrt(np.cumsum(vecs * vecs, axis=1)[:, -1])
-    dot_q = np.cumsum(vecs * query, axis=1)[:, -1]
+    rows = sorted(cent_rows, key=lambda r: int(r["centroid_id"]))
+    return (
+        np.array([[float(x) for x in r["cvec"]] for r in rows], dtype=np.float64),
+        np.array([_py_norm(r["cvec"]) for r in rows], dtype=np.float64),
+        np.array([int(r["centroid_id"]) for r in rows], dtype=np.int64),
+    )
+
+
+def _dense_rows(vec_list, dim: int):
+    """Positions of the non-null vectors of length ``dim`` in one batch,
+    those vectors as an (n × dim) float64 matrix, and their norms
+    (left-to-right folds, like every sum here)."""
+    import numpy as np
+
+    ok_idx = [i for i, v in enumerate(vec_list) if v is not None and len(v) == dim]
+    E = np.array([vec_list[i] for i in ok_idx], dtype=np.float64).reshape(-1, dim)
+    return ok_idx, E, np.sqrt(np.cumsum(E * E, axis=1)[:, -1])
+
+
+def _nearest_slot(vecs, norm_v, cent_mat, cent_norms):
+    """Per row of ``vecs`` (with row norms ``norm_v``), the slot of the
+    centroid with the greatest cosine: the first on ties (centroid rows
+    are sorted by id) and a NaN cosine ranking greatest, as Spark orders
+    doubles.  Every dot product is ``np.cumsum(…)[..., -1]`` — the strict
+    left-to-right IEEE fold of the JVM ``aggregate`` — and each cosine is
+    dot / (norm_v * norm_c), the multiply-then-divide order of
+    :func:`cosine_col`, so the result is bit-identical to the column
+    form and the DuckDB mirror."""
+    import numpy as np
+
     with np.errstate(divide="ignore", invalid="ignore"):
-        cos_q = dot_q / (norm_v * query_norm)
-        dots_c = np.cumsum(
-            vecs[:, None, :] * cent_mat[None, :, :], axis=2
-        )[:, :, -1]
+        dots_c = np.cumsum(vecs[:, None, :] * cent_mat[None, :, :], axis=2)[:, :, -1]
         cos_c = dots_c / (norm_v[:, None] * cent_norms[None, :])
-    ranked = np.where(np.isnan(cos_c), np.inf, cos_c)
-    slot = np.argmax(ranked, axis=1)
-    return cos_q, slot
+    return np.argmax(np.where(np.isnan(cos_c), np.inf, cos_c), axis=1)
 
 
 def _scored_arrow(
@@ -153,33 +108,22 @@ def _scored_arrow(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(id, cosine-to-query, centroid_id) as ONE Arrow-batched stage —
-    round 7.  The column form evaluated ~16 centroids × 4 interpreted
-    higher-order folds per row (HOFs do not participate in whole-stage
-    codegen); this computes the same values vectorized (see
-    :func:`_np_scores` for the bit-identity argument).  The final
-    ``round(cosine, decimals)`` stays in the JVM so the rounding is the
-    very same expression as before.
+    """(id, cosine-to-query, centroid_id) as ONE Arrow-batched stage:
+    the cosine folds as in :func:`_nearest_slot`, and the caller applies
+    ``round(cosine, decimals)`` as a JVM expression.
 
-    Row edge cases mirror the column form: a null vector, or one whose
-    length differs from the query's (zip_with would pad with nulls),
-    yields a null cosine and the lowest centroid id (the struct-max
-    over all-null cos fields falls through to the -id tie-break)."""
+    A null vector, or one whose length differs from the query's, yields
+    a null cosine and the lowest centroid id (what the column form's
+    null-padded ``zip_with`` and struct-max tie-break give)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    rows = sorted(cent_rows, key=lambda r: int(r["centroid_id"]))
-    cent_mat = np.array([[float(x) for x in r["cvec"]] for r in rows],
-                        dtype=np.float64)
-    cent_norms = np.array([_py_norm(r["cvec"]) for r in rows],
-                          dtype=np.float64)
-    cent_ids = np.array([int(r["centroid_id"]) for r in rows],
-                        dtype=np.int64)
+    cent_mat, cent_norms, cent_ids = _centroid_arrays(cent_rows)
     query = np.array([float(x) for x in query_vec], dtype=np.float64)
     qnorm = _py_norm(query_vec)
     dim = len(query)
-    null_cid = int(cent_ids.min()) if len(cent_ids) else None
+    null_cid = int(cent_ids.min()) if len(cent_ids) else 0
 
     id_field = embeddings.schema[id_col]
     schema = StructType(
@@ -195,32 +139,23 @@ def _scored_arrow(
             vec_list = pdf[vec_col].tolist()
             n = len(vec_list)
             cos = np.full(n, np.nan)
-            cos_null = np.zeros(n, dtype=bool)
-            cid = np.full(n, null_cid if null_cid is not None else 0,
-                          dtype=np.int64)
-            ok_idx = [
-                i for i, v in enumerate(vec_list)
-                if v is not None and len(v) == dim
-            ]
+            cid = np.full(n, null_cid, dtype=np.int64)
+            ok_idx, E, norm_v = _dense_rows(vec_list, dim)
             if ok_idx:
-                E = np.array([vec_list[i] for i in ok_idx], dtype=np.float64)
-                cq, slot = _np_scores(E, cent_mat, cent_norms, query, qnorm)
-                ok = np.array(ok_idx)
-                cos[ok] = cq
-                cid[ok] = cent_ids[slot]
-            bad = np.ones(n, dtype=bool)
-            bad[ok_idx] = False
-            cos_null |= bad
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos[ok_idx] = np.cumsum(E * query, axis=1)[:, -1] / (norm_v * qnorm)
+                cid[ok_idx] = cent_ids[_nearest_slot(E, norm_v, cent_mat, cent_norms)]
+            cos_null = np.ones(n, dtype=bool)
+            cos_null[ok_idx] = False
             # masked Float64: a plain float column would coerce the
             # null-row marker to NaN, which Spark orders GREATER than
             # every number — the column form yields SQL NULL there.
             # (explicit mask, not pd.array(), so a legitimately-NaN
             # cosine computed from NaN inputs stays NaN, not NA)
-            cos_ser = pd.arrays.FloatingArray(cos, cos_null)
             yield pd.DataFrame(
                 {
                     id_field.name: pdf[id_col],
-                    "cosine": cos_ser,
+                    "cosine": pd.arrays.FloatingArray(cos, cos_null),
                     "centroid_id": cid,
                 }
             )
@@ -236,33 +171,22 @@ def _assign_partial_sums(
     vec_col: str,
 ) -> DataFrame:
     """Per-batch (centroid_id, per-dimension count, per-dimension sum)
-    partial aggregates for one Lloyd round — round 7.  Replaces the
-    interpreted-HOF assignment column + ``dim`` avg() aggregates whose
-    inputs indexed the vector per dimension; the exchange now carries a
-    few hundred 129-column rows instead of per-row assignment output.
-    Assignment is :func:`_np_scores`' argmax (bit-identical to the
-    struct-max column form); the means the caller derives as
-    round(sum/count, 6) equal the former round(avg, 6) modulo float
-    summation order, which the 1e-6 rounding absorbs — the exact
-    tolerance the DuckDB oracle mirror already relies on.
+    partial aggregates for one Lloyd round; the exchange carries a few
+    hundred such rows instead of per-vector assignments.  Assignment is
+    :func:`_nearest_slot`; the means the caller derives as
+    round(sum/count, 6) depend on float summation order only below the
+    1e-6 rounding — the tolerance the DuckDB oracle mirror relies on.
 
-    Column-form edge parity: a vector whose length differs from the
-    centroid dimension is assigned the lowest centroid id (all-null
-    cosines fall through to the -id tie-break) and contributes the
-    elements it does have (getItem past the end is null, which avg
-    skips); a null vector contributes nothing but still lands in the
-    lowest-id group."""
+    A vector whose length differs from the centroid dimension is
+    assigned the lowest centroid id and contributes the elements it
+    does have (as ``avg`` over ``getItem`` past the end skips nulls); a
+    null vector contributes nothing but still lands in the lowest-id
+    group."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    rows = sorted(cent_rows, key=lambda r: int(r["centroid_id"]))
-    cent_mat = np.array([[float(x) for x in r["cvec"]] for r in rows],
-                        dtype=np.float64)
-    cent_norms = np.array([_py_norm(r["cvec"]) for r in rows],
-                          dtype=np.float64)
-    cent_ids = np.array([int(r["centroid_id"]) for r in rows],
-                        dtype=np.int64)
+    cent_mat, cent_norms, cent_ids = _centroid_arrays(cent_rows)
     dim = cent_mat.shape[1]
     null_cid = int(cent_ids.min())
 
@@ -275,23 +199,11 @@ def _assign_partial_sums(
     def partial(batches):
         for pdf in batches:
             vec_list = pdf[vec_col].tolist()
-            ok_idx = [
-                i for i, v in enumerate(vec_list)
-                if v is not None and len(v) == dim
-            ]
+            ok_idx, E, norm_v = _dense_rows(vec_list, dim)
             sums: dict = {}
             cnts: dict = {}
             if ok_idx:
-                E = np.array([vec_list[i] for i in ok_idx], dtype=np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    norm_v = np.sqrt(np.cumsum(E * E, axis=1)[:, -1])
-                    dots_c = np.cumsum(
-                        E[:, None, :] * cent_mat[None, :, :], axis=2
-                    )[:, :, -1]
-                    cos_c = dots_c / (norm_v[:, None] * cent_norms[None, :])
-                slot = np.argmax(
-                    np.where(np.isnan(cos_c), np.inf, cos_c), axis=1
-                )
+                slot = _nearest_slot(E, norm_v, cent_mat, cent_norms)
                 for s in np.unique(slot):
                     grp = E[slot == s]
                     cid = int(cent_ids[s])
@@ -344,16 +256,9 @@ def kmeans_centroids(
         (F.row_number().over(w) - 1).cast("long").alias("centroid_id"), "cvec"
     )
     for _ in range(iters):
-        # Round 7: assignment + per-dimension partial sums run as ONE
-        # Arrow-batched stage (:func:`_assign_partial_sums`) — the
-        # former literal-centroid struct-max column was ~16 centroids ×
-        # 2 interpreted higher-order folds per row (HOFs do not
-        # whole-stage-codegen) and the dim avg() aggregates indexed the
-        # vector 64×/row.  The exchange now carries only a few hundred
-        # partial-aggregate rows; means = round(sum/count, 6) equal the
-        # former round(avg, 6) modulo float summation order, absorbed
-        # by the 1e-6 rounding exactly as the DuckDB oracle mirror
-        # already relies on.
+        # the centroid table is driver-small by construction: collect it
+        # and assign against literals (no join); means = round(sum /
+        # count, 6), whose summation order the rounding absorbs
         rows = cents.collect()
         if not rows:
             break
@@ -381,34 +286,10 @@ def kmeans_centroids(
     return cents.localCheckpoint(eager=True)
 
 
-def assign_ivf(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: Optional[DataFrame] = None,
-    kmeans_iters: int = 1,
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (k-means centroids by
-    default; pass ``centroids`` to reuse a prebuilt (centroid_id, cvec)
-    table).  Returns embeddings + ``centroid_id`` — ONE narrow
-    withColumn against the literal centroid set: no join, no shuffle of
-    the embedding column at any size."""
-    cents = (
-        centroids
-        if centroids is not None
-        else kmeans_centroids(embeddings, n_centroids, kmeans_iters, id_col, vec_col)
-    )
-    return embeddings.withColumn(
-        "centroid_id", _nearest_col(cents.collect(), vec_col)
-    )
-
-
 def _probe_choice(cent_rows, query_vec: Sequence[float], n_probe: int) -> list:
     """The n_probe centroid ids nearest the query, ranked driver-side
-    over the collected (tiny) centroid table.  Driver-side cosine sums
-    left-to-right like the column form, so the probe choice is
-    IEEE-identical to the former DF computation."""
+    over the collected (tiny) centroid table; ties go to the lowest id.
+    The cosine sums left to right, like every other cosine here."""
 
     def _pycos(a, b):
         import math
@@ -433,42 +314,6 @@ def _probe_choice(cent_rows, query_vec: Sequence[float], n_probe: int) -> list:
     return [int(r["centroid_id"]) for r in ranked[:n_probe]]
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
-    kmeans_iters: int = 1,
-) -> DataFrame:
-    """Approximate top-k: probe the n_probe centroids nearest the query,
-    then brute-force within those buckets only."""
-    cents = kmeans_centroids(
-        embeddings, n_centroids, kmeans_iters, id_col, vec_col
-    )
-    # the centroid table is driver-small by construction: collect ONCE
-    # and do both the probe choice and the assignment against literals —
-    # zero joins, zero extra jobs, and the full scan below stays narrow.
-    rows = cents.collect()
-    probe_ids = _probe_choice(rows, query_vec, n_probe)
-
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col).cast("array<double>")
-    probed = embeddings.withColumn(
-        "centroid_id", _nearest_col(rows, vec_col)
-    ).filter(F.col("centroid_id").isin(probe_ids))
-    return (
-        probed.select(
-            F.col(id_col), F.round(cosine_col(v, q), decimals).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def topk_brute_and_ivf(
     embeddings: DataFrame,
     query_vec: Sequence[float],
@@ -480,27 +325,20 @@ def topk_brute_and_ivf(
     decimals: int = 4,
     kmeans_iters: int = 1,
 ) -> DataFrame:
-    """Brute-force AND IVF cosine top-k from ONE scan, method-tagged
-    ('brute' rows then 'ivf' rows) — round 7.
+    """Brute-force AND IVF cosine top-k, method-tagged ('brute' rows
+    then 'ivf' rows) → (method, id, cosine), cosine rounded to
+    ``decimals`` and ranked descending with ties by ascending id.
 
-    :func:`cosine_topk` + :func:`ivf_topk` run three full passes over
-    the vectors between them (brute cosines, Lloyd assignment, probe
-    assignment + cosines).  The brute cosine and the probe assignment
-    are computable in the same projection, so this variant scans once
-    for (id, cosine-to-query, centroid_id), pins that ~24-byte/row
-    decision table (guide §8.4) with a localCheckpoint, and takes both
-    top-k rankings from it.  The cosine and assignment expressions are
-    the exact ones cosine_topk / ivf_topk evaluate — results identical
-    row-for-row."""
+    After the k-means pass, ONE scan (:func:`_scored_arrow`) yields
+    (id, cosine-to-query, centroid_id); that ~24-byte/row decision table
+    is pinned with a localCheckpoint and both rankings come from it —
+    brute force over every row, IVF over the rows whose centroid is
+    among the ``n_probe`` nearest the query (:func:`_probe_choice`)."""
     cents = kmeans_centroids(
         embeddings, n_centroids, kmeans_iters, id_col, vec_col
     )
     rows = cents.collect()
     probe_ids = _probe_choice(rows, query_vec, n_probe)
-    # round 7: the (cosine, centroid) decision columns come from the
-    # Arrow-batched _scored_arrow stage instead of the interpreted-HOF
-    # column expressions — same values (cumsum fold bit-identity; the
-    # round() below is the identical JVM expression as before)
     scored = (
         _scored_arrow(embeddings, rows, query_vec, id_col, vec_col)
         .select(

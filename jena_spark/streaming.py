@@ -137,6 +137,7 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         import os
         import shutil
 
+        from .materialize import atomic_write_json
         from .ops.update import _minus, _union
 
         spark = batch.sparkSession
@@ -253,23 +254,7 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
                     e = F.col(c).endswith(suf)
                     cond = e if cond is None else (cond | e)
             meta["has_cdt"] = not adds.filter(cond).isEmpty()
-        # atomic replace: json.dump into the live path could be torn by a
-        # crash; readers must only ever see a complete sidecar
-        import tempfile as _tf
-
-        fd, tmp = _tf.mkstemp(
-            dir=os.path.dirname(meta_path), suffix=".meta.tmp"
-        )
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, meta_path)
-        except BaseException:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
+        atomic_write_json(meta_path, meta)
         nxt.unpersist()
         last.unpersist()  # symmetric with nxt: thousands of micro-batches
         # would otherwise pin one checkpointed RDD each until GC

@@ -7,7 +7,8 @@ isomorphism per RiotEvalTest.java:105-116 → sparql/util/IsoMatcher.java).
 
 The manifests themselves are Turtle — we parse them with our own parser
 (dogfooding).  Test corpus location: the read-only reference checkout's
-``jena-arq/testing/rdf-tests-cg/rdf/rdf11/`` directory.
+``jena-arq/testing/rdf-tests-cg/rdf/rdf11/`` directory, under
+:func:`reference_dir`.
 """
 
 from __future__ import annotations
@@ -22,8 +23,18 @@ from .parsers.turtle import parse_turtle, parse_trig
 from .parsers.ntriples import parse_ntriples, parse_nquads
 from .terms import RDFSyntaxError
 
-RDF_TESTS_DIR = (
-    "/root/reference/jena-arq/testing/rdf-tests-cg/rdf/rdf11"
+
+def reference_dir() -> str:
+    """Root of the read-only Jena reference checkout that holds the
+    conformance corpora (W3C RDF and SPARQL suites, SPARQL-CDTs, RDF
+    Patch files): ``$JENA_REFERENCE_DIR``, by default ``~/reference``."""
+    return os.environ.get("JENA_REFERENCE_DIR") or os.path.join(
+        os.path.expanduser("~"), "reference"
+    )
+
+
+RDF_TESTS_DIR = os.path.join(
+    reference_dir(), "jena-arq", "testing", "rdf-tests-cg", "rdf", "rdf11"
 )
 
 MF = "http://www.w3.org/2001/sw/DataAccess/tests/test-manifest#"
@@ -94,7 +105,8 @@ def load_manifest(suite: str, suite_dir: Optional[str] = None) -> List[W3CTest]:
                 "/rdf-tests-cg/rdf/rdf11/rdf-xml/xml-canon/",
                 "/RIOT/Lang/rdf-xml/xml-canon/",
             ).replace(RDF_TESTS_DIR + "/rdf-xml/xml-canon/",
-                      "/root/reference/jena-arq/testing/RIOT/Lang/rdf-xml/xml-canon/")
+                      os.path.join(reference_dir(),
+                                   "jena-arq/testing/RIOT/Lang/rdf-xml/xml-canon/"))
             if os.path.exists(alt):
                 result_path = alt
         tests.append(

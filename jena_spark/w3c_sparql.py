@@ -43,11 +43,12 @@ from .skolem import BNodeAllocator, doc_seed
 from .parsers.turtle import parse_turtle
 from .parsers.ntriples import parse_ntriples
 from .terms import RDFSyntaxError, mk_iri, mk_literal, unescape_string
-from .w3c import isomorphic
+from .w3c import isomorphic, reference_dir
 
-SPARQL11_DIR = "/root/reference/jena-arq/testing/rdf-tests-cg/sparql/sparql11"
-DAWG_DIR = "/root/reference/jena-arq/testing/DAWG-Final"
-SPARQL12_DIR = "/root/reference/jena-arq/testing/rdf-tests-cg/sparql/sparql12"
+_ARQ_TESTING = os.path.join(reference_dir(), "jena-arq", "testing")
+SPARQL11_DIR = os.path.join(_ARQ_TESTING, "rdf-tests-cg", "sparql", "sparql11")
+DAWG_DIR = os.path.join(_ARQ_TESTING, "DAWG-Final")
+SPARQL12_DIR = os.path.join(_ARQ_TESTING, "rdf-tests-cg", "sparql", "sparql12")
 
 MF = "http://www.w3.org/2001/sw/DataAccess/tests/test-manifest#"
 QT = "http://www.w3.org/2001/sw/DataAccess/tests/test-query#"

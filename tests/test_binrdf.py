@@ -319,9 +319,7 @@ def test_registry_dispatch():
 # W3C corpus cross-check: NT fixtures → binary → back, sets must match
 # ---------------------------------------------------------------------------
 
-@pytest.mark.skipif(
-    not os.path.isdir(RDF_TESTS_DIR), reason="reference W3C corpus not present"
-)
+@pytest.mark.reference_corpus
 @pytest.mark.parametrize("fmt", ["thrift", "protobuf"])
 def test_w3c_nt_corpus_round_trip(fmt):
     write = write_rdf_thrift if fmt == "thrift" else write_rdf_protobuf

@@ -23,6 +23,7 @@ SUBSET = [
     "alg_agg_variety",
     "path_transitive_plus",
     "dedup_minhash_sigs",
+    "dedup_jaccard",
     "text_profile",
     "ann_topk",
     "mm_metadata",

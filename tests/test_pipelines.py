@@ -1,5 +1,8 @@
 """Dedup / similarity / text / multimodal / linking pipeline tests."""
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,11 +107,12 @@ def test_jaccard_pairs_matches_raw_shingle_sets(spark):
     assert got == expected
 
 
-def test_jaccard_py_path_matches_jvm_path(spark):
-    """The round-7 python-broadcast verify (pairs-only mapInPandas +
-    searchsorted counts) must reproduce the JVM broadcast-join +
-    array_intersect path row-for-row, including the inner-join drop of
-    pairs that reference a null-text doc."""
+def test_jaccard_py_path_matches_jvm_path(spark, monkeypatch):
+    """The driver-broadcast verify (pairs-only mapInPandas +
+    searchsorted counts) below the size gate must reproduce the JVM
+    broadcast-join + array_intersect path above it row-for-row,
+    including the inner-join drop of pairs that reference a null-text
+    doc."""
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
         (1, "the quick brown fox jumped over the lazy dogs"),
@@ -123,11 +127,10 @@ def test_jaccard_py_path_matches_jvm_path(spark):
         ["id_a", "id_b"],
     )
     py = {(r["id_a"], r["id_b"]): r["jaccard"]
-          for r in dd.jaccard_pairs(docs, cands, k=5,
-                                    py_broadcast_bytes=1 << 30).collect()}
+          for r in dd.jaccard_pairs(docs, cands, k=5).collect()}
+    monkeypatch.setattr(dd, "_DRIVER_SETS_MAX_BYTES", 0)
     jvm = {(r["id_a"], r["id_b"]): r["jaccard"]
-           for r in dd.jaccard_pairs(docs, cands, k=5,
-                                     py_broadcast_bytes=0).collect()}
+           for r in dd.jaccard_pairs(docs, cands, k=5).collect()}
     assert py == jvm
     assert (0, 3) not in py and (3, 4) not in py
     assert py[(0, 5)] == 1.0
@@ -155,7 +158,7 @@ def test_sigs_and_sets_matches_split_stages(spark):
             assert row["sh"] is None, did
 
 
-def test_dedup_jaccard_pipeline_matches_split(spark):
+def test_dedup_jaccard_pipeline_matches_split(spark, monkeypatch):
     """The fused dedup_jaccard pipeline (both gate sides) must equal the
     split sigs → candidates → jaccard_pairs chain row-for-row."""
     rows = [(i, f"common words block {i % 4} repeated across documents")
@@ -169,23 +172,20 @@ def test_dedup_jaccard_pipeline_matches_split(spark):
                 for r in dd.dedup_jaccard_pipeline(docs, k=5, num_perm=8,
                                                    bands=2, rows_per_band=4
                                                    ).collect()}
+    monkeypatch.setattr(dd, "_DRIVER_SETS_MAX_BYTES", 0)
     fused_jvm = {(r["id_a"], r["id_b"]): r["jaccard"]
                  for r in dd.dedup_jaccard_pipeline(
-                     docs, k=5, num_perm=8, bands=2, rows_per_band=4,
-                     py_broadcast_bytes=0).collect()}
+                     docs, k=5, num_perm=8, bands=2, rows_per_band=4
+                 ).collect()}
     assert fused_py == split
     assert fused_jvm == split
 
 
-def test_jaccard_bitset_path_matches_sets_path(spark, monkeypatch):
-    """The round-7 bitset verify kernel (dictionary-encoded shingle
-    space, AND+popcount) must reproduce the per-pair sorted-merge
-    kernel exactly — both integers (__i/__s) feed the same JVM
-    division, so value equality here is result equality.  Forced both
-    ways via the sample-distinct gate; includes absent-id pairs and a
-    shorter-than-k doc."""
-    rows = [(i, f"shared vocabulary text number {i % 5} with overlap")
-            for i in range(40)] + [(40, "zz"), (41, None)]
+def test_dedup_jaccard_string_ids_both_gate_sides(spark, monkeypatch):
+    """String doc ids keep their type through the driver-broadcast
+    verify and give the same rows as the JVM join above the gate."""
+    rows = [(f"d{i}", f"shared words block {i % 3} across the corpus")
+            for i in range(12)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
 
     def run():
@@ -194,20 +194,65 @@ def test_jaccard_bitset_path_matches_sets_path(spark, monkeypatch):
                     docs, k=5, num_perm=8, bands=2, rows_per_band=4
                 ).collect()}
 
-    # force the bitset kernel (loop "cost" infinite) vs the sorted-merge
-    # loop (loop "cost" zero) through the full pipeline
-    monkeypatch.setattr(dd, "_BITSET_LOOP_US_PER_PAIR", 1e12)
-    bits = run()
-    monkeypatch.setattr(dd, "_BITSET_LOOP_US_PER_PAIR", 0.0)
-    merge = run()
-    assert bits == merge and len(bits) > 0
+    py = run()
+    monkeypatch.setattr(dd, "_DRIVER_SETS_MAX_BYTES", 0)
+    assert py == run()
+    assert py[("d0", "d3")] == 1.0
+
+
+# --- in-test references for the top-k scorer ---------------------------------
+
+def _fold_dot(a, b):
+    s = 0.0
+    for x, y in zip(a, b):
+        s += float(x) * float(y)
+    return s
+
+
+def _ref_cosine(v, w):
+    """Cosine with every sum folded left to right in IEEE doubles."""
+    return _fold_dot(v, w) / (math.sqrt(_fold_dot(v, v)) * math.sqrt(_fold_dot(w, w)))
+
+
+def _spark_round(x, decimals):
+    """Spark's round(): HALF_UP on the double's decimal string."""
+    q = Decimal(1).scaleb(-decimals)
+    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def _ref_nearest(v, cent_rows):
+    """Centroid id with the greatest cosine to v, lowest id on ties."""
+    return max(cent_rows,
+               key=lambda r: (_ref_cosine(v, r["cvec"]), -r["centroid_id"]))["centroid_id"]
+
+
+def _ref_topk(vecs, qv, k, keep=lambda vid: True):
+    """Top-k (id, cosine rounded to 4) by cosine desc, then id asc."""
+    scored = [(vid, _spark_round(_ref_cosine(v, qv), 4))
+              for vid, v in vecs if keep(vid)]
+    return sorted(scored, key=lambda t: (-t[1], t[0]))[:k]
+
+
+def _ref_ivf_topk(emb, qv, k, n_centroids, n_probe):
+    """IVF top-k over the collected k-means centroids: probe the
+    n_probe centroids nearest the query, rank their members."""
+    cents = sim.kmeans_centroids(emb, n_centroids, 1).collect()
+    probe = sorted(cents, key=lambda r: (-_ref_cosine(qv, r["cvec"]),
+                                         r["centroid_id"]))[:n_probe]
+    probe_ids = {r["centroid_id"] for r in probe}
+    vecs = [(r["vec_id"], r["embedding"]) for r in emb.collect()]
+    members = {vid for vid, v in vecs if _ref_nearest(v, cents) in probe_ids}
+    return _ref_topk(vecs, qv, k, keep=members.__contains__)
+
+
+def _topk_rows(out, method):
+    return [(r["vec_id"], r["cosine"]) for r in out if r["method"] == method]
 
 
 def test_topk_brute_and_ivf_matches_separate_scans(spark):
-    """Round 7's shared-scan brute+IVF must reproduce cosine_topk and
-    ivf_topk row-for-row (same values, order, and method tags) — the
-    differential gate for the round-7 Arrow scored/Lloyd stages vs the
-    interpreted-HOF column forms that cosine_topk/ivf_topk keep."""
+    """The shared-scan brute+IVF top-k must reproduce a brute-force and
+    an IVF ranking computed separately in Python, row for row (same
+    values, order and method tags)."""
     emb = spark.createDataFrame(
         [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)])
          for i in range(60)],
@@ -215,26 +260,24 @@ def test_topk_brute_and_ivf_matches_separate_scans(spark):
     )
     qv = [1.0, -0.5, 0.25, 0.0, 2.0, -1.0, 0.5, 0.75]
     both = sim.topk_brute_and_ivf(emb, qv, k=7, n_centroids=6, n_probe=3).collect()
-    brute = sim.cosine_topk(emb, qv, k=7).collect()
-    ivf = sim.ivf_topk(emb, qv, k=7, n_centroids=6, n_probe=3).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in both if r["method"] == "brute"] \
-        == [(r["vec_id"], r["cosine"]) for r in brute]
-    assert [(r["vec_id"], r["cosine"]) for r in both if r["method"] == "ivf"] \
-        == [(r["vec_id"], r["cosine"]) for r in ivf]
+    vecs = [(r["vec_id"], r["embedding"]) for r in emb.collect()]
+    assert [r["method"] for r in both] == ["brute"] * 7 + ["ivf"] * 7
+    assert _topk_rows(both, "brute") == _ref_topk(vecs, qv, 7)
+    assert _topk_rows(both, "ivf") == _ref_ivf_topk(emb, qv, 7, 6, 3)
 
 
 def test_scored_arrow_matches_hof_on_edge_rows(spark):
-    """The round-7 Arrow scored stage must equal the interpreted-HOF
-    column expressions it replaced on awkward rows — null vector,
-    wrong-dimension vector (zip_with padding → null cosine, lowest
-    centroid id) — against FIXED centroids (a null vector inside the
-    k-means init sample has always been out of contract)."""
-    from pyspark.sql import Row, functions as F
+    """The Arrow scored stage against FIXED centroids: regular rows get
+    the reference cosine and nearest centroid; a null vector or a
+    wrong-dimension vector gets a null cosine and the lowest centroid
+    id (the null-padded zip_with and struct-max tie-break of the column
+    form).  A null vector inside the k-means init sample has always been
+    out of contract."""
+    from pyspark.sql import Row
 
+    good = [(i, [float((i * 3 + j) % 7 - 3) for j in range(6)]) for i in range(20)]
     emb = spark.createDataFrame(
-        [(i, [float((i * 3 + j) % 7 - 3) for j in range(6)])
-         for i in range(20)]
-        + [(20, None), (21, [1.0, 2.0]), (22, [0.5] * 9)],
+        good + [(20, None), (21, [1.0, 2.0]), (22, [0.5] * 9)],
         ["vec_id", "embedding"],
     )
     cent_rows = [
@@ -242,30 +285,17 @@ def test_scored_arrow_matches_hof_on_edge_rows(spark):
         for c in range(4)
     ]
     qv = [1.0, -1.0, 0.5, 0.0, 2.0, -0.5]
-    got = (
+    got = [
+        tuple(r) for r in
         sim._scored_arrow(emb, cent_rows, qv, "vec_id", "embedding")
-        .select(
-            "vec_id",
-            F.round(F.col("cosine"), 4).alias("cosine"),
-            "centroid_id",
-        )
+        .select("vec_id", F.round(F.col("cosine"), 4).alias("cosine"), "centroid_id")
         .orderBy("vec_id")
         .collect()
-    )
-    q = F.array(*[F.lit(float(x)) for x in qv])
-    v = F.col("embedding").cast("array<double>")
-    old = (
-        emb.select(
-            "vec_id",
-            F.round(sim.cosine_col(v, q), 4).alias("cosine"),
-            sim._nearest_col(cent_rows, "embedding"),
-        )
-        .orderBy("vec_id")
-        .collect()
-    )
-    assert got == old
-    by_id = {r["vec_id"]: r for r in got}
-    assert by_id[20]["cosine"] is None and by_id[21]["cosine"] is None
+    ]
+    want = [(i, _spark_round(_ref_cosine(v, qv), 4), _ref_nearest(v, cent_rows))
+            for i, v in good]
+    want += [(20, None, 0), (21, None, 0), (22, None, 0)]
+    assert got == want
 
 
 def test_profile_matches_column_form(spark):
@@ -345,16 +375,18 @@ def test_simhash_near_for_near_dups(docs):
 def test_cosine_topk_exact_baseline(spark):
     rows = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = sim.cosine_topk(emb, [1.0, 0.1, 0.0, 0.0], k=2).collect()
-    assert out[0]["vec_id"] == 0 and out[1]["vec_id"] == 1
+    out = sim.topk_brute_and_ivf(emb, [1.0, 0.1, 0.0, 0.0], k=2,
+                                 n_centroids=2, n_probe=1).collect()
+    assert [r["vec_id"] for r in out if r["method"] == "brute"] == [0, 1]
 
 
 def test_ivf_recall_against_bruteforce(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qv = [float((i * 37 % 19) - 9) / 10.0 for i in range(64)]
-    exact = [r["vec_id"] for r in sim.cosine_topk(emb, qv, k=10).collect()]
-    approx = [r["vec_id"] for r in sim.ivf_topk(emb, qv, k=10, n_centroids=8, n_probe=4).collect()]
-    recall = len(set(exact) & set(approx)) / 10
+    out = sim.topk_brute_and_ivf(emb, qv, k=10, n_centroids=8, n_probe=4).collect()
+    exact = _ref_topk([(r["vec_id"], r["embedding"]) for r in emb.collect()], qv, 10)
+    assert _topk_rows(out, "brute") == exact
+    recall = len({v for v, _ in exact} & {v for v, _ in _topk_rows(out, "ivf")}) / 10
     assert recall >= 0.5  # probe half the space → decent recall
 
 
@@ -549,12 +581,9 @@ def test_ivf_recall_skewed_corpus(spark):
         rows.append((i, [x / n for x in v]))
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     qv = rows[190][1]  # query inside the spread tail
-    exact = [r["vec_id"] for r in sim.cosine_topk(emb, qv, k=10).collect()]
-    approx = [
-        r["vec_id"]
-        for r in sim.ivf_topk(emb, qv, k=10, n_centroids=8, n_probe=4).collect()
-    ]
-    recall = len(set(exact) & set(approx)) / 10
+    out = sim.topk_brute_and_ivf(emb, qv, k=10, n_centroids=8, n_probe=4).collect()
+    exact = {vid for vid, _ in _ref_topk(rows, qv, 10)}
+    recall = len(exact & {v for v, _ in _topk_rows(out, "ivf")}) / 10
     assert recall >= 0.9
 
 

@@ -1,13 +1,18 @@
 """RDF Patch reader/applier tests (reference: jena-rdfpatch testing/
 files/syntax-1.rdfp, RDFPatchReaderText.java, RDF2Patch.java)."""
 
+import os
+
 import pytest
 
 from jena_spark.rdfpatch import (
     PatchException, apply_patch, diff_patch, parse_patch,
 )
+from jena_spark.w3c import reference_dir
 
-SYNTAX_1 = "/root/reference/jena-rdfpatch/testing/files/syntax-1.rdfp"
+SYNTAX_1 = os.path.join(
+    reference_dir(), "jena-rdfpatch", "testing", "files", "syntax-1.rdfp"
+)
 
 
 def quads(df):
@@ -28,6 +33,7 @@ def store(spark):
     )
 
 
+@pytest.mark.reference_corpus
 def test_parse_reference_syntax_file():
     with open(SYNTAX_1, encoding="utf-8", newline="") as f:
         log = parse_patch(f.read())
@@ -397,3 +403,43 @@ def test_legacy_meta_json_in_store_root_does_not_lose_rows(spark, tmp_path):
     assert not os.path.exists(os.path.join(store, "meta.json"))
     with open(os.path.join(store, "_meta.json")) as f:
         assert json.load(f)["has_cdt"] is False
+
+
+def test_crashed_sidecar_write_leaves_store_readable(spark, tmp_path, monkeypatch):
+    """A crash between the sidecar's temp write and its os.replace
+    leaves the temp file inside the p_part store.  Its ``_`` prefix
+    keeps it out of Spark's file listing, so the store reads the same
+    rows, and the sidecar keeps its last complete version."""
+    import glob
+    import json
+    import os
+
+    from jena_spark.materialize import atomic_write_json
+    from jena_spark.streaming import apply_patch_batch
+
+    store = str(tmp_path / "quads")
+    apply_patch_batch(store, n_parts=4)(spark.createDataFrame(
+        [(1, "A", None, "<http://e/a>", "<http://e/p>", '"v1"'),
+         (2, "A", None, "<http://e/b>", "<http://e/q>", '"v2"')],
+        "seq long, op string, graph string, subj string, pred string, obj string",
+    ), 0)
+    before = _store_quads(spark, store)
+    meta_path = os.path.join(store, "_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+
+    def killed(*_args):
+        raise RuntimeError("killed before os.replace")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", killed)
+        m.setattr(os, "unlink", lambda _path: None)  # a kill cleans nothing up
+        with pytest.raises(RuntimeError):
+            atomic_write_json(meta_path, {**meta, "has_cdt": True})
+    leftovers = [p for p in glob.glob(os.path.join(store, "*"))
+                 if os.path.isfile(p) and p != meta_path]
+    assert len(leftovers) == 1
+    assert os.path.basename(leftovers[0]).startswith("_")
+    assert _store_quads(spark, store) == before
+    with open(meta_path) as f:
+        assert json.load(f) == meta

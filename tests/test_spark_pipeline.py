@@ -127,6 +127,31 @@ def test_materialize_encoded_roundtrip(spark, triples, tmp_path):
     assert got.count() == want.count() > 0
 
 
+def test_choose_index_encoded_survives_torn_meta(spark, triples, tmp_path):
+    """A meta.json truncated by a crash falls back to the unpruned scan:
+    the predicate-bound lookup returns the same rows as with a valid
+    sidecar instead of failing."""
+    from jena_spark.materialize import materialize_encoded, choose_index_encoded
+
+    out = str(tmp_path / "enc")
+    materialize_encoded(
+        triples.select("graph", "subj", "pred", "obj"), out, n_partitions=4
+    )
+    rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+
+    def lookup():
+        return sorted(tuple(r) for r in
+                      choose_index_encoded(spark, out, p=rdf_type).collect())
+
+    want = lookup()
+    meta = os.path.join(out, "meta.json")
+    with open(meta) as f:
+        text = f.read()
+    with open(meta, "w") as f:
+        f.write(text[: len(text) // 2])
+    assert lookup() == want and want
+
+
 def test_salting_spreads_hot_predicate(spark, triples):
     rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
     salted = with_salted_partition(

@@ -13,9 +13,10 @@ import os
 
 import pytest
 
+from jena_spark.w3c import reference_dir
 from jena_spark.w3c_sparql import run_sparql_dir, SPARQL11_DIR, DAWG_DIR, SPARQL12_DIR
 
-pytestmark = pytest.mark.slow
+pytestmark = [pytest.mark.slow, pytest.mark.reference_corpus]
 
 
 # (base, subdir, min_pass) — min_pass is the pass count at wiring time;
@@ -92,7 +93,7 @@ def test_w3c_sparql_suite(spark, base, sub, min_pass):
 # library, composite ordering, document-scoped bnodes) — the reference's
 # own test tree, jena-arq/testing/SPARQL-CDTs (Scripts_CDTs.java) -----------
 
-CDT_DIR = "/root/reference/jena-arq/testing/SPARQL-CDTs"
+CDT_DIR = os.path.join(reference_dir(), "jena-arq", "testing", "SPARQL-CDTs")
 
 CDT_SUITES = [
     ("unfold", 42),

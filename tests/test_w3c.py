@@ -4,15 +4,11 @@ Each suite must pass at 100% (the BASELINE.json bar is P/R ≥ 0.95; eval
 tests compare by blank-node-bijection isomorphism exactly like the
 reference harness, RiotEvalTest.java:105-116)."""
 
-import os
-
 import pytest
 
-from jena_spark.w3c import RDF_TESTS_DIR, run_suite
+from jena_spark.w3c import run_suite
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(RDF_TESTS_DIR), reason="reference W3C corpus not present"
-)
+pytestmark = pytest.mark.reference_corpus
 
 SUITES = ["n-triples", "n-quads", "turtle", "trig", "xml"]
 

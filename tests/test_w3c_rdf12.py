@@ -7,12 +7,12 @@ import os
 
 import pytest
 
-from jena_spark.w3c import load_manifest, run_test
+from jena_spark.w3c import load_manifest, reference_dir, run_test
 
-pytestmark = pytest.mark.slow
+pytestmark = [pytest.mark.slow, pytest.mark.reference_corpus]
 
 
-RDF12 = "/root/reference/jena-arq/testing/rdf-tests-cg/rdf/rdf12"
+RDF12 = os.path.join(reference_dir(), "jena-arq", "testing", "rdf-tests-cg", "rdf", "rdf12")
 
 SUITES = [
     ("n-triples", os.path.join(RDF12, "rdf-n-triples/syntax")),
