@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 
 from jena_spark.extract import detect, extract_triples, run_extraction, lineage
 from jena_spark.sources import source_files_from_documents, trig_files_from_documents
-from jena_spark.nodetable import build_node_table
-from jena_spark.materialize import with_salted_partition
+from jena_spark.nodetable import build_node_table, encode_triples
+from jena_spark.materialize import p_part_column, term_hashes
 from jena_spark.ops.algebra import bgp, facet_counts, path_seq, path_transitive
 from jena_spark.pipelines import dedup as dd
 from jena_spark.pipelines import similarity as sim
@@ -130,14 +130,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def kg_salted_partitions(spark, sf):
-        # hot-predicate salting: rdf:type rows spread over >1 partition id
-        # but over at most n_salts of them — asserted as constants so the
-        # layout property itself is oracle-checkable (the exact partition
-        # ids are Spark-side and not portable)
-        tri = _doc_triples(spark, sf)
-        salted = with_salted_partition(tri, n_partitions=16, n_salts=8)
+        # hot-predicate salting: under the encoded store's p_part rule,
+        # rdf:type rows spread over >1 partition id but over at most
+        # n_salts of them — asserted as constants so the layout property
+        # itself is oracle-checkable (the exact partition ids are
+        # Spark-side and not portable)
+        hot = term_hashes(spark, [RDF_TYPE])
+        layout = {"n_partitions": 16, "n_salts": 8, "hot_predicate_ids": hot}
         return (
-            salted.filter(F.col("pred") == RDF_TYPE)
+            encode_triples(_doc_triples(spark, sf))
+            .filter(F.col("p_id").isin(hot))
+            .withColumn("p_part", p_part_column(layout))
             .agg(
                 (F.countDistinct("p_part") > 1).cast("long").alias("spread_ok"),
                 (F.countDistinct("p_part") <= 8).cast("long").alias("cap_ok"),

@@ -2,27 +2,25 @@
 
 Reference behavior (tdb2/store/nodetable/NodeTableNative.java:42-170):
 a synchronized two-way map term↔64-bit id; ids are NOT dense — they are
-byte offsets into the term file, and small numerics are value-inlined
-into the id (tdb2/store/NodeIdInline.java:44-58) so they never touch the
-dictionary.
+byte offsets into the term file.
 
 Spark design:
-- **hash ids (default)**: ``node_id = xxhash64(term)`` — deterministic,
-  mintable with ZERO shuffles (any partition of any run mints the same
-  id), which is what makes the pipeline checkpoint-resumable and lets
-  encode run as pure joins.  Faithful to the reference in spirit (ids
-  are opaque 64-bit keys, not ranks).  Collision odds at 10^9 distinct
-  terms ≈ 2.7e-2 cumulative birthday bound — below risk appetite at
-  10^12-file scale, so ``id_bits=128`` switches to the md5 pair
-  (collision-free for any realistic vocabulary); a uniqueness audit is
-  one groupBy away (:func:`assert_ids_unique`).
+- **hash ids (the store's id scheme)**: ``node_id = xxhash64(term)``
+  (:func:`term_id`) — deterministic, mintable with ZERO shuffles (any
+  partition of any run mints the same id), which is what makes the
+  pipeline checkpoint-resumable and lets encode run without joins.
+  Faithful to the reference in spirit (ids are opaque 64-bit keys, not
+  ranks).  Collision odds at 10^9 distinct terms ≈ 2.7e-2 cumulative
+  birthday bound, so every store build runs the uniqueness audit
+  (:func:`assert_ids_unique`).
 - **dense ids (optional)**: rank-based 0..N-1 ids via bucketed window —
   needed only when downstream wants array-indexable ids;
-  costs one extra shuffle of the distinct-term set.
-- triples encode by three joins (subj/pred/obj → id).  The node table is
-  **broadcast when small**, **sort-merge/shuffle joined when large**
-  (north-star rule); AQE makes the final call from runtime stats unless
-  the ``broadcast`` knob forces it.
+  costs one extra shuffle of the distinct-term set.  The encoded store
+  cannot read them (its permutations are keyed by hash ids).
+- triples encode by three joins (subj/pred/obj → id) when given a node
+  table.  The node table is **broadcast when small**, **sort-merge/
+  shuffle joined when large** (north-star rule); AQE makes the final
+  call from runtime stats unless the ``broadcast`` knob forces it.
 """
 
 from __future__ import annotations
@@ -31,10 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-_INLINE_RE = r'^"[+-]?\d{1,18}"\^\^<http://www\.w3\.org/2001/XMLSchema#(integer|int|long|short|byte)>$'
-
-
-def distinct_terms(triples: DataFrame, inline_numeric: bool = False) -> DataFrame:
+def distinct_terms(triples: DataFrame) -> DataFrame:
     """Distinct terms over (subj, pred, obj [, graph]) — single pass via
     explode (one scan of the input, one hash-distinct shuffle)."""
     cols = ["subj", "pred", "obj"]
@@ -44,36 +39,21 @@ def distinct_terms(triples: DataFrame, inline_numeric: bool = False) -> DataFram
         ).filter(F.col("term").isNotNull())
     else:
         terms = triples.select(F.explode(F.array(*cols)).alias("term"))
-    terms = terms.distinct()
-    if inline_numeric:
-        # value-inlinable numerics skip the dictionary (NodeIdInline parity)
-        terms = terms.filter(~F.col("term").rlike(_INLINE_RE))
-    return terms
+    return terms.distinct()
 
 
-def term_id(col, id_bits: int = 64):
-    if id_bits == 64:
-        return F.xxhash64(col)
-    # 128-bit: md5 split into two longs, kept as a struct
-    h = F.md5(col)
-    return F.struct(
-        F.conv(F.substring(h, 1, 16), 16, 10).cast("decimal(20,0)").alias("hi"),
-        F.conv(F.substring(h, 17, 16), 16, 10).cast("decimal(20,0)").alias("lo"),
-    )
+def term_id(col):
+    """The store's node id of a term column: ``xxhash64(term)``."""
+    return F.xxhash64(col)
 
 
-def build_node_table(
-    triples: DataFrame,
-    inline_numeric: bool = False,
-    dense: bool = False,
-    id_bits: int = 64,
-) -> DataFrame:
+def build_node_table(triples: DataFrame, dense: bool = False) -> DataFrame:
     """(term, node_id) dictionary.  Default: shuffle-free hash ids.
     ``dense=True``: deterministic 0..N-1 ids (rank by term within hash
     buckets + bucket offsets) — one extra shuffle + a tiny broadcast."""
-    terms = distinct_terms(triples, inline_numeric)
+    terms = distinct_terms(triples)
     if not dense:
-        return terms.select("term", term_id(F.col("term"), id_bits).alias("node_id"))
+        return terms.select("term", term_id(F.col("term")).alias("node_id"))
 
     nbuckets = 1024
     bucketed = terms.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(nbuckets)))
@@ -101,20 +81,35 @@ def build_node_table(
 
 
 def assert_ids_unique(node_table: DataFrame) -> None:
-    """Collision audit for hash ids (cheap: one agg over the dictionary)."""
-    dup = (
-        node_table.groupBy("node_id").count().filter(F.col("count") > 1).limit(1)
+    """Audit of a hash-id node table in one aggregation (cheap: one
+    groupBy over the dictionary).  Fails when two terms share a
+    ``node_id`` (a collision silently merges two graph nodes) or when an
+    id is not :func:`term_id` of its term (e.g. a dense table: the
+    encoded store's permutations carry hash ids, so such a dictionary
+    could not decode them)."""
+    rows = (
+        node_table.groupBy("node_id")
+        .agg(
+            F.count("*").alias("count"),
+            F.bool_and(F.col("node_id") == term_id(F.col("term"))).alias("hashed"),
+        )
+        .filter((F.col("count") > 1) | ~F.col("hashed"))
+        .orderBy(F.desc("count"))
+        .limit(1)
+        .collect()
     )
-    rows = dup.collect()
-    if rows:
+    if rows and rows[0]["count"] > 1:
         raise RuntimeError(f"node_id collision detected: {rows[0]}")
+    if rows:
+        raise RuntimeError(
+            f"node table ids are not the hash ids term_id(term): {rows[0]}"
+        )
 
 
 def encode_triples(
     triples: DataFrame,
     node_table: DataFrame | None = None,
     broadcast: bool | None = None,
-    id_bits: int = 64,
 ) -> DataFrame:
     """triples(strings) → triples(ids).
 
@@ -128,9 +123,9 @@ def encode_triples(
         keep = [c for c in triples.columns if c not in ("subj", "pred", "obj")]
         return triples.select(
             *keep,
-            term_id(F.col("subj"), id_bits).alias("s_id"),
-            term_id(F.col("pred"), id_bits).alias("p_id"),
-            term_id(F.col("obj"), id_bits).alias("o_id"),
+            term_id(F.col("subj")).alias("s_id"),
+            term_id(F.col("pred")).alias("p_id"),
+            term_id(F.col("obj")).alias("o_id"),
         )
 
     nt = node_table

@@ -2246,24 +2246,23 @@ _CDT_ACTIVE: "contextvars.ContextVar[bool]" = contextvars.ContextVar(
 # probe the DATA once: does any subj/obj term carry a cdt:List/cdt:Map
 # datatype?  The probe is one column-pruned scan with early exit on the
 # first hit, cached by the DataFrame's semantic hash so repeated queries
-# over the same store pay it once.  Round 6: stores built by materialize
-# (and kept fresh by the patch sink) carry a build-time ``has_cdt`` flag
-# in meta.json — _meta_has_cdt reads it and skips the probe entirely, so
-# at warehouse scale the default path costs zero scans; `cdt=` on the
-# entry points remains the explicit override.
+# over the same store pay it once.  Round 6: quad stores kept by the
+# patch sink carry a ``has_cdt`` flag in their _meta.json sidecar —
+# _meta_has_cdt reads it and skips the probe entirely, so at warehouse
+# scale the default path costs zero scans; `cdt=` on the entry points
+# remains the explicit override.
 from ..cdt import CDT_TERM_SUFFIXES as _CDT_SUFFIXES
 
 _cdt_data_cache: "dict[tuple, bool]" = {}
 
 
 def _meta_has_cdt(df: DataFrame) -> Optional[bool]:
-    """Build-time ``has_cdt`` from store metadata — zero probe jobs.
+    """``has_cdt`` from store metadata — zero probe jobs.
 
-    ``materialize``/``materialize_encoded`` write the flag into the store's
-    meta.json at build time (they scan every term anyway) and the patch
-    sink keeps it fresh per micro-batch, so a query over such a store never
-    pays the probe scan.  Trusted only when the plan is a pure file scan
-    (filters/projections over one relation): a union or join with
+    The patch sink (``streaming.apply_patch_batch``) keeps the flag in
+    its store's ``_meta.json`` fresh per micro-batch, so a query over
+    such a store never pays the probe scan.  Trusted only when the plan
+    is a pure file scan (filters/projections over one relation): a union or join with
     in-memory rows (LocalRelation) could carry CDT literals invisible to
     ``inputFiles()``, so those shapes fall back to the data probe — the
     safe direction.
@@ -2307,15 +2306,12 @@ def _meta_has_cdt(df: DataFrame) -> Optional[bool]:
         p = f[len("file:"):] if f.startswith("file:") else f
         d = _os.path.dirname(p)
         found = None
-        for _ in range(4):  # part file → p_part dir → perm dir → store root
-            # _meta.json = patch-sink sidecar (underscore keeps it out of
-            # Spark's file listing); meta.json = materialize store root
-            for name in ("_meta.json", "meta.json"):
-                cand = _os.path.join(d, name)
-                if _os.path.isfile(cand):
-                    found = cand
-                    break
-            if found:
+        for _ in range(4):  # walk up from the part file to the store root
+            # the patch-sink sidecar (underscore keeps it out of Spark's
+            # file listing)
+            cand = _os.path.join(d, "_meta.json")
+            if _os.path.isfile(cand):
+                found = cand
                 break
             nd = _os.path.dirname(d)
             if nd == d:

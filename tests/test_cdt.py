@@ -254,20 +254,28 @@ def test_cdt_probe_not_stale_after_overwrite(spark, tmp_path):
     assert _data_has_cdt(spark.read.parquet(path)) is True
 
 
+def _patch_store(spark, path, rows):
+    """A quad store built by the patch sink, which keeps has_cdt in its
+    _meta.json sidecar; returns its (subj, pred, obj) scan."""
+    from jena_spark.streaming import apply_patch_batch
+
+    batch = spark.createDataFrame(
+        [(i, "A", None, s, p, o) for i, (s, p, o) in enumerate(rows)],
+        "seq long, op string, graph string, subj string, pred string, obj string")
+    apply_patch_batch(path, n_parts=2)(batch, 0)
+    return spark.read.parquet(path).select("subj", "pred", "obj")
+
+
 def test_cdt_meta_flag_skips_probe(spark, tmp_path, monkeypatch):
-    """A store built by materialize() carries has_cdt in meta.json; a
+    """A store kept by the patch sink carries has_cdt in _meta.json; a
     CDT-silent query over it must trigger ZERO probe jobs (the round-5
     judge's `weak` #1: the default path paid a full scan per snapshot).
     Asserted by making the probe itself raise."""
-    from jena_spark.materialize import materialize
     from jena_spark.ops import sparql as sp
 
     rows = [("<http://e/a>", "<http://e/p>", '"v"'),
             ("<http://e/b>", "<http://e/p>", '"w"')]
-    out = str(tmp_path / "store")
-    materialize(spark.createDataFrame(rows, ["subj", "pred", "obj"]), out,
-                n_partitions=2)
-    df = spark.read.parquet(out + "/spo").select("subj", "pred", "obj")
+    df = _patch_store(spark, str(tmp_path / "store"), rows)
     sp._cdt_data_cache.clear()
     monkeypatch.setattr(
         sp, "_probe_has_cdt",
@@ -278,18 +286,14 @@ def test_cdt_meta_flag_skips_probe(spark, tmp_path, monkeypatch):
 
 
 def test_cdt_meta_flag_true_for_cdt_store(spark, tmp_path, monkeypatch):
-    from jena_spark.materialize import materialize
     from jena_spark.ops import sparql as sp
 
     rows = [("<http://e/a>", "<http://e/p>", f'"[1]"^^<{CDT_LIST}>')]
-    out = str(tmp_path / "store")
-    materialize(spark.createDataFrame(rows, ["subj", "pred", "obj"]), out,
-                n_partitions=2)
+    df = _patch_store(spark, str(tmp_path / "store"), rows)
     sp._cdt_data_cache.clear()
     monkeypatch.setattr(
         sp, "_probe_has_cdt",
         lambda _df: (_ for _ in ()).throw(AssertionError("probe scan ran")))
-    df = spark.read.parquet(out + "/spo").select("subj", "pred", "obj")
     assert sp._data_has_cdt(df) is True
 
 
@@ -318,14 +322,10 @@ def test_cdt_meta_not_trusted_past_union(spark, tmp_path):
     inputFiles(); the metadata shortcut must refuse such plans and fall
     back to the probe — otherwise a CDT-silent query over store+delta
     would compare the new CDT literals lexically (wrong answers)."""
-    from jena_spark.materialize import materialize
     from jena_spark.ops import sparql as sp
 
     rows = [("<http://e/a>", "<http://e/p>", '"v"')]
-    out = str(tmp_path / "store")
-    materialize(spark.createDataFrame(rows, ["subj", "pred", "obj"]), out,
-                n_partitions=2)
-    store = spark.read.parquet(out + "/spo").select("subj", "pred", "obj")
+    store = _patch_store(spark, str(tmp_path / "store"), rows)
     delta = spark.createDataFrame(
         [("<http://e/b>", "<http://e/p>", f'"[1]"^^<{CDT_LIST}>')],
         ["subj", "pred", "obj"])
@@ -342,14 +342,10 @@ def test_cdt_meta_not_trusted_past_aliasing_project(spark, tmp_path):
     (select of plain columns) keep the zero-probe trust."""
     from pyspark.sql import functions as F
 
-    from jena_spark.materialize import materialize
     from jena_spark.ops import sparql as sp
 
     rows = [("<http://e/a>", "<http://e/p>", '"v"')]
-    out = str(tmp_path / "store")
-    materialize(spark.createDataFrame(rows, ["subj", "pred", "obj"]), out,
-                n_partitions=2)
-    store = spark.read.parquet(out + "/spo").select("subj", "pred", "obj")
+    store = _patch_store(spark, str(tmp_path / "store"), rows)
     sp._cdt_data_cache.clear()
     assert sp._meta_has_cdt(store) is False  # attribute-only: trusted
     synth = store.withColumn(

@@ -18,6 +18,7 @@ SUBSET = [
     "kg_extract_triples",
     "kg_pred_counts",
     "kg_lineage",
+    "kg_salted_partitions",
     "alg_group_agg",
     "alg_join",
     "alg_agg_variety",

@@ -1,6 +1,7 @@
 """Spark-side pipeline tests: extraction determinism, node table,
 materialization, checkpoint/resume, streaming."""
 
+import json
 import os
 import shutil
 
@@ -10,7 +11,15 @@ from pyspark.sql import functions as F
 from jena_spark.sources import synth_source_files, source_files_from_documents
 from jena_spark.extract import detect, extract_triples, run_extraction, lineage
 from jena_spark.nodetable import build_node_table, encode_triples, decode_triples
-from jena_spark.materialize import materialize, choose_index, with_salted_partition
+from jena_spark.materialize import (
+    ENC_PERMUTATIONS,
+    choose_index_encoded,
+    materialize_encoded,
+    p_part_column,
+    p_part_targets,
+    rebalance_hot_partitions,
+    term_hashes,
+)
 from jena_spark.checkpoint import CheckpointedExtraction
 
 N_FILES = 400
@@ -95,23 +104,27 @@ def test_encode_decode_roundtrip(spark, triples):
 
 
 def test_materialize_permutations_sorted_and_equal(spark, triples, tmp_path):
-    out = str(tmp_path / "mat")
-    paths = materialize(triples.select("graph", "subj", "pred", "obj"), out, n_partitions=4)
-    spo = spark.read.parquet(paths["spo"]).select("subj", "pred", "obj")
-    pos = spark.read.parquet(paths["pos"]).select("subj", "pred", "obj")
-    assert spo.exceptAll(pos).count() == 0 and pos.exceptAll(spo).count() == 0
-    # set semantics: no duplicate triples
-    assert spo.count() == spo.distinct().count()
+    out = str(tmp_path / "enc")
+    paths = materialize_encoded(
+        triples.select("graph", "subj", "pred", "obj"), out, n_partitions=4
+    )
+    # the three permutations hold the same id rows, with set semantics
+    ids = ["g_id", "s_id", "p_id", "o_id"]
+    spo = spark.read.parquet(paths["spo"]).select(*ids)
+    for perm in ("pos", "osp"):
+        other = spark.read.parquet(paths[perm]).select(*ids)
+        assert spo.exceptAll(other).count() == 0
+        assert other.exceptAll(spo).count() == 0
+    assert spo.count() == spo.distinct().count() > 0
     # index selection picks the right table and returns the right rows
     rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    got = choose_index(spark, out, p=rdf_type).count()
-    want = spo.filter(F.col("pred") == rdf_type).count()
+    (type_id,) = term_hashes(spark, [rdf_type])
+    got = choose_index_encoded(spark, out, p=rdf_type).count()
+    want = spo.filter(F.col("p_id") == type_id).count()
     assert got == want > 0
 
 
 def test_materialize_encoded_roundtrip(spark, triples, tmp_path):
-    from jena_spark.materialize import materialize_encoded, choose_index_encoded
-
     out = str(tmp_path / "enc")
     paths = materialize_encoded(
         triples.select("graph", "subj", "pred", "obj"), out, n_partitions=4
@@ -131,8 +144,6 @@ def test_choose_index_encoded_survives_torn_meta(spark, triples, tmp_path):
     """A meta.json truncated by a crash falls back to the unpruned scan:
     the predicate-bound lookup returns the same rows as with a valid
     sidecar instead of failing."""
-    from jena_spark.materialize import materialize_encoded, choose_index_encoded
-
     out = str(tmp_path / "enc")
     materialize_encoded(
         triples.select("graph", "subj", "pred", "obj"), out, n_partitions=4
@@ -152,21 +163,23 @@ def test_choose_index_encoded_survives_torn_meta(spark, triples, tmp_path):
     assert lookup() == want and want
 
 
-def test_salting_spreads_hot_predicate(spark, triples):
+def test_salting_spreads_hot_predicate(spark, triples, tmp_path):
     rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    salted = with_salted_partition(
-        triples.select("subj", "pred", "obj"), n_partitions=16, n_salts=8
+    label = "<http://bench.example/label>"
+    out = str(tmp_path / "enc")
+    materialize_encoded(
+        triples.select("subj", "pred", "obj"), out, n_partitions=16, n_salts=8
     )
-    hot_parts = (
-        salted.filter(F.col("pred") == rdf_type)
-        .select("p_part").distinct().count()
-    )
-    cold_parts = (
-        salted.filter(F.col("pred") == "<http://bench.example/label>")
-        .select("p_part").distinct().count()
-    )
-    assert hot_parts >= 4  # spread over salt buckets
-    assert cold_parts == 1  # non-hot predicates stay co-located
+    spo = spark.read.parquet(os.path.join(out, "spo"))
+    hot_id, cold_id = term_hashes(spark, [rdf_type, label])
+
+    def n_parts(p_id):
+        return (
+            spo.filter(F.col("p_id") == p_id).select("p_part").distinct().count()
+        )
+
+    assert n_parts(hot_id) >= 4  # spread over salt buckets
+    assert n_parts(cold_id) == 1  # non-hot predicates stay co-located
 
 
 def test_checkpoint_resume(spark, files, tmp_path):
@@ -323,24 +336,28 @@ def test_stream_dedup_multichunk_min(spark, tmp_path):
     assert got == [(1, "alpha")]
 
 
-def test_rebalance_hot_partitions_detects_and_repairs_skew(spark, tmp_path):
-    """Post-write skew repair: detection from p_part directory FILE
-    SIZES (no data scan), diagnosis partition-pruned to the fat
-    partitions, repair rewriting only the affected partitions —
-    untouched partition files stay byte-identical."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from jena_spark.materialize import (
-        choose_index_encoded,
-        materialize_encoded,
-        rebalance_hot_partitions,
+def test_dense_node_table_rejected_by_store(spark, tmp_path):
+    """The permutations carry hash ids, so a dense dictionary could never
+    decode them (every lookup would return zero rows): the build fails
+    loudly instead of leaving such a store."""
+    tri = spark.createDataFrame(
+        [("<a>", "<p>", "<b>"), ("<c>", "<p>", "<d>")],
+        ["subj", "pred", "obj"],
     )
+    with pytest.raises(RuntimeError, match="not the hash ids"):
+        materialize_encoded(
+            tri, str(tmp_path / "enc"), node_table=build_node_table(tri, dense=True)
+        )
 
-    hot_pred = "<http://e/hot>"
+
+HOT_PRED = "<http://e/hot>"
+
+
+def _skewed_store(spark, out):
+    """A store built WITHOUT salting over one dominant predicate, which
+    therefore lands in one fat partition."""
     rows = [
-        (f"<http://e/s{i}>", hot_pred, f"<http://e/o{i % 7}>")
+        (f"<http://e/s{i}>", HOT_PRED, f"<http://e/o{i % 7}>")
         for i in range(2000)
     ]
     rows += [
@@ -349,21 +366,67 @@ def test_rebalance_hot_partitions_detects_and_repairs_skew(spark, tmp_path):
         for j in range(12)
     ]
     tri = spark.createDataFrame(rows, ["subj", "pred", "obj"])
-    out = str(tmp_path / "enc")
-    # build WITHOUT salting: the hot predicate lands in one fat partition
-    materialize_encoded(
-        tri, out, n_partitions=16, n_salts=4, hot_predicates=()
-    )
-    hot_id = (
-        spark.createDataFrame([(hot_pred,)], ["t"])
-        .select(F.xxhash64("t").alias("h")).collect()[0]["h"]
-    )
+    materialize_encoded(tri, out, n_partitions=16, n_salts=4, hot_predicates=())
 
-    def perm_rows(perm):
-        return {
-            (r["s_id"], r["p_id"], r["o_id"])
-            for r in spark.read.parquet(os.path.join(out, perm)).collect()
-        }
+
+def _perm_rows(spark, out, perm):
+    return {
+        (r["s_id"], r["p_id"], r["o_id"])
+        for r in spark.read.parquet(os.path.join(out, perm)).collect()
+    }
+
+
+def _hot_parts(spark, out, perm, hot_id):
+    return {
+        r["p_part"]
+        for r in spark.read.parquet(os.path.join(out, perm))
+        .filter(F.col("p_id") == hot_id).select("p_part").distinct().collect()
+    }
+
+
+def _read_meta(out):
+    with open(os.path.join(out, "meta.json")) as f:
+        return json.load(f)
+
+
+def _assert_one_salting_rule(spark, out):
+    """Every row of every permutation sits in the partition the store's
+    salting rule gives its ids, and each predicate's rows stay inside
+    the partition-target set of that predicate."""
+    meta = _read_meta(out)
+    for perm in ENC_PERMUTATIONS:
+        df = spark.read.parquet(os.path.join(out, perm))
+        assert df.count() > 0, perm
+        assert df.filter(F.col("p_part") != p_part_column(meta)).count() == 0, perm
+        per_pred = df.groupBy("p_id").agg(F.collect_set("p_part").alias("parts"))
+        for r in per_pred.collect():
+            assert set(r["parts"]) <= p_part_targets(r["p_id"], meta), perm
+
+
+def test_one_salting_rule_places_every_row(spark, triples, tmp_path):
+    out = str(tmp_path / "enc")
+    materialize_encoded(
+        triples.select("graph", "subj", "pred", "obj"), out,
+        n_partitions=16, n_salts=8,
+    )
+    _assert_one_salting_rule(spark, out)
+    skewed = str(tmp_path / "skewed")
+    _skewed_store(spark, skewed)
+    _assert_one_salting_rule(spark, skewed)
+    assert rebalance_hot_partitions(spark, skewed, skew_factor=2.5)[
+        "detected_hot_ids"
+    ]
+    _assert_one_salting_rule(spark, skewed)
+
+
+def test_rebalance_hot_partitions_detects_and_repairs_skew(spark, tmp_path):
+    """Post-write skew repair: detection from p_part directory FILE
+    SIZES (no data scan), diagnosis partition-pruned to the fat
+    partitions, repair rewriting only the affected partitions —
+    untouched partition files stay byte-identical."""
+    out = str(tmp_path / "enc")
+    _skewed_store(spark, out)
+    (hot_id,) = term_hashes(spark, [HOT_PRED])
 
     def part_files(perm):
         files = {}
@@ -377,13 +440,9 @@ def test_rebalance_hot_partitions_detects_and_repairs_skew(spark, tmp_path):
                             files.setdefault(k, []).append(fh.read())
         return files
 
-    before = {perm: perm_rows(perm) for perm in ("spo", "pos", "osp")}
+    before = {perm: _perm_rows(spark, out, perm) for perm in ENC_PERMUTATIONS}
     files_before = part_files("spo")
-    hot_part_before = {
-        r["p_part"]
-        for r in spark.read.parquet(os.path.join(out, "spo"))
-        .filter(F.col("p_id") == hot_id).select("p_part").distinct().collect()
-    }
+    hot_part_before = _hot_parts(spark, out, "spo", hot_id)
     assert len(hot_part_before) == 1  # unsalted: one fat partition
 
     res = rebalance_hot_partitions(spark, out, skew_factor=2.5)
@@ -392,15 +451,10 @@ def test_rebalance_hot_partitions_detects_and_repairs_skew(spark, tmp_path):
     assert hot_part_before <= affected
 
     # rows preserved exactly, in every permutation
-    for perm in ("spo", "pos", "osp"):
-        assert perm_rows(perm) == before[perm], perm
+    for perm in ENC_PERMUTATIONS:
+        assert _perm_rows(spark, out, perm) == before[perm], perm
     # the hot predicate now spans multiple partitions
-    hot_parts_after = {
-        r["p_part"]
-        for r in spark.read.parquet(os.path.join(out, "spo"))
-        .filter(F.col("p_id") == hot_id).select("p_part").distinct().collect()
-    }
-    assert len(hot_parts_after) > 1
+    assert len(_hot_parts(spark, out, "spo", hot_id)) > 1
     # untouched partitions were never rewritten (byte-identical files)
     files_after = part_files("spo")
     for k, blobs in files_before.items():
@@ -408,8 +462,45 @@ def test_rebalance_hot_partitions_detects_and_repairs_skew(spark, tmp_path):
             assert files_after.get(k) == blobs, k
     # meta now carries the detected id, and the pruned index read still
     # returns every hot-predicate triple
-    got = choose_index_encoded(spark, out, p=hot_pred)
+    got = choose_index_encoded(spark, out, p=HOT_PRED)
     assert got.count() == 2000
     # idempotent: a second pass detects nothing new
     res2 = rebalance_hot_partitions(spark, out, skew_factor=2.5)
     assert res2["detected_hot_ids"] == []
+
+
+def test_rebalance_finishes_after_crash(spark, tmp_path, monkeypatch):
+    """A rebalance that dies between two permutation rewrites (SPO done,
+    POS raising) leaves its in-progress marker in meta.json; the re-run
+    rewrites every permutation over the marked partitions, so all three
+    end up salted with their rows intact, and clears the marker."""
+    from jena_spark import materialize as mat
+
+    out = str(tmp_path / "enc")
+    _skewed_store(spark, out)
+    (hot_id,) = term_hashes(spark, [HOT_PRED])
+    before = {perm: _perm_rows(spark, out, perm) for perm in ENC_PERMUTATIONS}
+
+    rewrite = mat._rewrite_partitions
+
+    def crash_at_pos(spark_, path, *args):
+        if os.path.basename(path) == "pos":
+            raise RuntimeError("injected crash")
+        rewrite(spark_, path, *args)
+
+    monkeypatch.setattr(mat, "_rewrite_partitions", crash_at_pos)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        rebalance_hot_partitions(spark, out, skew_factor=2.5)
+    assert _read_meta(out)["rebalance_in_progress"]["hot_ids"] == [hot_id]
+    assert len(_hot_parts(spark, out, "spo", hot_id)) > 1
+    assert len(_hot_parts(spark, out, "pos", hot_id)) == 1  # left unsalted
+
+    monkeypatch.setattr(mat, "_rewrite_partitions", rewrite)
+    res = rebalance_hot_partitions(spark, out, skew_factor=2.5)
+    assert res["detected_hot_ids"] == [hot_id]
+    assert "rebalance_in_progress" not in _read_meta(out)
+    for perm in ENC_PERMUTATIONS:
+        assert _perm_rows(spark, out, perm) == before[perm], perm
+        assert len(_hot_parts(spark, out, perm, hot_id)) > 1, perm
+    _assert_one_salting_rule(spark, out)
+    assert choose_index_encoded(spark, out, p=HOT_PRED).count() == 2000
