@@ -24,7 +24,7 @@ from jena_spark.extract import detect, extract_triples, run_extraction, lineage
 from jena_spark.sources import source_files_from_documents, trig_files_from_documents
 from jena_spark.nodetable import build_node_table, encode_triples
 from jena_spark.materialize import p_part_column, term_hashes
-from jena_spark.ops.algebra import bgp, facet_counts, path_seq, path_transitive
+from jena_spark.ops.algebra import bgp, facet_counts
 from jena_spark.pipelines import dedup as dd
 from jena_spark.pipelines import similarity as sim
 from jena_spark.pipelines import textstats as ts
@@ -542,8 +542,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return t1.unionAll(t2)
 
     def path_fixed_2hop(spark, sf):  # P_Seq: customer/inNation/inRegion
+        from jena_spark.ops.sparql import sparql_select
+
         tri = _geo_triples(spark, sf)
-        return path_seq(tri, ["<p:inNation>", "<p:inRegion>"])
+        return sparql_select(
+            tri, "SELECT ?src ?dst WHERE { ?src <p:inNation>/<p:inRegion> ?dst }"
+        )
 
     def path_distinct_2hop(spark, sf):
         # P_Distinct (round-4, ARQ DISTINCT(path)): ^inNation/inNation
@@ -560,13 +564,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def path_transitive_plus(spark, sf):  # P_OneOrMore over a chain graph
+        from jena_spark.ops.sparql import sparql_select
+
         n = _read(spark, sf, "nation")
         edges = n.filter(F.col("n_nationkey") >= 5).select(
             F.concat(F.lit("<n"), F.col("n_nationkey"), F.lit(">")).alias("subj"),
             F.lit("<p:next>").alias("pred"),
             F.concat(F.lit("<n"), F.col("n_nationkey") - 5, F.lit(">")).alias("obj"),
         )
-        return path_transitive(edges, "<p:next>")
+        return sparql_select(
+            edges, "SELECT ?src ?dst WHERE { ?src <p:next>+ ?dst }"
+        )
 
     q.update(
         path_fixed_2hop=path_fixed_2hop,

@@ -1,4 +1,4 @@
-"""SPARQL algebra over a triples DataFrame — BGP, paths, facets.
+"""SPARQL algebra over a triples DataFrame — BGP, closure, facets.
 
 The reference executes an Op tree through pull iterators
 (sparql/engine/main/OpExecutor.java:127-464).  Here a *basic graph
@@ -10,9 +10,9 @@ genuinely custom pieces:
 - :func:`bgp` — pattern → join-chain compilation with the reference's
   grounded-terms-first / rdf:type-penalized reorder heuristic
   (sparql/engine/optimizer/reorder/ReorderFixed.java:32-108);
-- :func:`path_*` — property-path evaluation (sparql/path/): fixed-length
-  paths flatten to BGP joins (TransformPathFlatten), ``+``/``*`` run an
-  iterative join-until-fixpoint loop;
+- :func:`closure` — the iterative join-until-fixpoint loop behind the
+  ``+``/``*`` property paths (``ops.sparql._compile_path``, the one
+  path evaluator) and the RDFS schema closures;
 - :func:`facet_counts` — the fork-added jena-text faceting feature
   (docs/FEAT_FACETS_SPEC.md; TextFacetCountsPF.java) which is exactly
   groupBy().count().orderBy().limit() in Spark.
@@ -23,7 +23,7 @@ canonical N-Triples encoding.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -118,44 +118,20 @@ def bgp(
 
 
 # ---------------------------------------------------------------------------
-# Property paths (sparql/path/, SURVEY.md §2.7)
+# Transitive closure (sparql/path/eval/, SURVEY.md §2.7)
 # ---------------------------------------------------------------------------
 
-def path_seq(triples: DataFrame, preds: Sequence[str]) -> DataFrame:
-    """P_Seq: fixed-length path p1/p2/… → BGP join chain
-    (PathCompiler / TransformPathFlatten parity).  Returns (src, dst)."""
-    pats: List[Pattern] = []
-    for i, p in enumerate(preds):
-        s = f"?v{i}" if i > 0 else "?src"
-        o = f"?v{i+1}" if i < len(preds) - 1 else "?dst"
-        pats.append((s, p, o))
-    return bgp(triples, pats).select("src", "dst")
+# closure()'s driver-side gates; its docstring gives the reasoning
+DRIVER_EDGE_CAP = 10_000
+DRIVER_PAIR_CAP = 2_000_000
 
 
-def path_alt(triples: DataFrame, preds: Sequence[str]) -> DataFrame:
-    """P_Alt: union of single steps."""
-    out = None
-    for p in preds:
-        step = triples.filter(F.col("pred") == p).select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst")
-        )
-        out = step if out is None else out.unionAll(step)
-    return out.distinct()
-
-
-def path_inverse(triples: DataFrame, pred: str) -> DataFrame:
-    """P_Inverse (^p): column swap."""
-    return triples.filter(F.col("pred") == pred).select(
-        F.col("obj").alias("src"), F.col("subj").alias("dst")
-    )
-
-
-def _py_closure(rows, keyed: bool, max_iters: int, what: str, pair_cap: int):
+def _py_closure(rows, keyed: bool, max_iters: int, what: str):
     """Driver-side semi-naive closure over collected edge rows — the
     same round structure as the distributed loop (so the max_iters
     convergence contract raises identically).  Returns the reach set as
-    row tuples, or None if it outgrows ``pair_cap`` (caller falls back
-    to the distributed fixpoint)."""
+    row tuples, or None if it outgrows :data:`DRIVER_PAIR_CAP` (caller
+    falls back to the distributed fixpoint)."""
     adj: dict = {}
     reach = set()
     for r in rows:
@@ -178,7 +154,7 @@ def _py_closure(rows, keyed: bool, max_iters: int, what: str, pair_cap: int):
                 else [(s, d) for _, s, d in reach]
             )
         reach |= new
-        if len(reach) > pair_cap:
+        if len(reach) > DRIVER_PAIR_CAP:
             return None
         frontier = new
     raise RuntimeError(
@@ -187,13 +163,7 @@ def _py_closure(rows, keyed: bool, max_iters: int, what: str, pair_cap: int):
     )
 
 
-def closure(
-    rel: DataFrame,
-    max_iters: int = 50,
-    what: str = "path",
-    driver_edge_cap: int = 10_000,
-    driver_pair_cap: int = 2_000_000,
-) -> DataFrame:
+def closure(rel: DataFrame, max_iters: int = 50, what: str = "path") -> DataFrame:
     """Transitive closure of an arbitrary (src, dst) relation —
     iterative join-until-fixpoint (semi-naive: only the frontier joins
     each round; each round's result is localCheckpoint()ed to truncate
@@ -206,14 +176,14 @@ def closure(
     once the frontier shrinks below the broadcast threshold.
 
     Round 7: when the distinct edge set is driver-small (≤
-    ``driver_edge_cap`` rows — the same small-side reasoning as a
+    :data:`DRIVER_EDGE_CAP` rows — the same small-side reasoning as a
     broadcast join, guide §3.1) the fixpoint runs on collected rows
     instead: every distributed round costs ~4 jobs of scheduler
     latency, so a diameter-4 closure over a few dozen edges paid ~20
     jobs for microseconds of actual work.  The rows are collected and
     re-emitted verbatim (no value transformation), the round structure
     and the max_iters contract are identical, and a reach set
-    outgrowing ``driver_pair_cap`` falls back to the distributed loop
+    outgrowing :data:`DRIVER_PAIR_CAP` falls back to the distributed loop
     (a small EDGE set does not bound the closure size — a 10k-node
     chain closes to ~50M pairs).
     """
@@ -222,10 +192,9 @@ def closure(
     keys = ["g"] if "g" in rel.columns else []
     cols = keys + ["src", "dst"]
     edges = rel.select(*cols).distinct().persist()
-    if edges.count() <= driver_edge_cap:
+    if edges.count() <= DRIVER_EDGE_CAP:
         rows = edges.collect()
-        result = _py_closure(rows, bool(keys), max_iters, what,
-                             driver_pair_cap)
+        result = _py_closure(rows, bool(keys), max_iters, what)
         if result is not None:
             spark = rel.sparkSession
             out = spark.createDataFrame(result, schema=edges.schema)
@@ -255,58 +224,6 @@ def closure(
             f"raise max_iters (rounds needed = graph diameter)"
         )
     return reach
-
-
-def all_nodes(triples: DataFrame) -> DataFrame:
-    """Every subject/object — the identity relation's domain for
-    zero-length path steps."""
-    return (
-        triples.select(F.col("subj").alias("n"))
-        .unionAll(triples.select(F.col("obj").alias("n")))
-        .distinct()
-    )
-
-
-def path_transitive(
-    triples: DataFrame,
-    pred: str,
-    zero: bool = False,
-    max_iters: int = 50,
-) -> DataFrame:
-    """P_OneOrMore / P_ZeroOrMore over a single predicate (see
-    :func:`closure` for the evaluation strategy and scale notes)."""
-    edges = triples.filter(F.col("pred") == pred).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    reach = closure(edges, max_iters, what=f"path_transitive({pred!r})")
-    if zero:
-        nodes = all_nodes(triples)
-        self_loops = nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
-        reach = reach.unionAll(self_loops).distinct()
-    return reach
-
-
-def path_zero_or_one(triples: DataFrame, pred: str) -> DataFrame:
-    step = triples.filter(F.col("pred") == pred).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    nodes = (
-        triples.select(F.col("subj").alias("n"))
-        .unionAll(triples.select(F.col("obj").alias("n")))
-        .distinct()
-    )
-    return step.unionAll(
-        nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
-    ).distinct()
-
-
-def path_negated(triples: DataFrame, excluded: Sequence[str]) -> DataFrame:
-    """P_NegPropSet !(p1|p2|…)."""
-    return (
-        triples.filter(~F.col("pred").isin(list(excluded)))
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .distinct()
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -111,6 +111,9 @@ def patch_ops_stream(patches: DataFrame, text_col: str = "patch") -> DataFrame:
     return patches.mapInPandas(expand, schema)
 
 
+QUAD_STORE_SCHEMA = "graph string, subj string, pred string, obj string, p_part int"
+
+
 def apply_patch_batch(target_dir: str, n_parts: int = 16):
     """foreachBatch function applying an RDF-Patch-style (seq, op, graph,
     subj, pred, obj) micro-batch to a parquet quad store partitioned by
@@ -121,8 +124,9 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
     Order-correct: per quad, only the LAST op in the batch decides final
     membership (max_by(op, seq)) — an A…D run of the same quad within
     one micro-batch ends up deleted, exactly like the ordered run
-    coalescing in rdfpatch.apply_patch.  Batches without a ``seq``
-    column (legacy producers) fall back to delete-then-add.
+    coalescing in rdfpatch.apply_patch.  A batch without a ``seq``
+    column raises ``ValueError``: op order is what makes the fold
+    correct, and :func:`patch_ops_stream` always emits it.
 
     SUB-LINEAR in |store|: the delta's touched ``p_part`` values are
     collected (≤ n_parts, driver-small), only those partitions are read
@@ -130,8 +134,13 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
     via dynamic partition overwrite — untouched partition files are
     never opened or replaced.  At real scale the same shape is an
     Iceberg MERGE over a predicate-bucketed table; n_parts scales with
-    the cluster (here 16 for local tests).  A legacy unpartitioned store
-    is migrated in place on first contact (one full rewrite, once)."""
+    the cluster (here 16 for local tests).  The store is read with the
+    fixed :data:`QUAD_STORE_SCHEMA` (no footer inference) and only when
+    its directory exists; a read error propagates instead of being taken
+    for an empty store.  Only ``p_part``-partitioned stores written by
+    this sink are supported: a store with parquet files in its root and
+    no ``p_part=`` directories reads them as ``p_part = null``, so their
+    rows are hidden once the first batch writes its partitions."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         import os
@@ -140,17 +149,20 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         from .materialize import atomic_write_json
         from .ops.update import _minus, _union
 
+        if "seq" not in batch.columns:
+            raise ValueError(
+                "patch batch has no 'seq' column: op order is required "
+                "(patch_ops_stream emits it)"
+            )
         spark = batch.sparkSession
         part = F.pmod(F.xxhash64(F.col("pred")), F.lit(n_parts)).cast("int")
-        if "seq" in batch.columns:
-            # last op per quad decides membership after this batch
-            last = (
-                batch.groupBy("graph", "subj", "pred", "obj")
-                .agg(F.max_by("op", "seq").alias("op"))
-            )
-        else:
-            last = batch.dropDuplicates()
-        last = last.withColumn("p_part", part).localCheckpoint(eager=True)
+        # last op per quad decides membership after this batch
+        last = (
+            batch.groupBy("graph", "subj", "pred", "obj")
+            .agg(F.max_by("op", "seq").alias("op"))
+            .withColumn("p_part", part)
+            .localCheckpoint(eager=True)
+        )
         adds = last.filter(F.col("op") == "A").drop("op")
         dels = last.filter(F.col("op") == "D").drop("op")
         touched = [r["p_part"] for r in last.select("p_part").distinct().collect()]
@@ -158,39 +170,12 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
             last.unpersist()
             return
 
-        # Migrate a legacy Spark-visible meta.json BEFORE reading the
-        # store: sitting next to the p_part= dirs it is listed as a data
-        # file, the footer check throws, the except below would treat
-        # the store as EMPTY, and this batch's touched partitions would
-        # be rewritten without their pre-existing rows (data loss).
-        meta_path = os.path.join(target_dir, "_meta.json")
-        legacy_meta = os.path.join(target_dir, "meta.json")
-        if os.path.isfile(legacy_meta):
-            if os.path.exists(meta_path):
-                os.remove(legacy_meta)
-            else:
-                os.rename(legacy_meta, meta_path)
-
         quad_cols = ["graph", "subj", "pred", "obj"]
-        try:
-            cur = spark.read.parquet(target_dir)
-            exists = True
-        except Exception:
-            cur = spark.createDataFrame(
-                [],
-                "graph string, subj string, pred string, obj string, p_part int",
-            )
-            exists = False
-        if exists and "p_part" not in cur.columns:
-            # one-time migration of a legacy unpartitioned store
-            mig = cur.withColumn("p_part", part)
-            mig.write.mode("overwrite").partitionBy("p_part").parquet(
-                target_dir + "_mig"
-            )
-            shutil.rmtree(target_dir)
-            os.rename(target_dir + "_mig", target_dir)
-            cur = spark.read.parquet(target_dir)
-
+        exists = os.path.isdir(target_dir)
+        if exists:
+            cur = spark.read.schema(QUAD_STORE_SCHEMA).parquet(target_dir)
+        else:
+            cur = spark.createDataFrame([], QUAD_STORE_SCHEMA)
         cur = cur.filter(F.col("p_part").isin(touched)).select(*quad_cols)
         nxt = _union(
             _minus(cur, dels.select(*quad_cols)),
@@ -228,8 +213,8 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         from .cdt import CDT_TERM_SUFFIXES
 
         # "_"-prefixed so Spark's parquet reader skips it (the sidecar
-        # lives NEXT TO the p_part= dirs; a legacy bare meta.json was
-        # renamed before the store read above)
+        # lives NEXT TO the p_part= dirs)
+        meta_path = os.path.join(target_dir, "_meta.json")
         try:
             with open(meta_path) as f:
                 meta = json.load(f)

@@ -22,6 +22,7 @@ SUBSET = [
     "alg_group_agg",
     "alg_join",
     "alg_agg_variety",
+    "path_fixed_2hop",
     "path_transitive_plus",
     "dedup_minhash_sigs",
     "dedup_jaccard",

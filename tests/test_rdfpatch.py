@@ -370,39 +370,50 @@ def test_patch_apply_matches_set_model_random_sequences(spark, tmp_path):
         assert got2 == m, (trial, "apply_patch_batch", sorted(ops))
 
 
-def test_legacy_meta_json_in_store_root_does_not_lose_rows(spark, tmp_path):
-    """A store carrying the pre-round-6 Spark-visible meta.json next to
-    its p_part= dirs must be readable: the sidecar is renamed to
-    _meta.json BEFORE the store read.  Regression: the footer error the
-    bare json caused was swallowed by the store-read fallback, the
-    store was treated as empty, and every touched partition lost its
-    pre-existing rows."""
-    import json
-    import os
-
-    from jena_spark.streaming import apply_patch_batch
+def test_stray_root_file_does_not_lose_rows(spark, tmp_path):
+    """A non-parquet file in the store root next to the p_part= dirs
+    must never make the sink rewrite a touched partition as if the store
+    were empty: the second batch either keeps the first batch's quad or
+    raises with the store unchanged."""
+    from jena_spark.streaming import QUAD_STORE_SCHEMA, apply_patch_batch
 
     store = str(tmp_path / "quads")
     apply = apply_patch_batch(store, n_parts=4)
     schema = ("seq long, op string, graph string, subj string, "
               "pred string, obj string")
-    apply(spark.createDataFrame(
-        [(1, "A", None, "<http://e/a>", "<http://e/p>", '"v1"')],
-        schema), 0)
-    # simulate the legacy layout
-    os.rename(os.path.join(store, "_meta.json"),
-              os.path.join(store, "meta.json"))
-    # second batch adds a quad with the SAME predicate → same p_part;
-    # under the bug, <a> vanished because cur read as empty
-    apply(spark.createDataFrame(
-        [(1, "A", None, "<http://e/b>", "<http://e/p>", '"v2"')],
-        schema), 1)
-    got = {(r["subj"], r["obj"]) for r in
-           spark.read.parquet(store).select("subj", "obj").collect()}
-    assert got == {("<http://e/a>", '"v1"'), ("<http://e/b>", '"v2"')}
-    assert not os.path.exists(os.path.join(store, "meta.json"))
-    with open(os.path.join(store, "_meta.json")) as f:
-        assert json.load(f)["has_cdt"] is False
+    a = (None, "<http://e/a>", "<http://e/p>", '"v1"')
+    b = (None, "<http://e/b>", "<http://e/p>", '"v2"')
+
+    def quads():
+        return {tuple(r) for r in spark.read.schema(QUAD_STORE_SCHEMA)
+                .parquet(store).select("graph", "subj", "pred", "obj")
+                .collect()}
+
+    apply(spark.createDataFrame([(1, "A") + a], schema), 0)
+    with open(os.path.join(store, "notes.txt"), "w") as f:
+        f.write("not a parquet file\n")
+    # same predicate → same p_part, so the first quad's partition is
+    # read and rewritten
+    try:
+        apply(spark.createDataFrame([(1, "A") + b], schema), 1)
+    except Exception:
+        assert quads() == {a}
+    else:
+        assert quads() == {a, b}
+
+
+def test_patch_batch_without_seq_raises(spark, tmp_path):
+    """Op order is what makes the last-op-wins fold correct: a batch
+    without ``seq`` is rejected before the store is touched."""
+    from jena_spark.streaming import apply_patch_batch
+
+    store = str(tmp_path / "quads")
+    batch = spark.createDataFrame(
+        [("A", None, "<http://e/a>", "<http://e/p>", '"v1"')],
+        "op string, graph string, subj string, pred string, obj string")
+    with pytest.raises(ValueError, match="seq"):
+        apply_patch_batch(store, n_parts=4)(batch, 0)
+    assert not os.path.exists(store)
 
 
 def test_crashed_sidecar_write_leaves_store_readable(spark, tmp_path, monkeypatch):
