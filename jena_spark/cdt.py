@@ -43,7 +43,7 @@ XSD = "http://www.w3.org/2001/XMLSchema#"
 
 # encoded-term suffixes that mark a cdt:List / cdt:Map literal — shared by
 # the query-time CDT activation probe (ops/sparql._data_has_cdt) and the
-# build-time has_cdt metadata writers (materialize, streaming patch sink)
+# has_cdt flag the streaming patch sink keeps in its store's _meta.json
 CDT_TERM_SUFFIXES = (f"^^<{LIST_DT}>", f"^^<{MAP_DT}>")
 
 _LIST_SUFFIX = f'"^^<{LIST_DT}>'

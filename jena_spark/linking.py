@@ -14,11 +14,11 @@ Pipeline:
    and shingle Jaccard; accept by threshold.
 
 Scale (100 TB design point, same guards as ``pipelines.dedup``):
-ONE mention×entity join on (band_idx, band_key) covers every band — no
-per-band join loop.  Buckets are pre-counted per side; buckets present
+ONE exchange on (band_idx, band_key) covers every band — no per-band
+join loop.  A window counts each bucket's rows per side; buckets present
 on only one side are pruned (they can't produce a pair), and buckets
 whose side exceeds ``max_bucket_size`` are DROPPED with their mass
-logged — a hot code identifier (``get``, ``set``, ``data``) with 10^6
+loggable — a hot code identifier (``get``, ``set``, ``data``) with 10^6
 mentions against 10^3 same-bucket entities would emit 10^9 pairs and
 kill the job; AQE spreads a merely-large bucket's shuffle, but only
 the cap shrinks the quadratic *output*.
@@ -29,7 +29,7 @@ from __future__ import annotations
 import random
 from typing import List, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .pipelines.dedup import minhash_signatures, _shingles, _band_structs
@@ -52,68 +52,65 @@ def lsh_candidates(
 ) -> DataFrame:
     """(mention, entity_iri) candidate pairs via shared LSH band buckets.
 
-    One capped mention×entity join on (band_idx, band_key) — the
-    two-sided form of ``pipelines.dedup.minhash_candidates`` (same band
-    keys via ``_band_structs``).  Buckets with no partner side are
-    pruned before the join; buckets where either side exceeds
-    ``max_bucket_size`` are dropped (``log_fn`` gets one line with the
-    dropped bucket count and pair mass so truncation is never silent).
+    The banding of ``pipelines.dedup.minhash_candidates`` (same band
+    keys via ``_band_structs``) over one table holding both sides: the
+    distinct normalized forms of mentions and entities get their
+    signatures in one pass, and a window over (band_idx, band_key)
+    counts each bucket's mention rows and entity rows.  A bucket is kept
+    when each side has 1..``max_bucket_size`` rows; its pairs are the
+    cross product of its two sides, grouped on the window's partitioning
+    so the banded table is exchanged once.  ``log_fn`` gets one line
+    with the dropped over-cap bucket count and their pair mass, so
+    truncation is never silent.
     """
-    rows = num_perm // bands
     m = mentions.select(
-        F.col(mention_col).alias("mention"), normalized(F.col(mention_col)).alias("norm")
+        F.col(mention_col).alias("mention"), normalized(F.col(mention_col)).alias("m_norm")
     ).distinct()
     e = entities.select(
         F.col("entity_iri"),
         F.col(entity_col).alias("entity_name"),
-        normalized(F.col(entity_col)).alias("norm"),
+        normalized(F.col(entity_col)).alias("e_norm"),
     ).distinct()
-
-    def signatures(df: DataFrame) -> DataFrame:
-        sigs = minhash_signatures(
-            df.withColumn("__txt", F.col("norm")),
-            text_col="__txt",
-            id_col="norm",
-            k=k,
-            num_perm=num_perm,
-        ).dropDuplicates(["norm"])
-        return df.join(sigs, "norm")
-
-    sig_cols = [f"mh_{i}" for i in range(num_perm)]
-    bs = _band_structs(sig_cols, bands, rows)
-    m_long = (
-        signatures(m)
-        .select("mention", F.col("norm").alias("m_norm"), F.explode(bs).alias("bk"))
-        .select("mention", "m_norm", "bk.band_idx", "bk.band_key")
-        .persist()
-    )
-    e_long = (
-        signatures(e)
-        .select(
-            "entity_iri",
-            "entity_name",
-            F.col("norm").alias("e_norm"),
-            F.explode(bs).alias("bk"),
+    # one row per mention or entity: its normalized form and, in the
+    # column of its side, the row itself (the other side's is null).  A
+    # null form has no signature; dropping it here rather than in the
+    # join gives both readers of ``both`` one plan, so its shuffles run once
+    both = (
+        m.select(F.col("m_norm").alias("norm"), F.struct(*m.columns).alias("m"))
+        .unionByName(
+            e.select(F.col("e_norm").alias("norm"), F.struct(*e.columns).alias("e")),
+            allowMissingColumns=True,
         )
-        .select("entity_iri", "entity_name", "e_norm", "bk.band_idx", "bk.band_key")
-        .persist()
+        .filter(F.col("norm").isNotNull())
     )
+    sigs = minhash_signatures(
+        both.select("norm").distinct().withColumn("__txt", F.col("norm")),
+        text_col="__txt",
+        id_col="norm",
+        k=k,
+        num_perm=num_perm,
+    )
+    bs = _band_structs([f"mh_{i}" for i in range(num_perm)], bands, num_perm // bands)
     keys = ["band_idx", "band_key"]
-    # inner join of the per-side counts prunes one-sided buckets for free
-    counts = (
-        m_long.groupBy(*keys).agg(F.count("*").alias("m_cnt"))
-        .join(e_long.groupBy(*keys).agg(F.count("*").alias("e_cnt")), keys)
+    w = Window.partitionBy(*keys)
+    counted = (
+        both.join(sigs, "norm")
+        .select("m", "e", F.explode(bs).alias("bk"))
+        .select("m", "e", "bk.band_idx", "bk.band_key")
+        .select(
+            "*", F.count("m").over(w).alias("m_cnt"), F.count("e").over(w).alias("e_cnt")
+        )
+        .filter((F.col("m_cnt") > 0) & (F.col("e_cnt") > 0))
     )
+    over_cap = (F.col("m_cnt") > max_bucket_size) | (F.col("e_cnt") > max_bucket_size)
     if log_fn is not None:
+        # each bucket has m_cnt mention rows, each carrying e_cnt, so
+        # their e_cnt sum is the bucket's pair mass m_cnt·e_cnt
         dropped = (
-            counts.filter(
-                (F.col("m_cnt") > max_bucket_size) | (F.col("e_cnt") > max_bucket_size)
-            )
+            counted.filter(over_cap & F.col("m").isNotNull())
             .agg(
-                F.count("*").alias("n_buckets"),
-                F.coalesce(F.sum(F.col("m_cnt") * F.col("e_cnt")), F.lit(0)).alias(
-                    "n_pairs"
-                ),
+                F.countDistinct(*keys).alias("n_buckets"),
+                F.coalesce(F.sum("e_cnt"), F.lit(0)).alias("n_pairs"),
             )
             .collect()[0]
         )
@@ -123,22 +120,17 @@ def lsh_candidates(
                 f"buckets (side > {max_bucket_size}) covering "
                 f"{dropped['n_pairs']} candidate pairs"
             )
-    eligible = counts.filter(
-        (F.col("m_cnt") <= max_bucket_size) & (F.col("e_cnt") <= max_bucket_size)
-    ).select(*keys)
-    mf = m_long.join(eligible, keys, "left_semi")
-    ef = e_long.join(eligible, keys, "left_semi")
-    out = (
-        mf.join(ef, keys)
-        .select("mention", "m_norm", "entity_iri", "entity_name", "e_norm")
+    # grouping needs no exchange: the window already partitioned the rows
+    # by bucket, and a kept bucket's lists hold ≤ max_bucket_size rows each
+    return (
+        counted.filter(~over_cap)
+        .groupBy(*keys)
+        .agg(F.collect_list("m").alias("ms"), F.collect_list("e").alias("es"))
+        .select(F.explode("ms").alias("m"), "es")
+        .select("m.*", F.explode("es").alias("e"))
+        .select("mention", "m_norm", "e.*")
         .distinct()
-        # pin the (capped) candidates, then release the banded tables —
-        # cache hygiene for long-lived sessions (see dedup.py twin)
-        .localCheckpoint(eager=True)
     )
-    m_long.unpersist(blocking=True)
-    e_long.unpersist(blocking=True)
-    return out
 
 
 def score_candidates(

@@ -89,18 +89,6 @@ def p_part_targets(p_id: int, layout: dict) -> Set[int]:
     }
 
 
-def _has_cdt_terms(nodes: DataFrame) -> bool:
-    """Does any node-table term carry a cdt:List / cdt:Map datatype?
-    One column-pruned, early-exit scan."""
-    from .cdt import CDT_TERM_SUFFIXES
-
-    cond = None
-    for suf in CDT_TERM_SUFFIXES:
-        e = F.col("term").endswith(suf)
-        cond = e if cond is None else (cond | e)
-    return not nodes.filter(cond).isEmpty()
-
-
 def atomic_write_json(path: str, obj) -> None:
     """Write ``obj`` as JSON to ``path`` so that readers only ever see
     the old or the complete new file: dump to a temp file in the same
@@ -168,15 +156,15 @@ def materialize_encoded(
         node_table = build_node_table(triples)
     nodes_path = os.path.join(out_dir, "nodes")
 
-    def build_dictionary() -> bool:
-        """nodes write → id audit → has_cdt flag, as one serial chain.
+    def build_dictionary() -> None:
+        """nodes write → id audit, as one serial chain.
         Round 7: the chain is INDEPENDENT of the permutation pipeline
         below (hash ids are minted inline, encode never joins the
         dictionary), so it runs on a driver thread concurrently with the
         encode/dedup/sort/write jobs (guide §2.6 — overlapping
         independent jobs lets the second pipeline back-fill the first
         one's stragglers; serially these stages added ~2.5 s of dead
-        time at sf1).  Returns the has_cdt flag for meta.json."""
+        time at sf1)."""
         node_table.write.mode("overwrite").parquet(nodes_path)
         # a 64-bit hash collision SILENTLY merges two graph nodes — at a
         # 10^11-term vocabulary the birthday bound makes that an expected
@@ -184,11 +172,7 @@ def materialize_encoded(
         # written dictionary (reads the parquet back, so it costs no
         # extra lineage) and fails the build loudly — also when the ids
         # are not the hash ids the permutations carry.
-        nodes = spark.read.parquet(nodes_path)
-        assert_ids_unique(nodes)
-        # has_cdt from the node table (distinct terms — far smaller than
-        # the triple set, column-pruned, early exit)
-        return _has_cdt_terms(nodes)
+        assert_ids_unique(spark.read.parquet(nodes_path))
 
     dict_pool = ThreadPoolExecutor(max_workers=1)
     dict_future = dict_pool.submit(build_dictionary)
@@ -233,7 +217,7 @@ def materialize_encoded(
     try:
         with ThreadPoolExecutor(max_workers=len(ENC_PERMUTATIONS)) as ex:
             paths.update(ex.map(write_perm, ENC_PERMUTATIONS))
-        layout["has_cdt"] = dict_future.result()  # join the dictionary chain
+        dict_future.result()  # join the dictionary chain
     finally:
         salted.unpersist()
         dict_pool.shutdown(wait=True)

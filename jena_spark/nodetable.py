@@ -17,10 +17,9 @@ Spark design:
   needed only when downstream wants array-indexable ids;
   costs one extra shuffle of the distinct-term set.  The encoded store
   cannot read them (its permutations are keyed by hash ids).
-- triples encode by three joins (subj/pred/obj → id) when given a node
-  table.  The node table is **broadcast when small**, **sort-merge/
-  shuffle joined when large** (north-star rule); AQE makes the final
-  call from runtime stats unless the ``broadcast`` knob forces it.
+- triples encode inline (:func:`encode_triples`): each id is the hash
+  of its term, so encoding never joins the node table.  Only decode
+  (:func:`decode_triples`) joins it, at the sink.
 """
 
 from __future__ import annotations
@@ -106,40 +105,17 @@ def assert_ids_unique(node_table: DataFrame) -> None:
         )
 
 
-def encode_triples(
-    triples: DataFrame,
-    node_table: DataFrame | None = None,
-    broadcast: bool | None = None,
-) -> DataFrame:
-    """triples(strings) → triples(ids).
-
-    With hash ids (node_table=None or default table) NO join is needed at
-    all — ids are computed inline per column (zero shuffle).  A node_table
-    argument forces the join path (dense ids / dictionary verification):
-    ``broadcast=True`` broadcasts it, ``False`` forces sort-merge, ``None``
-    lets Catalyst+AQE pick from stats.
-    """
-    if node_table is None:
-        keep = [c for c in triples.columns if c not in ("subj", "pred", "obj")]
-        return triples.select(
-            *keep,
-            term_id(F.col("subj")).alias("s_id"),
-            term_id(F.col("pred")).alias("p_id"),
-            term_id(F.col("obj")).alias("o_id"),
-        )
-
-    nt = node_table
-    if broadcast is True:
-        nt = F.broadcast(nt)
-    elif broadcast is False:
-        nt = nt.hint("merge")
-
-    out = triples
-    for col, idc in (("subj", "s_id"), ("pred", "p_id"), ("obj", "o_id")):
-        n = nt.withColumnRenamed("term", col).withColumnRenamed("node_id", idc)
-        out = out.join(n, col, "left")
-    keep = [c for c in out.columns if c not in ("subj", "pred", "obj")]
-    return out.select(*keep)
+def encode_triples(triples: DataFrame) -> DataFrame:
+    """triples(strings) → triples(ids): each id is :func:`term_id` of
+    its term, computed inline per column — no node-table join, no
+    shuffle."""
+    keep = [c for c in triples.columns if c not in ("subj", "pred", "obj")]
+    return triples.select(
+        *keep,
+        term_id(F.col("subj")).alias("s_id"),
+        term_id(F.col("pred")).alias("p_id"),
+        term_id(F.col("obj")).alias("o_id"),
+    )
 
 
 def decode_triples(encoded: DataFrame, node_table: DataFrame) -> DataFrame:

@@ -146,6 +146,7 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         import os
         import shutil
 
+        from .cdt import CDT_TERM_SUFFIXES
         from .materialize import atomic_write_json
         from .ops.update import _minus, _union
 
@@ -165,7 +166,17 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         )
         adds = last.filter(F.col("op") == "A").drop("op")
         dels = last.filter(F.col("op") == "D").drop("op")
-        touched = [r["p_part"] for r in last.select("p_part").distinct().collect()]
+        # the touched partitions and whether the delta adds a CDT literal,
+        # from one pass over the (checkpointed) delta
+        cdt = F.lit(False)
+        for c in ("subj", "obj"):
+            for suf in CDT_TERM_SUFFIXES:
+                cdt = cdt | F.col(c).endswith(suf)
+        summary = last.agg(
+            F.collect_set("p_part").alias("touched"),
+            F.bool_or((F.col("op") == "A") & cdt).alias("adds_cdt"),
+        ).first()
+        touched = summary["touched"]
         if not touched:
             last.unpersist()
             return
@@ -203,14 +214,12 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
             shutil.rmtree(
                 os.path.join(target_dir, f"p_part={k}"), ignore_errors=True
             )
-        # keep the store's build-time CDT flag fresh (ops/sparql.
-        # _meta_has_cdt trusts it): OR in the delta's CDT presence — the
-        # check is delta-sized, never a store scan.  Deletes only ever
-        # leave a conservative true, which costs a pessimized plan, never
-        # a wrong answer.
+        # keep the store's CDT flag fresh (ops/sparql._meta_has_cdt
+        # trusts it): OR in the delta's CDT presence — the check is
+        # delta-sized, never a store scan.  Deletes only ever leave a
+        # conservative true, which costs a pessimized plan, never a wrong
+        # answer.
         import json
-
-        from .cdt import CDT_TERM_SUFFIXES
 
         # "_"-prefixed so Spark's parquet reader skips it (the sidecar
         # lives NEXT TO the p_part= dirs)
@@ -233,12 +242,7 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
             else:
                 meta["has_cdt"] = False
         if meta.get("has_cdt") is False:
-            cond = None
-            for c in ("subj", "obj"):
-                for suf in CDT_TERM_SUFFIXES:
-                    e = F.col(c).endswith(suf)
-                    cond = e if cond is None else (cond | e)
-            meta["has_cdt"] = not adds.filter(cond).isEmpty()
+            meta["has_cdt"] = bool(summary["adds_cdt"])
         atomic_write_json(meta_path, meta)
         nxt.unpersist()
         last.unpersist()  # symmetric with nxt: thousands of micro-batches

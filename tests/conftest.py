@@ -1,9 +1,12 @@
 import os
 import sys
+import uuid
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+pytest_plugins = ["pytester"]
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
@@ -16,6 +19,24 @@ def spark():
     s = get_spark(app="jena_spark_tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` runs ``fn`` and returns how many Spark jobs it
+    submitted, counted through a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"jobs_of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job ceiling probe")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 # --- conformance layers that need the Jena reference checkout ---------------
@@ -49,7 +70,10 @@ def pytest_terminal_summary(terminalreporter):
     ran, skipped, n_skipped = set(), set(), 0
     for reports in terminalreporter.stats.values():
         for rep in reports:
-            if "reference_corpus" not in getattr(rep, "keywords", ()):
+            # "deselected" holds collected items, not reports
+            if not isinstance(rep, pytest.TestReport):
+                continue
+            if "reference_corpus" not in rep.keywords:
                 continue
             layer = rep.nodeid.split("::")[0]
             if rep.skipped and reason in str(rep.longrepr):

@@ -297,26 +297,6 @@ def test_cdt_meta_flag_true_for_cdt_store(spark, tmp_path, monkeypatch):
     assert sp._data_has_cdt(df) is True
 
 
-def test_cdt_meta_flag_encoded_store(spark, tmp_path):
-    from jena_spark.materialize import materialize_encoded
-    import json
-
-    rows = [("<http://e/a>", "<http://e/p>", f'"[1]"^^<{CDT_LIST}>'),
-            ("<http://e/b>", "<http://e/p>", '"plain"')]
-    out = str(tmp_path / "enc")
-    materialize_encoded(spark.createDataFrame(rows, ["subj", "pred", "obj"]),
-                        out, n_partitions=2)
-    with open(out + "/meta.json") as f:
-        assert json.load(f)["has_cdt"] is True
-
-    out2 = str(tmp_path / "enc2")
-    materialize_encoded(
-        spark.createDataFrame(rows[1:], ["subj", "pred", "obj"]),
-        out2, n_partitions=2)
-    with open(out2 + "/meta.json") as f:
-        assert json.load(f)["has_cdt"] is False
-
-
 def test_cdt_meta_not_trusted_past_union(spark, tmp_path):
     """A union with in-memory rows can add CDT literals invisible to
     inputFiles(); the metadata shortcut must refuse such plans and fall

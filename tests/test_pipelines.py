@@ -158,12 +158,15 @@ def test_sigs_and_sets_matches_split_stages(spark):
             assert row["sh"] is None, did
 
 
+# four near-dup blocks plus a null and a short text
+_BLOCK_DOCS = [(i, f"common words block {i % 4} repeated across documents")
+               for i in range(30)] + [(30, None), (31, "xy")]
+
+
 def test_dedup_jaccard_pipeline_matches_split(spark, monkeypatch):
     """The fused dedup_jaccard pipeline (both gate sides) must equal the
     split sigs → candidates → jaccard_pairs chain row-for-row."""
-    rows = [(i, f"common words block {i % 4} repeated across documents")
-            for i in range(30)] + [(30, None), (31, "xy")]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = spark.createDataFrame(_BLOCK_DOCS, ["doc_id", "text"])
     sigs = dd.minhash_signatures(docs, k=5, num_perm=8)
     cands = dd.minhash_candidates(sigs, bands=2, rows_per_band=4)
     split = {(r["id_a"], r["id_b"]): r["jaccard"]
@@ -557,6 +560,24 @@ def test_linking_pr_gates(spark):
     recall = correct / gold.count()
     assert precision >= 0.9, f"precision {precision:.3f}"
     assert recall >= 0.9, f"recall {recall:.3f}"
+
+
+# --- job ceilings: a change that adds an eager action fails here ------------
+# Each ceiling is the count measured when it was set; lower it when a
+# change earns it.
+
+
+def test_link_entities_job_ceiling(spark, jobs_of):
+    mdf, edf = linking.linking_fixtures(spark, 150)
+    n = jobs_of(lambda: linking.link_entities(mdf, edf).collect())
+    assert n <= 7, n
+
+
+def test_dedup_jaccard_pipeline_job_ceiling(spark, jobs_of):
+    docs = spark.createDataFrame(_BLOCK_DOCS, ["doc_id", "text"])
+    n = jobs_of(lambda: dd.dedup_jaccard_pipeline(
+        docs, k=5, num_perm=8, bands=2, rows_per_band=4).collect())
+    assert n <= 10, n
 
 
 # --- round 2: scale guards ---------------------------------------------------

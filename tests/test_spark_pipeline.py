@@ -87,14 +87,18 @@ def test_node_table_hash_ids_unique_and_joinfree(spark, triples):
     nt = build_node_table(triples)  # hash mode
     assert_ids_unique(nt)
     # inline encode (no node table join) agrees with the dictionary
-    enc = encode_triples(triples.select("subj", "pred", "obj"))
-    joined = encode_triples(triples.select("subj", "pred", "obj"), nt, broadcast=True)
+    tri = triples.select("subj", "pred", "obj")
+    enc = encode_triples(tri)
+    joined = tri
+    for col, idc in (("subj", "s_id"), ("pred", "p_id"), ("obj", "o_id")):
+        ids = nt.withColumnRenamed("term", col).withColumnRenamed("node_id", idc)
+        joined = joined.join(ids, col, "left").drop(col)
     assert enc.exceptAll(joined).count() == 0 and joined.exceptAll(enc).count() == 0
 
 
 def test_encode_decode_roundtrip(spark, triples):
-    nt = build_node_table(triples, dense=True)
-    enc = encode_triples(triples.select("subj", "pred", "obj"), nt, broadcast=True)
+    nt = build_node_table(triples)
+    enc = encode_triples(triples.select("subj", "pred", "obj"))
     assert enc.filter(
         F.col("s_id").isNull() | F.col("p_id").isNull() | F.col("o_id").isNull()
     ).count() == 0
