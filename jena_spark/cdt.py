@@ -41,10 +41,25 @@ LIST_DT = CDT + "List"
 MAP_DT = CDT + "Map"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
-# encoded-term suffixes that mark a cdt:List / cdt:Map literal — shared by
-# the query-time CDT activation probe (ops/sparql._data_has_cdt) and the
-# has_cdt flag the streaming patch sink keeps in its store's _meta.json
+# encoded-term suffixes that mark a cdt:List / cdt:Map literal
 CDT_TERM_SUFFIXES = (f"^^<{LIST_DT}>", f"^^<{MAP_DT}>")
+
+
+def cdt_term_cond(columns):
+    """Spark condition: the row's ``subj`` or ``obj`` term (whichever of
+    the two ``columns`` holds) is a cdt:List / cdt:Map literal; ``None``
+    when it holds neither.  Shared by the query-time CDT activation
+    probe (ops/sparql._probe_has_cdt) and the has_cdt flag the streaming
+    patch sink keeps in its store's _meta.json."""
+    from pyspark.sql import functions as F
+
+    cond = None
+    for c in ("subj", "obj"):
+        if c in columns:
+            for suf in CDT_TERM_SUFFIXES:
+                e = F.col(c).endswith(suf)
+                cond = e if cond is None else (cond | e)
+    return cond
 
 _LIST_SUFFIX = f'"^^<{LIST_DT}>'
 _MAP_SUFFIX = f'"^^<{MAP_DT}>'

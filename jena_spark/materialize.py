@@ -37,6 +37,7 @@ from .nodetable import (
     encode_triples,
     term_id,
 )
+from .pinning import overwrite_partitions
 
 ENC_PERMUTATIONS: Dict[str, Sequence[str]] = {
     "spo": ("s_id", "p_id", "o_id"),
@@ -276,8 +277,6 @@ def _rewrite_partitions(
 ) -> None:
     """Re-assign ``p_part`` over the rows of partitions ``parts`` of one
     permutation table and overwrite exactly those partitions."""
-    import shutil
-
     nxt = (
         spark.read.parquet(path)
         .filter(F.col("p_part").isin(parts))
@@ -286,21 +285,7 @@ def _rewrite_partitions(
         .repartition(F.col("p_part"))
         .sortWithinPartitions(*keys)
     )
-    # pin BEFORE overwriting — the plan reads the files being replaced
-    nxt = nxt.localCheckpoint(eager=True)
-    (
-        nxt.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("p_part")
-        .parquet(path)
-    )
-    # dynamic overwrite never touches a partition absent from the
-    # output — an affected partition emptied by the move keeps stale
-    # files; drop those directories explicitly
-    remaining = {r["p_part"] for r in nxt.select("p_part").distinct().collect()}
-    for k in set(parts) - remaining:
-        shutil.rmtree(os.path.join(path, f"p_part={k}"), ignore_errors=True)
-    nxt.unpersist()
+    overwrite_partitions(nxt, path, parts)
 
 
 def rebalance_hot_partitions(

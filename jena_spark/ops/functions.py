@@ -146,6 +146,17 @@ def same_term(a: Column, b: Column) -> Column:
 # then value — QueryIterSort's comparator re-expressed as a sortable key.
 # ---------------------------------------------------------------------------
 
+_TRIPLE_TERM = r"^<<\((\S+) (\S+) ((?s:.*))\)>>$"
+
+
+def triple_term_parts(t: Column) -> "tuple[Column, Column, Column]":
+    """(subject, predicate, object) of an encoded triple term
+    ``<<(s p o)>>``; empty strings when ``t`` is not one.  Inner subjects
+    and predicates are space-free, so the two splits are exact even when
+    the object is itself a triple term."""
+    return tuple(F.regexp_extract(t, _TRIPLE_TERM, i) for i in (1, 2, 3))
+
+
 def order_key(t: Column) -> Column:
     """Sortable key: unbound < bnode < IRI < literal; within literals,
     numerics order by *value* before non-numerics order lexically —
@@ -163,16 +174,8 @@ def order_key(t: Column) -> Column:
     # then object by numeric value when numeric, then full encoding
     # strip the IRI terminator so "…/s" < "…/s1" (prefix order, like
     # comparing the IRI strings themselves rather than their encodings)
-    tt_sp = F.regexp_replace(
-        F.concat(
-            F.regexp_extract(t, r"^<<\((\S+) \S+ (?s:.*)\)>>$", 1),
-            F.lit(" "),
-            F.regexp_extract(t, r"^<<\(\S+ (\S+) (?s:.*)\)>>$", 1),
-        ),
-        ">",
-        "",
-    )
-    tt_obj = F.regexp_extract(t, r"^<<\(\S+ \S+ ((?s:.*))\)>>$", 1)
+    tt_s, tt_p, tt_obj = triple_term_parts(t)
+    tt_sp = F.regexp_replace(F.concat(tt_s, F.lit(" "), tt_p), ">", "")
     nv = F.when(is_tt, numeric_value(tt_obj)).otherwise(numeric_value(t))
     v1 = F.when(is_tt, tt_sp).otherwise(F.lit(""))
     return F.struct(

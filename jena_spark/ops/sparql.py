@@ -81,6 +81,7 @@ from ..parsers.tokenizer import (
     T_STRING,
     T_VAR,
 )
+from ..pinning import pin
 from . import functions as tf
 from .algebra import bgp
 
@@ -2201,12 +2202,10 @@ def _typed(e: Expr, avail: Optional[set] = None) -> Tuple[F.Column, str]:
             return targs[0][0].startswith("<<("), "bool"
         if name in ("SUBJECT", "PREDICATE", "OBJECT"):
             c = targs[0][0]
-            pat = {
-                "SUBJECT": r"^<<\((\S+) \S+ (?s:.*)\)>>$",
-                "PREDICATE": r"^<<\(\S+ (\S+) (?s:.*)\)>>$",
-                "OBJECT": r"^<<\(\S+ \S+ ((?s:.*))\)>>$",
-            }[name]
-            return F.when(c.startswith("<<("), F.regexp_extract(c, pat, 1)), "term"
+            part = tf.triple_term_parts(c)[
+                ("SUBJECT", "PREDICATE", "OBJECT").index(name)
+            ]
+            return F.when(c.startswith("<<("), part), "term"
     raise RDFSyntaxError(f"cannot compile expression {e.kind}")
 
 
@@ -2251,7 +2250,7 @@ _CDT_ACTIVE: "contextvars.ContextVar[bool]" = contextvars.ContextVar(
 # _meta_has_cdt reads it and skips the probe entirely, so at warehouse
 # scale the default path costs zero scans; `cdt=` on the entry points
 # remains the explicit override.
-from ..cdt import CDT_TERM_SUFFIXES as _CDT_SUFFIXES
+from ..cdt import cdt_term_cond
 
 _cdt_data_cache: "dict[tuple, bool]" = {}
 
@@ -2266,6 +2265,13 @@ def _meta_has_cdt(df: DataFrame) -> Optional[bool]:
     in-memory rows (LocalRelation) could carry CDT literals invisible to
     ``inputFiles()``, so those shapes fall back to the data probe — the
     safe direction.
+
+    Why the sink keeps the flag rather than leaving every read to the
+    probe: the ``sparql_mix`` benchmark's read-after-patch over one
+    ``PatchStream(101)`` batch (``local[2]`` on a 4-core host,
+    2026-10-19) took 0.245 s with the flag (median of 10, quartiles
+    0.233–0.279) and 0.356 s (0.337–0.405) with the probe instead; the
+    probe alone took 0.225 s.
     """
     import json as _json
     import os as _os
@@ -2333,12 +2339,7 @@ def _meta_has_cdt(df: DataFrame) -> Optional[bool]:
 
 def _probe_has_cdt(df: DataFrame) -> bool:
     """One column-pruned scan with early exit on the first CDT literal."""
-    cond = None
-    for c in ("subj", "obj"):
-        if c in df.columns:
-            for suf in _CDT_SUFFIXES:
-                e = F.col(c).endswith(suf)
-                cond = e if cond is None else (cond | e)
+    cond = cdt_term_cond(df.columns)
     return cond is not None and not df.filter(cond).isEmpty()
 
 
@@ -2558,14 +2559,10 @@ def _slim_eq(a: F.Column, b: F.Column, depth: int) -> F.Column:
     base = F.when(na.isNotNull() & nb.isNotNull(), na == nb).otherwise(a == b)
     if depth <= 0:
         return base
-    pat = r"^<<\((\S+) (\S+) ((?s:.*))\)>>$"
+    (sa, pa, oa), (sb, pb, ob) = tf.triple_term_parts(a), tf.triple_term_parts(b)
     return F.when(
         a.startswith("<<(") & b.startswith("<<("),
-        (F.regexp_extract(a, pat, 1) == F.regexp_extract(b, pat, 1))
-        & (F.regexp_extract(a, pat, 2) == F.regexp_extract(b, pat, 2))
-        & _slim_eq(
-            F.regexp_extract(a, pat, 3), F.regexp_extract(b, pat, 3), depth - 1
-        ),
+        (sa == sb) & (pa == pb) & _slim_eq(oa, ob, depth - 1),
     ).otherwise(base)
 
 
@@ -2628,10 +2625,8 @@ def _term_value_cmp(ca: F.Column, cb: F.Column, op: str, depth: int = 2) -> F.Co
     # triple terms (RDF 1.2): compare component-wise — inner subjects and
     # predicates are IRIs/bnodes (term identity), the object recurses
     tt_both = ca.startswith("<<(") & cb.startswith("<<(")
-    tts = lambda c: F.regexp_extract(c, r"^<<\((\S+) \S+ (?s:.*)\)>>$", 1)
-    ttp = lambda c: F.regexp_extract(c, r"^<<\(\S+ (\S+) (?s:.*)\)>>$", 1)
-    tto = lambda c: F.regexp_extract(c, r"^<<\(\S+ \S+ ((?s:.*))\)>>$", 1)
-    oa, ob = tto(ca), tto(cb)
+    sa, pa, oa = tf.triple_term_parts(ca)
+    sb, pb, ob = tf.triple_term_parts(cb)
     # nested objects use a SLIM value comparison (numeric-by-value, term
     # identity otherwise, one more tt decomposition level) — embedding
     # the full category matrix recursively would explode the Catalyst
@@ -2641,7 +2636,7 @@ def _term_value_cmp(ca: F.Column, cb: F.Column, op: str, depth: int = 2) -> F.Co
         tf.numeric_value(oa).isNotNull() & tf.numeric_value(ob).isNotNull(),
         tf.numeric_value(oa) < tf.numeric_value(ob),
     ).otherwise(oa < ob)
-    sp_eq = (tts(ca) == tts(cb)) & (ttp(ca) == ttp(cb))
+    sp_eq = (sa == sb) & (pa == pb)
     tt_eq = F.when(sp_eq, tt_obj_eq).otherwise(F.lit(False))
 
     if op in ("=", "!="):
@@ -2807,16 +2802,10 @@ def _compile_group(
 def _apply_term_decomp(df: DataFrame, el: TermDecomp) -> DataFrame:
     """Apply a SPARQL 1.2 triple-term decomposition: constrain the bound
     column ``el.var`` to be a triple term and match/bind its components
-    (regex decomposition — inner subjects/predicates are space-free, so
-    the two splits are exact even with a nested object)."""
+    (:func:`functions.triple_term_parts`)."""
     v = F.col(el.var[1:])
     df = df.filter(v.startswith("<<("))
-    comps = [
-        (el.s, F.regexp_extract(v, r"^<<\((\S+) \S+ (?s:.*)\)>>$", 1)),
-        (el.p, F.regexp_extract(v, r"^<<\(\S+ (\S+) (?s:.*)\)>>$", 1)),
-        (el.o, F.regexp_extract(v, r"^<<\(\S+ \S+ ((?s:.*))\)>>$", 1)),
-    ]
-    for t, c in comps:
+    for t, c in zip((el.s, el.p, el.o), tf.triple_term_parts(v)):
         if t.startswith("?"):
             name = t[1:]
             if name in df.columns:
@@ -3970,14 +3959,14 @@ def _sparql_describe_body(triples: DataFrame, q: DescribeQuery) -> DataFrame:
         if rnd % 8 == 7:
             out = out.localCheckpoint(eager=True)
             seen = seen.localCheckpoint(eager=True)
-        new = (
+        new, counted = pin(
             step.filter(F.col("obj").startswith("_:"))
             .select(F.col("obj").alias("node"))
             .distinct()
-            .join(seen, "node", "left_anti")
-            .localCheckpoint(eager=True)
+            .join(seen, "node", "left_anti"),
+            n=F.count(F.lit(1)),
         )
-        if new.isEmpty():
+        if counted["n"] == 0:
             break
         seen = seen.unionAll(new)
         frontier = new

@@ -36,6 +36,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pinning import pin
 from ..skolem import BNodeAllocator, doc_seed
 from ..terms import RDFSyntaxError
 from . import functions as tf
@@ -344,6 +345,9 @@ class UpdateParser(SparqlParser):
 # ---------------------------------------------------------------------------
 
 _STORE_SCHEMA = "graph string, subj string, pred string, obj string"
+# _union broadcasts a delta whose estimated encoded size is at most this
+# (32 MB) and anti-joins it through a shuffle above it.
+_UNION_BROADCAST_MAX_BYTES = 32 * 1024 * 1024
 
 
 def _is_anon(t: str) -> bool:
@@ -449,17 +453,18 @@ def _union(
         # autoBroadcastJoinThreshold, and a row-count gate lets a
         # multi-hundred-MB hashed relation of long encoded terms onto
         # every executor (OOM at cluster scale).  Estimate the encoded
-        # size from term lengths (+16B/row row overhead), cap at 32 MB.
-        a = a.localCheckpoint(eager=True)
-        sz = a.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
+        # size from term lengths (+16B/row row overhead), observed in
+        # the pinning pass, and cap it at _UNION_BROADCAST_MAX_BYTES.
+        a, sz = pin(
+            a,
+            n=F.count(F.lit(1)),
+            chars=F.sum(
                 F.coalesce(F.length("graph"), F.lit(0))
                 + F.length("subj") + F.length("pred") + F.length("obj")
-            ).alias("chars"),
-        ).first()
+            ),
+        )
         est_bytes = (sz["chars"] or 0) + 16 * (sz["n"] or 0)
-        known_small = est_bytes <= 32 * 1024 * 1024
+        known_small = est_bytes <= _UNION_BROADCAST_MAX_BYTES
     delta = a.select(
         F.col("graph").alias("__g"), F.col("subj").alias("__s"),
         F.col("pred").alias("__p"), F.col("obj").alias("__o"),

@@ -22,11 +22,16 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import hashlib
+import logging
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from ..pinning import pin
+
+log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # exact
@@ -245,7 +250,6 @@ def minhash_candidates(
     bands: int = 4,
     rows_per_band: int = 2,
     max_bucket_size: int = 1000,
-    log_fn=None,
 ) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs
     (id_a < id_b).  Band key = md5 of the band's concatenated minima.
@@ -259,9 +263,9 @@ def minhash_candidates(
       ~10^12 pairs and kill the job; standard MinHashLSH practice is to
       cap and report.  AQE skew-join spreads a merely-large bucket's
       shuffle, but only the cap shrinks the quadratic *output*.
-    - ``log_fn`` (e.g. ``print``/logger) receives one line with the
-      number of dropped buckets and their member mass, so truncation is
-      never silent.
+    - the dropped buckets and their member mass are counted in the pass
+      that pins the candidates and logged at WARNING on this module's
+      logger, so truncation is never silent.
     """
     from pyspark.sql import Window
 
@@ -278,38 +282,51 @@ def minhash_candidates(
     # (ReusedExchange) — replacing the persist + groupBy-counts +
     # broadcast-semi-join pre-pass (three plan legs, a cache fill and a
     # broadcast build).  Same pruning semantics: singletons out,
-    # over-cap buckets dropped with their mass loggable.
+    # over-cap buckets dropped.
+    #
+    # A dropped bucket is not discarded silently: its least member (the
+    # window's min id) stays in the join as the bucket's one marker row,
+    # which pairs with itself only and carries the bucket's band and
+    # size, and the pin counts the markers in its observed aggregates.
+    # The window output itself cannot be observed: a join that finds one
+    # side empty stops reading the other, so rows below it would go
+    # uncounted.
     w = Window.partitionBy("band_idx", "band_key")
-    counted = long.withColumn("__cnt", F.count("*").over(w))
-    if log_fn is not None:
-        dropped = (
-            counted.filter(F.col("__cnt") > max_bucket_size)
-            .agg(
-                F.countDistinct("band_idx", "band_key").alias("n_buckets"),
-                F.count("*").alias("n_members"),
-            )
-            .collect()[0]
+    cnt, over = F.col("__cnt"), F.col("__cnt") > max_bucket_size
+    filtered = (
+        long.withColumn("__cnt", F.count("*").over(w))
+        .withColumn("__rep", F.min(id_col).over(w))
+        .filter(
+            ((cnt >= 2) & ~over) | (over & (F.col(id_col) == F.col("__rep")))
         )
-        if dropped["n_buckets"]:
-            log_fn(
-                f"minhash_candidates: dropped {dropped['n_buckets']} "
-                f"over-cap buckets (> {max_bucket_size}) covering "
-                f"{dropped['n_members']} doc slots"
-            )
-    filtered = counted.filter(
-        (F.col("__cnt") >= 2) & (F.col("__cnt") <= max_bucket_size)
-    ).select(id_col, "band_idx", "band_key")
-    left = filtered.withColumnRenamed(id_col, "id_a")
-    right = filtered.withColumnRenamed(id_col, "id_b")
-    return (
-        left.join(right, ["band_idx", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        # pin the (capped, small) candidate set: it feeds ≥2 downstream
-        # plans (verify + clustering) and must not re-run the banding
-        .localCheckpoint(eager=True)
+        .select(id_col, "band_idx", "band_key", "__cnt")
     )
+    left = filtered.withColumnRenamed(id_col, "id_a")
+    right = filtered.select(
+        F.col(id_col).alias("id_b"), "band_idx", "band_key"
+    )
+    # pin the (capped, small) candidate set: it feeds ≥2 downstream
+    # plans (verify + clustering) and must not re-run the banding
+    marked, dropped = pin(
+        left.join(right, ["band_idx", "band_key"])
+        .filter((F.col("id_a") < F.col("id_b")) | over)
+        .select(
+            "id_a",
+            "id_b",
+            F.when(over, F.col("band_idx")).alias("__band"),
+            F.when(over, cnt).alias("__drop"),
+        )
+        .distinct(),
+        n_buckets=F.count("__drop"),
+        n_members=F.sum("__drop"),
+    )
+    if dropped["n_buckets"]:
+        log.warning(
+            f"minhash_candidates: dropped {dropped['n_buckets']} "
+            f"over-cap buckets (> {max_bucket_size}) covering "
+            f"{dropped['n_members']} doc slots"
+        )
+    return marked.filter(F.col("__drop").isNull()).select("id_a", "id_b")
 
 
 def minhash_sigs_and_sets(
@@ -337,7 +354,6 @@ def dedup_jaccard_pipeline(
     rows_per_band: int = 4,
     max_bucket_size: int = 1000,
     threshold: float = 0.0,
-    log_fn=None,
 ) -> DataFrame:
     """signatures → LSH banding → exact Jaccard verify, end to end.
     Returns (id_a, id_b, jaccard), the same rows as
@@ -350,7 +366,7 @@ def dedup_jaccard_pipeline(
     if not _sets_fit_driver(docs, text_col, k):
         sigs = minhash_signatures(docs, text_col, id_col, k, num_perm)
         cands = minhash_candidates(
-            sigs, id_col, bands, rows_per_band, max_bucket_size, log_fn
+            sigs, id_col, bands, rows_per_band, max_bucket_size
         )
         return _jaccard_scores(
             _jaccard_jvm(docs, cands, text_col, id_col, k), threshold
@@ -359,8 +375,7 @@ def dedup_jaccard_pipeline(
         docs, text_col, id_col, k, num_perm
     ).localCheckpoint(eager=True)
     cands = minhash_candidates(
-        combined.drop("sh"), id_col, bands, rows_per_band,
-        max_bucket_size, log_fn,
+        combined.drop("sh"), id_col, bands, rows_per_band, max_bucket_size
     )
     sets = combined.filter(F.col("sh").isNotNull()).select(id_col, "sh")
     return _jaccard_scores(_jaccard_verify_py(cands, sets, id_col), threshold)
@@ -479,28 +494,26 @@ def _jaccard_jvm(
     Only docs that appear in a candidate pair get their sets computed
     (a semi-join on the distinct pair ids runs first), and that table is
     pinned with an eager localCheckpoint so it is computed once, not once
-    per join side.  Its measured size then picks the join: under
-    ``_JVM_BROADCAST_MAX_BYTES`` it is broadcast (both joins key on the
-    same ``id`` column, so Catalyst reuses ONE exchange for the two
-    probes and the pairs never move with array payloads); above it the
-    sort-merge join's second exchange carries pairs × array, the lower
-    bound for a shuffle-based attach."""
+    per join side.  Its size, observed in that pass, then picks the
+    join: under ``_JVM_BROADCAST_MAX_BYTES`` it is broadcast (both joins
+    key on the same ``id`` column, so Catalyst reuses ONE exchange for
+    the two probes and the pairs never move with array payloads); above
+    it the sort-merge join's second exchange carries pairs × array, the
+    lower bound for a shuffle-based attach."""
     ids = (
         candidates.select(F.col("id_a").alias(id_col))
         .unionByName(candidates.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
     cand_docs = docs.join(ids, id_col, "left_semi")
-    sets = (
+    nonempty = F.size("sh") > 0
+    sets, stats = pin(
         hashed_shingle_sets(cand_docs, text_col, id_col, k)
-        .withColumnRenamed(id_col, "id")
-        .localCheckpoint(eager=True)
-        .filter(F.size("sh") > 0)
+        .withColumnRenamed(id_col, "id"),
+        n=F.count_if(nonempty),
+        total_sh=F.coalesce(F.sum(F.when(nonempty, F.size("sh"))), F.lit(0)),
     )
-    stats = sets.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.size("sh")), F.lit(0)).alias("total_sh"),
-    ).collect()[0]
+    sets = sets.filter(nonempty)
     # 8 bytes per hashed shingle + ~32 bytes row overhead in the relation
     if stats["total_sh"] * 8 + stats["n"] * 32 <= _JVM_BROADCAST_MAX_BYTES:
         sets = F.broadcast(sets)
@@ -692,22 +705,19 @@ def dedup_clusters(
                 .agg(F.min("lbl").alias("nlbl"))
                 .withColumnRenamed("a", "node")
             )
-            new = (
-                labels.join(nb, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("lbl"),
-                        F.coalesce(F.col("nlbl"), F.col("lbl")),
-                    ).alias("lbl"),
-                )
-                .localCheckpoint(eager=True)
+            # the pinned row keeps both labels, so the nodes whose label
+            # drops are counted in the pinning pass
+            step, moved = pin(
+                labels.join(nb, "node", "left"),
+                n=F.count_if(F.col("nlbl") < F.col("lbl")),
             )
-            changed = not new.join(
-                labels, ["node", "lbl"], "left_anti"
-            ).isEmpty()
-            labels = new
-            if not changed:
+            labels = step.select(
+                "node",
+                F.least(
+                    F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
+                ).alias("lbl"),
+            )
+            if moved["n"] == 0:
                 break
         else:
             raise RuntimeError(

@@ -409,14 +409,14 @@ def embedding_near_dup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int = 1000,
-    log_fn=None,
 ) -> DataFrame:
     """Near-duplicate embedding pairs: sign-bit LSH banding → capped
     single self-join candidates → exact cosine verification (candidates
     only, never the cross product).  Returns (id_a, id_b, cosine).
 
     Scale: same guards as text MinHash dedup — pre-counted buckets,
-    singleton pruning, over-cap buckets dropped with logged mass.
+    singleton pruning, over-cap buckets dropped and logged with their
+    mass by :func:`dedup.minhash_candidates`.
     Recall is the usual banding trade-off (raise nbits / lower
     bits_per_band for closer thresholds)."""
     from .dedup import minhash_candidates
@@ -430,7 +430,6 @@ def embedding_near_dup(
         bands=nbits // bits_per_band,
         rows_per_band=1,
         max_bucket_size=max_bucket_size,
-        log_fn=log_fn,
     )
     v = F.col(vec_col).cast("array<double>")
     a = embeddings.select(F.col(id_col).alias("id_a"), v.alias("v_a"))

@@ -129,7 +129,8 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
     correct, and :func:`patch_ops_stream` always emits it.
 
     SUB-LINEAR in |store|: the delta's touched ``p_part`` values are
-    collected (≤ n_parts, driver-small), only those partitions are read
+    observed while the delta is pinned (≤ n_parts, driver-small), only
+    those partitions are read
     (parquet partition pruning), and only those partitions are rewritten
     via dynamic partition overwrite — untouched partition files are
     never opened or replaced.  At real scale the same shape is an
@@ -144,11 +145,11 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         import os
-        import shutil
 
-        from .cdt import CDT_TERM_SUFFIXES
+        from .cdt import cdt_term_cond
         from .materialize import atomic_write_json
         from .ops.update import _minus, _union
+        from .pinning import overwrite_partitions, pin
 
         if "seq" not in batch.columns:
             raise ValueError(
@@ -157,29 +158,24 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
             )
         spark = batch.sparkSession
         part = F.pmod(F.xxhash64(F.col("pred")), F.lit(n_parts)).cast("int")
-        # last op per quad decides membership after this batch
-        last = (
+        # last op per quad decides membership after this batch; the
+        # touched partitions and whether the delta adds a CDT literal are
+        # observed in the same pass
+        last, summary = pin(
             batch.groupBy("graph", "subj", "pred", "obj")
             .agg(F.max_by("op", "seq").alias("op"))
-            .withColumn("p_part", part)
-            .localCheckpoint(eager=True)
+            .withColumn("p_part", part),
+            touched=F.collect_set("p_part"),
+            adds_cdt=F.bool_or(
+                (F.col("op") == "A") & cdt_term_cond(("subj", "obj"))
+            ),
         )
-        adds = last.filter(F.col("op") == "A").drop("op")
-        dels = last.filter(F.col("op") == "D").drop("op")
-        # the touched partitions and whether the delta adds a CDT literal,
-        # from one pass over the (checkpointed) delta
-        cdt = F.lit(False)
-        for c in ("subj", "obj"):
-            for suf in CDT_TERM_SUFFIXES:
-                cdt = cdt | F.col(c).endswith(suf)
-        summary = last.agg(
-            F.collect_set("p_part").alias("touched"),
-            F.bool_or((F.col("op") == "A") & cdt).alias("adds_cdt"),
-        ).first()
         touched = summary["touched"]
         if not touched:
             last.unpersist()
             return
+        adds = last.filter(F.col("op") == "A").drop("op")
+        dels = last.filter(F.col("op") == "D").drop("op")
 
         quad_cols = ["graph", "subj", "pred", "obj"]
         exists = os.path.isdir(target_dir)
@@ -194,26 +190,10 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
             known_small=True,
             pre_deduped=True,
         ).withColumn("p_part", part)
-        # pin the result BEFORE overwriting: the plan reads the very
-        # files the write below replaces (read-your-own-overwrite)
-        nxt = nxt.localCheckpoint(eager=True)
-        (
-            nxt.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("p_part")
-            .parquet(target_dir)
-        )
-        # dynamic overwrite never touches a partition absent from the
-        # output — a touched partition whose quads were ALL deleted
-        # keeps stale files; drop those directories explicitly (the
-        # Iceberg MERGE analog does this through the catalog).
-        remaining = {
-            r["p_part"] for r in nxt.select("p_part").distinct().collect()
-        }
-        for k in set(touched) - remaining:
-            shutil.rmtree(
-                os.path.join(target_dir, f"p_part={k}"), ignore_errors=True
-            )
+        # a touched partition whose quads were ALL deleted loses its
+        # directory (the Iceberg MERGE analog does this through the
+        # catalog)
+        overwrite_partitions(nxt, target_dir, touched)
         # keep the store's CDT flag fresh (ops/sparql._meta_has_cdt
         # trusts it): OR in the delta's CDT presence — the check is
         # delta-sized, never a store scan.  Deletes only ever leave a
@@ -244,9 +224,8 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         if meta.get("has_cdt") is False:
             meta["has_cdt"] = bool(summary["adds_cdt"])
         atomic_write_json(meta_path, meta)
-        nxt.unpersist()
-        last.unpersist()  # symmetric with nxt: thousands of micro-batches
-        # would otherwise pin one checkpointed RDD each until GC
+        last.unpersist()  # thousands of micro-batches would otherwise
+        # pin one checkpointed RDD each until GC
 
     return apply
 

@@ -151,3 +151,17 @@ def test_closure_pair_cap_falls_back_to_distributed(spark, monkeypatch):
     rel = spark.createDataFrame(rows, ["src", "dst"])
     out = closure(rel)
     assert out.count() == 465
+
+
+def test_closure_job_ceiling(spark, jobs_of):
+    """The distributed loop over 2,600 disjoint 5-node chains (10,400
+    edges, above DRIVER_EDGE_CAP): each round's new pairs are counted
+    in the pass that pins them, and the result is a plain union of the
+    pinned pieces (29 jobs with an isEmpty probe and a re-pinned union
+    per round)."""
+    rows = [(f"<c{c}_{i}>", f"<c{c}_{i + 1}>") for c in range(2600) for i in range(4)]
+    rel = spark.createDataFrame(rows, ["src", "dst"])
+    got = []
+    n = jobs_of(lambda: got.extend(closure(rel).collect()))
+    assert n <= 22, n
+    assert len(got) == 2600 * 10

@@ -184,6 +184,55 @@ def test_dedup_jaccard_pipeline_matches_split(spark, monkeypatch):
     assert fused_jvm == split
 
 
+def test_sets_fit_driver_both_sides(spark, monkeypatch):
+    """With the driver-sets budget exactly at the payload upper bound
+    the Python verify runs; one byte below it the JVM join runs, and its
+    broadcast gate reads the set sizes observed in its pin, which equal
+    the candidate docs' own non-empty sets.  Both give the same rows."""
+    rows = [
+        (0, "the quick brown fox jumps over the lazy dog"),
+        (1, "the quick brown fox jumped over the lazy dogs"),
+        (2, "pack my box with five dozen liquor jugs"),
+        (3, None), (4, "tiny"), (5, ""), (6, "unrelated text in no pair"),
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    cands = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 2), (0, 3), (3, 4), (2, 4), (4, 5)],
+        ["id_a", "id_b"],
+    )
+    k = 5
+    # upper bound of the set payload: shingle positions (≥ 1 per doc,
+    # null text included) × 8 bytes + 32 bytes per doc
+    bound = 8 * sum(max(len(t or "") - (k - 1), 1) for _, t in rows) + 32 * len(rows)
+    sets = {r["doc_id"]: r["sh"] for r in dd.hashed_shingle_sets(docs, k=k).collect()}
+    in_pairs = {i for pair in cands.collect() for i in pair}
+    want_stats = {
+        "n": sum(1 for i in in_pairs if sets.get(i)),
+        "total_sh": sum(len(sets[i]) for i in in_pairs if sets.get(i)),
+    }
+    ran, observed = [], []
+    verify_py, jvm, pin = dd._jaccard_verify_py, dd._jaccard_jvm, dd.pin
+
+    def spy_pin(df, **metrics):
+        pinned, values = pin(df, **metrics)
+        observed.append(values)
+        return pinned, values
+
+    monkeypatch.setattr(dd, "pin", spy_pin)
+    monkeypatch.setattr(dd, "_jaccard_verify_py",
+                        lambda *a: ran.append("py") or verify_py(*a))
+    monkeypatch.setattr(dd, "_jaccard_jvm", lambda *a: ran.append("jvm") or jvm(*a))
+    got = {}
+    for budget in (bound, bound - 1):
+        monkeypatch.setattr(dd, "_DRIVER_SETS_MAX_BYTES", budget)
+        got[budget] = {(r["id_a"], r["id_b"]): r["jaccard"]
+                       for r in dd.jaccard_pairs(docs, cands, k=k).collect()}
+    assert ran == ["py", "jvm"]
+    assert observed == [want_stats]
+    assert got[bound] == got[bound - 1]
+    assert set(got[bound]) == {(0, 1), (0, 2), (1, 2), (2, 4), (4, 5)}
+
+
 def test_dedup_jaccard_string_ids_both_gate_sides(spark, monkeypatch):
     """String doc ids keep their type through the driver-broadcast
     verify and give the same rows as the JVM join above the gate."""
@@ -642,27 +691,68 @@ def test_linking_bucket_cap_two_sided(spark):
     assert none.count() == 0 and not msgs2
 
 
-def test_lsh_bucket_cap_prevents_quadratic_blowup(spark):
+def _drop_warnings(caplog):
+    return [r.getMessage() for r in caplog.records
+            if r.name == "jena_spark.pipelines.dedup"]
+
+
+def test_lsh_bucket_cap_prevents_quadratic_blowup(spark, caplog):
     """A degenerate bucket (every doc identical ⇒ one band bucket of 1000)
-    must be dropped by the cap instead of emitting ~500k pairs."""
+    must be dropped by the cap instead of emitting ~500k pairs, and the
+    drop is logged with its exact bucket and member counts."""
     docs = spark.createDataFrame(
         [(i, "the same boilerplate license header text") for i in range(1000)],
         ["doc_id", "text"],
     )
     sigs = dd.minhash_signatures(docs, num_perm=8)
-    msgs = []
-    capped = dd.minhash_candidates(
-        sigs, bands=4, rows_per_band=2, max_bucket_size=100, log_fn=msgs.append
-    )
+    with caplog.at_level("WARNING", logger="jena_spark.pipelines.dedup"):
+        capped = dd.minhash_candidates(
+            sigs, bands=4, rows_per_band=2, max_bucket_size=100
+        )
     assert capped.count() == 0  # dropped, not exploded
-    assert msgs and "dropped" in msgs[0]
-    # sanity: cap high enough → pairs do appear (and would be quadratic)
+    assert _drop_warnings(caplog) == [
+        "minhash_candidates: dropped 4 over-cap buckets (> 100) "
+        "covering 4000 doc slots"
+    ]
+    # sanity: cap high enough → pairs do appear (and would be quadratic),
+    # and nothing is logged
+    caplog.clear()
     few = spark.createDataFrame(
         [(i, "the same boilerplate license header text") for i in range(10)],
         ["doc_id", "text"],
     )
     sigs2 = dd.minhash_signatures(few, num_perm=8)
-    assert dd.minhash_candidates(sigs2, max_bucket_size=100).count() == 45
+    with caplog.at_level("WARNING", logger="jena_spark.pipelines.dedup"):
+        assert dd.minhash_candidates(sigs2, max_bucket_size=100).count() == 45
+    assert _drop_warnings(caplog) == []
+
+
+def test_lsh_bucket_cap_counts_many_buckets_once(spark, caplog):
+    """50 over-cap buckets of 40 members beside kept buckets: each
+    dropped bucket and member is counted once, although the banded rows
+    feed both sides of the self-join, and the kept buckets' pairs are
+    all there."""
+    import hashlib
+
+    def text(tag):  # texts of different groups share no shingle
+        return hashlib.md5(tag.encode()).hexdigest()
+
+    rows = [(g * 40 + i, text(f"boilerplate {g}"))
+            for g in range(50) for i in range(40)]
+    rows += [(5000 + g * 3 + i, text(f"cluster {g}"))
+             for g in range(10) for i in range(3)]
+    sigs = dd.minhash_signatures(
+        spark.createDataFrame(rows, ["doc_id", "text"]), num_perm=8
+    )
+    with caplog.at_level("WARNING", logger="jena_spark.pipelines.dedup"):
+        got = {tuple(r) for r in dd.minhash_candidates(
+            sigs, bands=1, rows_per_band=8, max_bucket_size=30).collect()}
+    assert _drop_warnings(caplog) == [
+        "minhash_candidates: dropped 50 over-cap buckets (> 30) "
+        "covering 2000 doc slots"
+    ]
+    assert got == {(5000 + g * 3 + i, 5000 + g * 3 + j)
+                   for g in range(10) for i in range(3) for j in range(i + 1, 3)}
 
 
 def test_embedding_near_dup_recall_and_verify(spark):
@@ -692,17 +782,20 @@ def test_embedding_near_dup_recall_and_verify(spark):
     assert all(c >= 0.99 for c in verified)
 
 
-def test_embedding_near_dup_bucket_cap(spark):
+def test_embedding_near_dup_bucket_cap(spark, caplog):
     """Identical vectors (one degenerate bucket per band) are dropped by
-    the cap instead of emitting n^2 pairs."""
+    the cap instead of emitting n^2 pairs, and the drop is logged."""
     v = [1.0] + [0.0] * 7
     emb = spark.createDataFrame([(i, v) for i in range(50)], ["vec_id", "embedding"])
-    msgs = []
-    out = sim.embedding_near_dup(
-        emb, threshold=0.5, dim=8, max_bucket_size=10, log_fn=msgs.append
-    )
+    with caplog.at_level("WARNING", logger="jena_spark.pipelines.dedup"):
+        out = sim.embedding_near_dup(
+            emb, threshold=0.5, dim=8, max_bucket_size=10
+        )
     assert out.count() == 0
-    assert msgs and "dropped" in msgs[0]
+    assert _drop_warnings(caplog) == [
+        "minhash_candidates: dropped 4 over-cap buckets (> 10) "
+        "covering 200 doc slots"
+    ]
 
 
 def test_chunk_documents(spark):
@@ -776,18 +869,30 @@ def test_dedup_clusters_connected_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
-def test_dedup_clusters_chain_diameter(spark):
-    """A longer chain still converges (diameter > 2) and the guard
-    raises when max_iter is too small."""
-    import pytest as _pytest
-
-    n = 12
+def _chain(spark, n=12):
     docs = spark.createDataFrame(
         [(i, "t") for i in range(n)], ["doc_id", "text"]
     )
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
     )
+    return docs, pairs
+
+
+def test_dedup_clusters_job_ceiling(spark, jobs_of):
+    """The label loop counts its changed labels in the pass that pins
+    them (114 jobs on this chain with a left-anti probe per round)."""
+    docs, pairs = _chain(spark)
+    n = jobs_of(lambda: dd.dedup_clusters(docs, pairs).collect())
+    assert n <= 66, n
+
+
+def test_dedup_clusters_chain_diameter(spark):
+    """A longer chain still converges (diameter > 2) and the guard
+    raises when max_iter is too small."""
+    import pytest as _pytest
+
+    docs, pairs = _chain(spark)
     out = dd.dedup_clusters(docs, pairs)
     assert {r["cluster_id"] for r in out.collect()} == {0}
     with _pytest.raises(RuntimeError):

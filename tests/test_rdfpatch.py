@@ -454,3 +454,32 @@ def test_crashed_sidecar_write_leaves_store_readable(spark, tmp_path, monkeypatc
     assert _store_quads(spark, store) == before
     with open(meta_path) as f:
         assert json.load(f) == meta
+
+
+def test_apply_patch_batch_job_ceiling(spark, tmp_path, jobs_of):
+    """One batch of 100 adds and 100 deletes over 8 predicates and 16
+    partitions: the touched partitions and the CDT flag are observed
+    while the delta is pinned, and the partitions left after the
+    rewrite while the result is pinned (14 jobs with those read by side
+    queries)."""
+    from jena_spark.streaming import apply_patch_batch
+
+    store = str(tmp_path / "store")
+    apply = apply_patch_batch(store, n_parts=16)
+
+    def batch(ops):
+        return spark.createDataFrame(
+            [(i, op, None, s, p, o) for i, (op, s, p, o) in enumerate(ops)],
+            "seq long, op string, graph string, subj string, pred string, obj string",
+        )
+
+    def quad(s, i):
+        return (f"<http://e/{s}{i}>", f"<http://e/p{i % 8}>", f'"{s}{i}"')
+
+    apply(batch([("A",) + quad("s", i) for i in range(200)]), 0)
+    ops = [("A",) + quad("n", i) for i in range(100)]
+    ops += [("D",) + quad("s", i) for i in range(0, 200, 2)]
+    n = jobs_of(lambda: apply(batch(ops), 1))
+    assert n <= 10, n
+    want = {quad("s", i) for i in range(1, 200, 2)} | {quad("n", i) for i in range(100)}
+    assert {q[1:] for q in _store_quads(spark, store)} == want

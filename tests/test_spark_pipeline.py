@@ -473,6 +473,17 @@ def test_rebalance_hot_partitions_detects_and_repairs_skew(spark, tmp_path):
     assert res2["detected_hot_ids"] == []
 
 
+def test_choose_index_encoded_job_ceiling(spark, tmp_path, jobs_of):
+    """A predicate-bound lookup on the skewed store, hot and cold."""
+    out = str(tmp_path / "enc")
+    _skewed_store(spark, out)
+    for p, n_rows in ((HOT_PRED, 2000), ("<http://e/p3>", 10)):
+        got = []
+        n = jobs_of(lambda: got.extend(choose_index_encoded(spark, out, p=p).collect()))
+        assert n <= 6, (p, n)
+        assert len(got) == n_rows
+
+
 def test_rebalance_finishes_after_crash(spark, tmp_path, monkeypatch):
     """A rebalance that dies between two permutation rewrites (SPO done,
     POS raising) leaves its in-progress marker in meta.json; the re-run

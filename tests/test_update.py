@@ -237,3 +237,40 @@ def test_union_broadcast_cutoff_is_byte_based(spark):
     plan2 = out2._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan2
     assert out2.count() == 2
+
+
+def test_union_size_gate_reads_observed_delta_size(spark, monkeypatch):
+    """The delta's row count and term characters are observed while it
+    is pinned; a cutoff exactly at the estimate keeps the broadcast
+    form, one byte below it takes the shuffle anti-join, and both give
+    the same rows."""
+    from jena_spark.ops import update as up
+
+    schema = "graph string, subj string, pred string, obj string"
+    store = spark.createDataFrame(
+        [(None, "<http://e/s>", "<http://e/p>", '"x"'),
+         ("<http://e/g>", "<http://e/t>", "<http://e/p>", '"y"')],
+        schema,
+    )
+    delta = [(None, "<http://e/s>", "<http://e/p>", '"x"'),   # already stored
+             (None, "<http://e/n>", "<http://e/p>", '"new"'),
+             ("<http://e/g>", "<http://e/n>", "<http://e/q>", '"2"')]
+    add = spark.createDataFrame(delta + delta[1:], schema)  # duplicates too
+    chars = sum(len(g or "") + len(s) + len(p) + len(o) for g, s, p, o in delta)
+    est = chars + 16 * len(delta)
+    observed, pin = [], up.pin
+
+    def spy_pin(df, **metrics):
+        pinned, values = pin(df, **metrics)
+        observed.append(values)
+        return pinned, values
+
+    monkeypatch.setattr(up, "pin", spy_pin)
+    want = {tuple(r) for r in store.collect()} | set(delta)
+    for cutoff, broadcast in ((est, True), (est - 1, False)):
+        monkeypatch.setattr(up, "_UNION_BROADCAST_MAX_BYTES", cutoff)
+        out = up._union(store, add)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("LeftSemi" in plan) is broadcast, cutoff
+        assert {tuple(r) for r in out.collect()} == want
+    assert observed == [{"n": 3, "chars": chars}] * 2
