@@ -16,17 +16,25 @@ Reference design being re-expressed:
   partition, so hot predicates are salted across ``n_salts`` buckets.
 
 The store's layout — ``n_partitions``, ``n_salts`` and the hot predicate
-ids — lives in ``<out_dir>/meta.json``; :func:`p_part_column` and
-:func:`p_part_targets` are the one salting rule, read from that layout
-by the build, the rebalance and the index lookup alike.
+ids — lives in ``<out_dir>/meta.json``.  The salting rule is one Column
+expression (``_p_part``): :func:`p_part_column` places every row with
+it and :func:`p_part_targets` gives the partitions a predicate can
+occupy, so the build, the rebalance and the index lookup all evaluate
+the same JVM expression.  Likewise the id rule is only
+:func:`~jena_spark.nodetable.term_id`: a lookup binds each known term as
+``term_id(lit(term))``, which Catalyst folds to a literal (TDB2's
+``StageMatchTuple`` → ``NodeId`` flow); :func:`term_hashes` evaluates it
+on the driver only where an id must be persisted as a number
+(``meta.json``).
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Dict, Iterable, List, Optional, Sequence, Set
+from typing import Dict, Iterable, List, Optional, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,11 +57,21 @@ DEFAULT_HOT_PREDICATES = (
     "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>",
 )
 
+# fixed read schemas, so opening a store runs no parquet footer-inference
+# job; ``g_id`` is left out (only the rebalance rewrite carries it, and
+# that reads the files' own schema)
+NODES_SCHEMA = "term STRING, node_id BIGINT"
+
+
+def _perm_schema(perm: str) -> str:
+    return ", ".join(f"{k} BIGINT" for k in (*ENC_PERMUTATIONS[perm], "p_part"))
+
 
 def term_hashes(spark: SparkSession, terms: Iterable[str]) -> List[int]:
     """The node ids :func:`~jena_spark.nodetable.term_id` gives ``terms``,
-    in order.  One tiny Spark job, so the driver's ids are the JVM's
-    hash bit for bit."""
+    in order, as Python ints — for ids that are persisted (the hot
+    predicate ids in ``meta.json``).  One tiny Spark job, so the
+    driver's ids are the JVM's hash bit for bit."""
     terms = list(terms)
     if not terms:
         return []
@@ -65,29 +83,31 @@ def term_hashes(spark: SparkSession, terms: Iterable[str]) -> List[int]:
     ]
 
 
+def _p_part(p: Column, salt: Column, layout: dict) -> Column:
+    """The salting rule: ``pmod(p + salt, n_partitions)`` for a hot
+    predicate id ``p``, ``pmod(p, n_partitions)`` for a cold one.
+    Reducing ``p`` first keeps the sum inside a long (no ANSI overflow)
+    and gives the same value."""
+    n = F.lit(layout["n_partitions"])
+    hot = p.isin(layout["hot_predicate_ids"])
+    return F.pmod(F.pmod(p, n) + F.when(hot, salt).otherwise(0), n)
+
+
 def p_part_column(layout: dict) -> Column:
-    """The store's one ``p_part`` rule over encoded rows:
-    ``pmod(p_id [+ salt(s_id) if hot], n_partitions)``, with
+    """The ``p_part`` of an encoded row: :func:`_p_part` with
     ``salt = pmod(xxhash64(s_id), n_salts)``.  Deterministic, so a
     rewritten partition gets exactly the same rows back."""
-    p = F.col("p_id")
     salt = F.pmod(F.xxhash64(F.col("s_id")), F.lit(layout["n_salts"]))
-    hot = p.isin(layout["hot_predicate_ids"])
-    return F.pmod(F.when(hot, p + salt).otherwise(p), F.lit(layout["n_partitions"]))
+    return _p_part(F.col("p_id"), salt, layout)
 
 
-def p_part_targets(p_id: int, layout: dict) -> Set[int]:
-    """Every ``p_part`` value :func:`p_part_column` can give a row of
-    predicate ``p_id``: one for a cold predicate, up to ``n_salts`` for
-    a hot one (salt 0 is the cold home)."""
-    n = layout["n_partitions"]
-    if p_id not in layout["hot_predicate_ids"]:
-        return {p_id % n}  # Python % == pmod for positive n
-    # the JVM adds p_id + salt as a 64-bit long, wrapping, before pmod
-    return {
-        ((p_id + s + 2**63) % 2**64 - 2**63) % n
-        for s in range(layout["n_salts"])
-    }
+def p_part_targets(p_id: Column, layout: dict) -> List[Column]:
+    """Every ``p_part`` :func:`p_part_column` can give a row of
+    predicate ``p_id``, one Column per salt (all equal for a cold
+    predicate; salt 0 is a hot predicate's cold home).  Over a constant
+    ``p_id`` these fold to literals, so ``p_part.isin(*targets)`` is a
+    partition filter."""
+    return [_p_part(p_id, F.lit(s), layout) for s in range(layout["n_salts"])]
 
 
 def atomic_write_json(path: str, obj) -> None:
@@ -136,10 +156,11 @@ def materialize_encoded(
 
     Writes ``<out_dir>/nodes`` (term ↔ node_id) plus one sorted parquet
     table per permutation, predicate-hash partitioned with hot-key
-    salting, and ``meta.json``.  Decode at query time = join back to the
-    node table (:func:`choose_index_encoded`).  A ``node_table`` whose
-    ids are not the inline hash ids (e.g. a dense one) fails the build:
-    the permutations are keyed by hash ids and could not be decoded.
+    salting, and ``meta.json``.  A lookup (:func:`choose_index_encoded`)
+    binds terms as ids and joins the node table only to decode its
+    unbound positions.  A ``node_table`` whose ids are not the inline
+    hash ids (e.g. a dense one) fails the build: the permutations are
+    keyed by hash ids and could not be decoded.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -173,10 +194,14 @@ def materialize_encoded(
         # written dictionary (reads the parquet back, so it costs no
         # extra lineage) and fails the build loudly — also when the ids
         # are not the hash ids the permutations carry.
-        assert_ids_unique(spark.read.parquet(nodes_path))
+        assert_ids_unique(spark.read.schema(NODES_SCHEMA).parquet(nodes_path))
 
-    dict_pool = ThreadPoolExecutor(max_workers=1)
-    dict_future = dict_pool.submit(build_dictionary)
+    # the pool threads carry the caller's local properties and session
+    # tags (job group, scheduler pool), so every job of the build is
+    # attributed to the caller
+    inherit = inheritable_thread_target(spark)
+    pool = ThreadPoolExecutor(max_workers=1 + len(ENC_PERMUTATIONS))
+    dict_future = pool.submit(inherit(build_dictionary))
 
     enc = encode_triples(triples.select(*key))
     if has_graph:
@@ -216,12 +241,11 @@ def materialize_encoded(
         return perm, path
 
     try:
-        with ThreadPoolExecutor(max_workers=len(ENC_PERMUTATIONS)) as ex:
-            paths.update(ex.map(write_perm, ENC_PERMUTATIONS))
+        paths.update(pool.map(inherit(write_perm), ENC_PERMUTATIONS))
         dict_future.result()  # join the dictionary chain
     finally:
         salted.unpersist()
-        dict_pool.shutdown(wait=True)
+        pool.shutdown(wait=True)
     _write_meta(out_dir, layout)
     return paths
 
@@ -257,7 +281,7 @@ def _detect_new_hot(
     if not fat:
         return []
     rows = (
-        spark.read.parquet(path)
+        spark.read.schema(_perm_schema(os.path.basename(path))).parquet(path)
         .filter(F.col("p_part").isin(fat))
         .groupBy("p_part", "p_id")
         .count()
@@ -340,8 +364,10 @@ def rebalance_hot_partitions(
             set(meta["hot_predicate_ids"]) | set(new_hot)
         )
         # each new hot id's current home plus all of its salt targets
-        # (≤ n_salts per predicate, independent of store size)
-        affected = sorted(set().union(*(p_part_targets(h, meta) for h in new_hot)))
+        # (≤ n_salts per predicate, independent of store size), read
+        # out of the salting expression in one tiny query
+        targets = [t for h in new_hot for t in p_part_targets(F.lit(h), meta)]
+        affected = sorted(set(spark.range(1).select(F.array(*targets)).first()[0]))
         pending = {"hot_ids": new_hot, "partitions": affected}
         # journal BEFORE the first overwrite: pruning with a superset of
         # hot ids is always safe (a hot predicate's partition set
@@ -372,21 +398,24 @@ def choose_index_encoded(
     """Bound-prefix index selection (reference:
     tdb2/store/tupletable/TupleIndexRecord.java:141-222 /
     StageMatchTuple.java:42-69): pick the permutation whose sort key has
-    the longest bound prefix, apply the pattern as id joins, and decode
-    to terms only at the end (late materialization)."""
+    the longest bound prefix, bind each given term as its id
+    ``term_id(lit(term))`` (folded to a literal, so it is a pushed-down
+    parquet filter and, for ``p``, a ``p_part`` partition filter), and
+    decode only the unbound positions at the end (late
+    materialization); bound positions come back as the given terms.
+
+    A stored id is always the hash of its term (the build audits it), so
+    a bound term needs no node-table join.  A term absent from the store
+    matches no row unless its 64-bit hash collides with a stored id —
+    the same assumption :func:`~jena_spark.nodetable.encode_triples`
+    makes."""
     bound = {"s_id": s, "p_id": p, "o_id": o}
 
     def prefix_len(keys: Sequence[str]) -> int:
-        n = 0
-        for k in keys:
-            if bound[k] is None:
-                break
-            n += 1
-        return n
+        return next((i for i, k in enumerate(keys) if bound[k] is None), len(keys))
 
     best = max(ENC_PERMUTATIONS, key=lambda name: prefix_len(ENC_PERMUTATIONS[name]))
-    df = spark.read.parquet(os.path.join(out_dir, best))
-    nodes = spark.read.parquet(os.path.join(out_dir, "nodes"))
+    df = spark.read.schema(_perm_schema(best)).parquet(os.path.join(out_dir, best))
     if p is not None:
         # predicate-bound scans prune the p_part directories using the
         # layout metadata — shows up as PartitionFilters in the plan
@@ -398,12 +427,15 @@ def choose_index_encoded(
             # p_part directory instead of failing the query
             meta = None
         if meta:
-            parts = p_part_targets(term_hashes(spark, [p])[0], meta)
-            df = df.filter(F.col("p_part").isin(sorted(parts)))
+            df = df.filter(
+                F.col("p_part").isin(*p_part_targets(term_id(F.lit(p)), meta))
+            )
     for k, term in bound.items():
         if term is not None:
-            ids = nodes.filter(F.col("term") == term).select("node_id")
-            df = df.join(F.broadcast(ids.withColumnRenamed("node_id", k)), k)
-    return decode_triples(df.select("s_id", "p_id", "o_id"), nodes).select(
-        "subj", "pred", "obj"
-    )
+            df = df.filter(F.col(k) == term_id(F.lit(term)))
+    out = df.select(*(k for k, term in bound.items() if term is None))
+    if out.columns:
+        nodes = spark.read.schema(NODES_SCHEMA).parquet(os.path.join(out_dir, "nodes"))
+        out = decode_triples(out, nodes)
+    cols = zip(("subj", "pred", "obj"), bound.values())
+    return out.select(*(F.col(c) if t is None else F.lit(t).alias(c) for c, t in cols))

@@ -18,8 +18,13 @@ Spark design:
   costs one extra shuffle of the distinct-term set.  The encoded store
   cannot read them (its permutations are keyed by hash ids).
 - triples encode inline (:func:`encode_triples`): each id is the hash
-  of its term, so encoding never joins the node table.  Only decode
-  (:func:`decode_triples`) joins it, at the sink.
+  of its term, so encoding never joins the node table.  For the same
+  reason a store lookup binds a known term as the id expression
+  ``term_id(lit(term))``, which Catalyst folds to a constant — the one
+  id rule, evaluated in the JVM, with no node-table join and no
+  driver-side copy of the hash.  Only decode (:func:`decode_triples`)
+  joins the node table, at the sink, and only for the id columns that
+  are still unknown.
 """
 
 from __future__ import annotations
@@ -121,9 +126,12 @@ def encode_triples(triples: DataFrame) -> DataFrame:
 def decode_triples(encoded: DataFrame, node_table: DataFrame) -> DataFrame:
     """Late materialization: ids → lexical terms only at the sink
     (reference: BindingNodeId → Node conversion at result time,
-    tdb2/solver/BindingNodeId.java:34-40)."""
+    tdb2/solver/BindingNodeId.java:34-40).  Decodes the id columns among
+    ``s_id``/``p_id``/``o_id`` that ``encoded`` has, and only those."""
     out = encoded
     for idc, col in (("s_id", "subj"), ("p_id", "pred"), ("o_id", "obj")):
+        if idc not in encoded.columns:
+            continue
         n = node_table.withColumnRenamed("node_id", idc).withColumnRenamed("term", col)
         out = out.join(n, idc, "left").drop(idc)
     return out

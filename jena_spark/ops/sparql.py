@@ -2248,8 +2248,7 @@ _CDT_ACTIVE: "contextvars.ContextVar[bool]" = contextvars.ContextVar(
 # over the same store pay it once.  Round 6: quad stores kept by the
 # patch sink carry a ``has_cdt`` flag in their _meta.json sidecar —
 # _meta_has_cdt reads it and skips the probe entirely, so at warehouse
-# scale the default path costs zero scans; `cdt=` on the entry points
-# remains the explicit override.
+# scale the default path costs zero scans.
 from ..cdt import cdt_term_cond
 
 _cdt_data_cache: "dict[tuple, bool]" = {}
@@ -2365,10 +2364,8 @@ def _data_has_cdt(df: DataFrame) -> bool:
     return has
 
 
-def _resolve_cdt(q, triples: DataFrame, cdt: Optional[bool]) -> None:
-    if cdt is not None:
-        q.uses_cdt = bool(cdt) or getattr(q, "uses_cdt", False)
-    elif not getattr(q, "uses_cdt", False):
+def _resolve_cdt(q, triples: DataFrame) -> None:
+    if not getattr(q, "uses_cdt", False):
         q.uses_cdt = _data_has_cdt(triples)
 
 # BNODE()/BNODE(str) support (E_BNode.java semantics: same row + same arg
@@ -3789,7 +3786,6 @@ class _with_base:
 
 def sparql_select(
     triples: DataFrame, query: str, base: Optional[str] = None,
-    cdt: Optional[bool] = None,
 ) -> DataFrame:
     """Run a SPARQL SELECT (documented subset) over a triples DataFrame
     (columns subj/pred/obj in canonical encoding).  Aggregate outputs are
@@ -3797,33 +3793,31 @@ def sparql_select(
     q = _parse_query(query, base)
     if not isinstance(q, SelectQuery):
         raise RDFSyntaxError("not a SELECT query — use sparql_query()")
-    _resolve_cdt(q, triples, cdt)
+    _resolve_cdt(q, triples)
     with _with_base(q):
         return _compile_select(triples, q)
 
 
 def sparql_ask(
     triples: DataFrame, query: str, base: Optional[str] = None,
-    cdt: Optional[bool] = None,
 ) -> bool:
     q = _parse_query(query, base)
     if not isinstance(q, AskQuery):
         raise RDFSyntaxError("not an ASK query")
-    _resolve_cdt(q, triples, cdt)
+    _resolve_cdt(q, triples)
     with _with_base(q):
         return not _compile_group(_apply_datasets(triples, q), q.where).isEmpty()
 
 
 def sparql_construct(
     triples: DataFrame, query: str, base: Optional[str] = None,
-    cdt: Optional[bool] = None,
 ) -> DataFrame:
     """CONSTRUCT: instantiate the template per solution → distinct triples
     DataFrame (subj, pred, obj)."""
     q = _parse_query(query, base)
     if not isinstance(q, ConstructQuery):
         raise RDFSyntaxError("not a CONSTRUCT query")
-    _resolve_cdt(q, triples, cdt)
+    _resolve_cdt(q, triples)
     with _with_base(q):
         return _sparql_construct_body(triples, q)
 
@@ -3904,7 +3898,6 @@ def _sparql_construct_body(triples: DataFrame, q: "ConstructQuery") -> DataFrame
 
 def sparql_describe(
     triples: DataFrame, query: str, base: Optional[str] = None,
-    cdt: Optional[bool] = None,
 ) -> DataFrame:
     """DESCRIBE → triples DataFrame (subj, pred, obj): the concise
     bounded description of each solution/constant node — subject triples
@@ -3913,7 +3906,7 @@ def sparql_describe(
     q = _parse_query(query, base)
     if not isinstance(q, DescribeQuery):
         raise RDFSyntaxError("not a DESCRIBE query")
-    _resolve_cdt(q, triples, cdt)
+    _resolve_cdt(q, triples)
     with _with_base(q):
         return _sparql_describe_body(triples, q)
 
@@ -3977,7 +3970,6 @@ def _sparql_describe_body(triples: DataFrame, q: DescribeQuery) -> DataFrame:
 
 def sparql_query(
     triples: DataFrame, query: str, base: Optional[str] = None,
-    cdt: Optional[bool] = None,
 ):
     """Dispatch on query form: SELECT → DataFrame, ASK → bool,
     CONSTRUCT / DESCRIBE → triples DataFrame."""
@@ -3985,9 +3977,9 @@ def sparql_query(
     if isinstance(q, AskQuery):
         # dispatch through sparql_ask so the _with_base scope applies —
         # a query-level BASE must reach IRI()/URI() here too
-        return sparql_ask(triples, query, base, cdt=cdt)
+        return sparql_ask(triples, query, base)
     if isinstance(q, ConstructQuery):
-        return sparql_construct(triples, query, base, cdt=cdt)
+        return sparql_construct(triples, query, base)
     if isinstance(q, DescribeQuery):
-        return sparql_describe(triples, query, base, cdt=cdt)
-    return sparql_select(triples, query, base, cdt=cdt)
+        return sparql_describe(triples, query, base)
+    return sparql_select(triples, query, base)

@@ -221,16 +221,6 @@ def test_cdt_probe_cached_and_overridable(spark):
     tri2 = spark.createDataFrame(cdt_rows, ["subj", "pred", "obj"])
     assert sp._data_has_cdt(tri2) is True
 
-    # explicit override skips the probe entirely
-    class Q:
-        uses_cdt = False
-    q = Q()
-    sp._resolve_cdt(q, tri, False)
-    assert q.uses_cdt is False
-    q2 = Q()
-    sp._resolve_cdt(q2, tri, True)
-    assert q2.uses_cdt is True
-
 
 def test_cdt_probe_not_stale_after_overwrite(spark, tmp_path):
     """The CDT-presence probe caches by (semanticHash, inputFiles); a

@@ -301,16 +301,24 @@ def _topk_rows(out, method):
     return [(r["vec_id"], r["cosine"]) for r in out if r["method"] == method]
 
 
-def test_topk_brute_and_ivf_matches_separate_scans(spark):
-    """The shared-scan brute+IVF top-k must reproduce a brute-force and
-    an IVF ranking computed separately in Python, row for row (same
-    values, order and method tags)."""
-    emb = spark.createDataFrame(
+_TOPK_QV = [1.0, -0.5, 0.25, 0.0, 2.0, -1.0, 0.5, 0.75]
+
+
+def _topk_emb(spark):
+    """60 eight-dimensional vectors with repeated values (cosine ties)."""
+    return spark.createDataFrame(
         [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)])
          for i in range(60)],
         ["vec_id", "embedding"],
     )
-    qv = [1.0, -0.5, 0.25, 0.0, 2.0, -1.0, 0.5, 0.75]
+
+
+def test_topk_brute_and_ivf_matches_separate_scans(spark):
+    """The shared-scan brute+IVF top-k must reproduce a brute-force and
+    an IVF ranking computed separately in Python, row for row (same
+    values, order and method tags)."""
+    emb = _topk_emb(spark)
+    qv = _TOPK_QV
     both = sim.topk_brute_and_ivf(emb, qv, k=7, n_centroids=6, n_probe=3).collect()
     vecs = [(r["vec_id"], r["embedding"]) for r in emb.collect()]
     assert [r["method"] for r in both] == ["brute"] * 7 + ["ivf"] * 7
@@ -627,6 +635,13 @@ def test_dedup_jaccard_pipeline_job_ceiling(spark, jobs_of):
     n = jobs_of(lambda: dd.dedup_jaccard_pipeline(
         docs, k=5, num_perm=8, bands=2, rows_per_band=4).collect())
     assert n <= 10, n
+
+
+def test_topk_brute_and_ivf_job_ceiling(spark, jobs_of):
+    emb = _topk_emb(spark)
+    n = jobs_of(lambda: sim.topk_brute_and_ivf(
+        emb, _TOPK_QV, k=7, n_centroids=6, n_probe=3).collect())
+    assert n <= 6, n
 
 
 # --- round 2: scale guards ---------------------------------------------------
