@@ -1318,7 +1318,7 @@ def oracle_sql() -> dict[str, str]:
     )
 
     # mirrors pipelines/similarity.kmeans_centroids + topk_brute_and_ivf: centroids
-    # initialized from the 16 rows first in md5(vec_id) order, refined by
+    # initialized from the 16 non-null rows first in md5(vec_id) order, refined by
     # ONE Lloyd round with per-dimension means rounded to 6 decimals (the
     # rounding is what makes Spark's and DuckDB's float summation orders
     # agree), then probe the 4 centroids nearest the query
@@ -1329,7 +1329,7 @@ def oracle_sql() -> dict[str, str]:
     ivf_topk_sql = (
         "WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "
         "ord AS (SELECT vec_id, v, row_number() OVER "
-        "(ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM emb), "
+        "(ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn FROM emb WHERE v IS NOT NULL), "
         "cents0 AS (SELECT CAST(rn - 1 AS BIGINT) AS centroid_id, v AS cvec FROM ord WHERE rn <= 16), "
         "a0 AS (SELECT emb.vec_id, centroid_id, row_number() OVER (PARTITION BY emb.vec_id "
         f"ORDER BY {cos_vc} DESC, centroid_id ASC) AS rk FROM emb CROSS JOIN cents0), "

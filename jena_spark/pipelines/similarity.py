@@ -8,12 +8,16 @@
   centroids nearest the query, so on a cluster the assignment table can
   be bucketed by centroid id and a probe partition-pruned.
 - :func:`kmeans_centroids` — the IVF centroids: init from a hash-ordered
-  sample (md5 of the id — independent of id assignment order, so a
-  skewed or sorted corpus cannot bias the picks), then Lloyd rounds whose
-  assignment + per-dimension partial sums run in one Arrow stage
-  (:func:`_assign_partial_sums`) before a small JVM aggregate.  Means are
-  rounded to 6 decimals so an external oracle (DuckDB) reproduces
-  assignments bit-for-bit despite float summation-order differences.
+  sample of the non-null vectors (md5 of the id — independent of id
+  assignment order, so a skewed or sorted corpus cannot bias the picks),
+  then Lloyd rounds whose assignment + partial sums run in one Arrow
+  stage (:func:`_assign_partial_sums`) emitting long-form
+  (centroid_id, i, n, s) rows; one JVM ``groupBy(centroid_id, i)``
+  derives the means and the driver collects them.  The k × dim centroid
+  table stays on the driver throughout, so a round's plan does not grow
+  with the vector dimension.  Means are rounded to 6 decimals so an
+  external oracle (DuckDB) reproduces assignments bit-for-bit despite
+  float summation-order differences.
 - :func:`embedding_near_dup` — near-duplicate pairs via sign-bit LSH
   banding and an exact cosine verify.
 
@@ -26,7 +30,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -170,12 +174,15 @@ def _assign_partial_sums(
     cent_rows,
     vec_col: str,
 ) -> DataFrame:
-    """Per-batch (centroid_id, per-dimension count, per-dimension sum)
-    partial aggregates for one Lloyd round; the exchange carries a few
-    hundred such rows instead of per-vector assignments.  Assignment is
-    :func:`_nearest_slot`; the means the caller derives as
-    round(sum/count, 6) depend on float summation order only below the
-    1e-6 rounding — the tolerance the DuckDB oracle mirror relies on.
+    """Per-batch partial aggregates for one Lloyd round, in long form:
+    one (centroid_id, i, n, s) row per centroid and dimension ``i``,
+    with ``n`` the vectors that contributed to element ``i`` and ``s``
+    their sum.  The exchange carries k × dim such rows per batch instead
+    of per-vector assignments, and the schema (and so the plan) does not
+    grow with the dimension.  Assignment is :func:`_nearest_slot`; the
+    means the caller derives as round(sum(s) / sum(n), 6) depend on
+    float summation order only below the 1e-6 rounding — the tolerance
+    the DuckDB oracle mirror relies on.
 
     A vector whose length differs from the centroid dimension is
     assigned the lowest centroid id and contributes the elements it
@@ -184,17 +191,10 @@ def _assign_partial_sums(
     group."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     cent_mat, cent_norms, cent_ids = _centroid_arrays(cent_rows)
     dim = cent_mat.shape[1]
     null_cid = int(cent_ids.min())
-
-    schema = StructType(
-        [StructField("centroid_id", LongType(), True)]
-        + [StructField(f"__n{i}", LongType(), True) for i in range(dim)]
-        + [StructField(f"__s{i}", DoubleType(), True) for i in range(dim)]
-    )
 
     def partial(batches):
         for pdf in batches:
@@ -221,14 +221,74 @@ def _assign_partial_sums(
                     sums[null_cid][:m] += np.asarray(v[:m], dtype=np.float64)
                     cnts[null_cid][:m] += 1
             cids = sorted(sums)
-            data = {"centroid_id": pd.Series(cids, dtype="int64")}
-            for i in range(dim):
-                data[f"__n{i}"] = [int(cnts[c][i]) for c in cids]
-            for i in range(dim):
-                data[f"__s{i}"] = [float(sums[c][i]) for c in cids]
-            yield pd.DataFrame(data)
+            yield pd.DataFrame(
+                {
+                    "centroid_id": np.repeat(np.array(cids, dtype=np.int64), dim),
+                    "i": np.tile(np.arange(dim, dtype=np.int32), len(cids)),
+                    "n": np.array([cnts[c] for c in cids], dtype=np.int64).reshape(-1),
+                    "s": np.array([sums[c] for c in cids], dtype=np.float64).reshape(-1),
+                }
+            )
 
-    return embeddings.select(F.col(vec_col)).mapInPandas(partial, schema)
+    return embeddings.select(F.col(vec_col)).mapInPandas(
+        partial, "centroid_id long, i int, n long, s double"
+    )
+
+
+def _kmeans_rows(
+    embeddings: DataFrame,
+    n_centroids: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    decimals: int = 6,
+) -> list:
+    """The centroids of :func:`kmeans_centroids` as driver-side
+    ``Row(centroid_id, cvec)`` rows sorted by id.  The table is
+    driver-small by construction (k × dim values), so it stays on the
+    driver from the init sample to the last round: each round ships it
+    to the Arrow stage inside the closure (no join) and collects its
+    k × dim means."""
+    v = F.col(vec_col).cast("array<double>")
+    hkey = F.md5(F.col(id_col).cast("string"))
+    sample = (
+        embeddings.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col), v.alias("cvec"), hkey.alias("__h"))
+        .orderBy("__h", id_col)
+        .limit(n_centroids)
+        .collect()
+    )
+    lengths = sorted({len(r["cvec"]) for r in sample})
+    if len(lengths) > 1:
+        raise ValueError(
+            f"k-means init sample mixes vector lengths {lengths}; "
+            "every centroid needs the same dimension"
+        )
+    rows = [Row(centroid_id=c, cvec=r["cvec"]) for c, r in enumerate(sample)]
+    for _ in range(iters):
+        if not rows:
+            break
+        dim = len(rows[0]["cvec"])
+        # means = round(sum / count, decimals), whose summation order
+        # the rounding absorbs
+        means = (
+            _assign_partial_sums(embeddings, rows, vec_col)
+            .groupBy("centroid_id", "i")
+            .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
+            .select(
+                "centroid_id",
+                "i",
+                F.when(
+                    F.col("n") > 0, F.round(F.col("s") / F.col("n"), decimals)
+                ).alias("m"),
+            )
+            .collect()
+        )
+        cvecs: dict = {}
+        for r in means:
+            cvecs.setdefault(r["centroid_id"], [None] * dim)[r["i"]] = r["m"]
+        rows = [Row(centroid_id=c, cvec=cvecs[c]) for c in sorted(cvecs)]
+    return rows
 
 
 def kmeans_centroids(
@@ -239,51 +299,19 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     decimals: int = 6,
 ) -> DataFrame:
-    """Deterministic k-means: init = the n_centroids rows first in
-    md5(id) order (an order-free pseudo-random sample), then ``iters``
-    Lloyd rounds (k-means‖-lite; one round already fixes the
-    arbitrary-sample quality problem for probing).  Returns
-    (centroid_id, cvec).  Clusters that lose every member drop out."""
-    v = F.col(vec_col).cast("array<double>")
-    hkey = F.md5(F.col(id_col).cast("string"))
-    sample = (
-        embeddings.select(F.col(id_col), v.alias("cvec"), hkey.alias("__h"))
-        .orderBy("__h", id_col)
-        .limit(n_centroids)
+    """Deterministic k-means: init = the n_centroids non-null vectors
+    first in md5(id) order (an order-free pseudo-random sample), then
+    ``iters`` Lloyd rounds (k-means‖-lite; one round already fixes the
+    arbitrary-sample quality problem for probing), each one Arrow stage
+    (:func:`_assign_partial_sums`), one JVM ``groupBy(centroid_id, i)``
+    and one collect.  Returns (centroid_id, cvec) from the driver-side
+    rows of :func:`_kmeans_rows`.  Clusters that lose every member drop
+    out.  An init sample whose vectors differ in length raises
+    ``ValueError``."""
+    rows = _kmeans_rows(embeddings, n_centroids, iters, id_col, vec_col, decimals)
+    return embeddings.sparkSession.createDataFrame(
+        rows, "centroid_id long, cvec array<double>"
     )
-    w = Window.orderBy("__h", id_col)
-    cents = sample.select(
-        (F.row_number().over(w) - 1).cast("long").alias("centroid_id"), "cvec"
-    )
-    for _ in range(iters):
-        # the centroid table is driver-small by construction: collect it
-        # and assign against literals (no join); means = round(sum /
-        # count, 6), whose summation order the rounding absorbs
-        rows = cents.collect()
-        if not rows:
-            break
-        dim = len(rows[0]["cvec"])
-        partial = _assign_partial_sums(embeddings, rows, vec_col)
-        agg = partial.groupBy("centroid_id").agg(
-            *[F.sum(f"__n{i}").alias(f"__n{i}") for i in range(dim)],
-            *[F.sum(f"__s{i}").alias(f"__s{i}") for i in range(dim)],
-        )
-        cents = agg.select(
-            "centroid_id",
-            F.array(
-                *[
-                    F.when(
-                        F.col(f"__n{i}") > 0,
-                        F.round(
-                            F.col(f"__s{i}") / F.col(f"__n{i}"), decimals
-                        ),
-                    )
-                    for i in range(dim)
-                ]
-            ).alias("cvec"),
-        )
-    # materialize: the centroid table is tiny and consumed by ≥2 plans
-    return cents.localCheckpoint(eager=True)
 
 
 def _probe_choice(cent_rows, query_vec: Sequence[float], n_probe: int) -> list:
@@ -329,15 +357,13 @@ def topk_brute_and_ivf(
     then 'ivf' rows) → (method, id, cosine), cosine rounded to
     ``decimals`` and ranked descending with ties by ascending id.
 
-    After the k-means pass, ONE scan (:func:`_scored_arrow`) yields
+    After the k-means pass, whose centroid rows stay on the driver
+    (:func:`_kmeans_rows`), ONE scan (:func:`_scored_arrow`) yields
     (id, cosine-to-query, centroid_id); that ~24-byte/row decision table
     is pinned with a localCheckpoint and both rankings come from it —
     brute force over every row, IVF over the rows whose centroid is
     among the ``n_probe`` nearest the query (:func:`_probe_choice`)."""
-    cents = kmeans_centroids(
-        embeddings, n_centroids, kmeans_iters, id_col, vec_col
-    )
-    rows = cents.collect()
+    rows = _kmeans_rows(embeddings, n_centroids, kmeans_iters, id_col, vec_col)
     probe_ids = _probe_choice(rows, query_vec, n_probe)
     scored = (
         _scored_arrow(embeddings, rows, query_vec, id_col, vec_col)

@@ -39,6 +39,37 @@ def jobs_of(spark):
     return count
 
 
+@pytest.fixture
+def py4j_calls_of(spark):
+    """``py4j_calls_of(fn)`` runs ``fn`` and returns how many py4j
+    commands the driver sent the JVM meanwhile, counted by wrapping the
+    gateway client's ``send_command``.  Memory commands are not counted:
+    py4j sends one whenever Python garbage-collects a JVM object proxy,
+    so their number depends on GC timing and would not repeat."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(fn):
+        calls = 0
+        orig = client.send_command
+
+        def counted(command, *args, **kwargs):
+            nonlocal calls
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                calls += 1
+            return orig(command, *args, **kwargs)
+
+        client.send_command = counted
+        try:
+            fn()
+        finally:
+            client.send_command = orig
+        return calls
+
+    return count
+
+
 # --- conformance layers that need the Jena reference checkout ---------------
 
 def _corpus_missing_reason():

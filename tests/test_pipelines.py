@@ -1,6 +1,8 @@
 """Dedup / similarity / text / multimodal / linking pipeline tests."""
 
+import hashlib
 import math
+import random
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
@@ -304,13 +306,36 @@ def _topk_rows(out, method):
 _TOPK_QV = [1.0, -0.5, 0.25, 0.0, 2.0, -1.0, 0.5, 0.75]
 
 
-def _topk_emb(spark):
-    """60 eight-dimensional vectors with repeated values (cosine ties)."""
+def _topk_emb(spark, dim=8):
+    """60 ``dim``-dimensional vectors with repeated values (cosine ties)."""
     return spark.createDataFrame(
-        [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)])
+        [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(dim)])
          for i in range(60)],
         ["vec_id", "embedding"],
     )
+
+
+def _md5_order(ids):
+    """Ids in the k-means init order: md5 of the decimal id, then id."""
+    return sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+
+
+def _ref_lloyd(vecs, n_centroids, iters):
+    """k-means in plain Python: the first n_centroids vectors in
+    :func:`_md5_order`, then ``iters`` rounds of nearest-centroid
+    assignment and per-dimension means rounded like Spark's round(x, 6);
+    a centroid that loses every member drops out."""
+    by_id = dict(vecs)
+    cents = [{"centroid_id": c, "cvec": list(by_id[i])}
+             for c, i in enumerate(_md5_order(by_id)[:n_centroids])]
+    for _ in range(iters):
+        groups = {}
+        for _vid, v in vecs:
+            groups.setdefault(_ref_nearest(v, cents), []).append(v)
+        cents = [{"centroid_id": c,
+                  "cvec": [_spark_round(sum(col) / len(col), 6) for col in zip(*members)]}
+                 for c, members in sorted(groups.items())]
+    return [(r["centroid_id"], r["cvec"]) for r in cents]
 
 
 def test_topk_brute_and_ivf_matches_separate_scans(spark):
@@ -326,13 +351,60 @@ def test_topk_brute_and_ivf_matches_separate_scans(spark):
     assert _topk_rows(both, "ivf") == _ref_ivf_topk(emb, qv, 7, 6, 3)
 
 
+def test_kmeans_two_rounds_match_lloyd_reference(spark):
+    """Two Lloyd rounds reproduce a plain-Python k-means centroid for
+    centroid (integer-valued inputs make every sum exact, so only the
+    rounding of the means is compared); the second round moves them."""
+    rng = random.Random(0)
+    vecs = [(i, [float(rng.randint(-5, 5)) for _ in range(8)]) for i in range(60)]
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    got = sorted((r["centroid_id"], list(r["cvec"]))
+                 for r in sim.kmeans_centroids(emb, 6, iters=2).collect())
+    assert got == _ref_lloyd(vecs, 6, 2)
+    assert got != _ref_lloyd(vecs, 6, 1)
+
+
+def _init_edge_emb(spark, first_vec):
+    """40 four-dimensional vectors; the one first in md5 order is
+    replaced by ``first_vec``.  Returns (frame, that id)."""
+    rows = [(i, [float((i * 5 + j * 3) % 7 - 3) for j in range(4)]) for i in range(40)]
+    first = _md5_order(range(40))[0]
+    rows[first] = (first, first_vec)
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>"), first
+
+
+def test_kmeans_init_skips_null_vectors(spark):
+    """A null vector first in md5 order is left out of the init sample
+    (it used to crash the centroid arrays); top-k still ranks the rest."""
+    emb, first = _init_edge_emb(spark, None)
+    vecs = [(r["vec_id"], r["embedding"]) for r in emb.collect()
+            if r["embedding"] is not None]
+    init = [list(r["cvec"]) for r in
+            sim.kmeans_centroids(emb, 4, iters=0).orderBy("centroid_id").collect()]
+    picks = [i for i in _md5_order(range(40)) if i != first][:4]
+    assert init == [dict(vecs)[i] for i in picks]
+    qv = [1.0, -0.5, 2.0, 0.25]
+    out = sim.topk_brute_and_ivf(emb, qv, k=5, n_centroids=4, n_probe=2).collect()
+    assert _topk_rows(out, "brute") == _ref_topk(vecs, qv, 5)
+    assert len(_topk_rows(out, "ivf")) == 5
+
+
+def test_kmeans_init_rejects_mixed_lengths(spark):
+    """A short vector in the init sample raises a ValueError naming the
+    lengths, instead of numpy's inhomogeneous-shape error."""
+    emb, _first = _init_edge_emb(spark, [1.0, 2.0])
+    with pytest.raises(ValueError, match=r"lengths \[2, 4\]"):
+        sim.topk_brute_and_ivf(emb, [1.0, -0.5, 2.0, 0.25], k=5,
+                               n_centroids=4, n_probe=2)
+
+
 def test_scored_arrow_matches_hof_on_edge_rows(spark):
     """The Arrow scored stage against FIXED centroids: regular rows get
     the reference cosine and nearest centroid; a null vector or a
     wrong-dimension vector gets a null cosine and the lowest centroid
     id (the null-padded zip_with and struct-max tie-break of the column
-    form).  A null vector inside the k-means init sample has always been
-    out of contract."""
+    form).  The k-means init sample never holds a null vector
+    (``test_kmeans_init_skips_null_vectors``)."""
     from pyspark.sql import Row
 
     good = [(i, [float((i * 3 + j) % 7 - 3) for j in range(6)]) for i in range(20)]
@@ -641,7 +713,20 @@ def test_topk_brute_and_ivf_job_ceiling(spark, jobs_of):
     emb = _topk_emb(spark)
     n = jobs_of(lambda: sim.topk_brute_and_ivf(
         emb, _TOPK_QV, k=7, n_centroids=6, n_probe=3).collect())
-    assert n <= 6, n
+    assert n <= 5, n
+
+
+def test_topk_py4j_calls_do_not_grow_with_dim(spark, py4j_calls_of):
+    """A Lloyd round is long-form (one row per centroid and dimension),
+    so building a top-k call's plans costs the same py4j calls at any
+    vector dimension."""
+    calls = {}
+    for dim in (8, 64):
+        emb = _topk_emb(spark, dim)
+        qv = _TOPK_QV * (dim // 8)
+        calls[dim] = py4j_calls_of(lambda: sim.topk_brute_and_ivf(
+            emb, qv, k=7, n_centroids=6, n_probe=3).collect())
+    assert abs(calls[64] - calls[8]) <= 5, calls
 
 
 # --- round 2: scale guards ---------------------------------------------------

@@ -75,6 +75,33 @@ def test_optional(tri):
     assert got["<http://e/b>"] is None
 
 
+def test_optional_filter_compile_py4j_ceiling(spark, py4j_calls_of):
+    """Compiling the benchmark's OPTIONAL+FILTER template (a bound group,
+    an optional numeric filter) costs at most the py4j calls it cost
+    when this ceiling was set; lower it when a change earns it."""
+    from jena_spark.ops.sparql import sparql_query
+
+    xsd_int = "<http://www.w3.org/2001/XMLSchema#integer>"
+    triples = [(f"<http://e/e{i}>", "<http://e/grp>", f"<http://e/g{i % 3}>")
+               for i in range(12)]
+    triples += [(f"<http://e/e{i}>", "<http://e/val>", f'"{i * 83 % 1000}"^^{xsd_int}')
+                for i in range(12) if i % 4]
+    store = spark.createDataFrame(triples, ["subj", "pred", "obj"]).cache()
+    q = ("PREFIX b: <http://e/>\n"
+         "SELECT ?e ?v WHERE { ?e b:grp b:g1 . "
+         "OPTIONAL { ?e b:val ?v . FILTER(?v > 400) } }")
+    sparql_query(store, q)  # first compile in a session pays one-off calls
+    out = []
+    n = py4j_calls_of(lambda: out.append(sparql_query(store, q)))
+    assert rows(out[0]) == [
+        ("<http://e/e10>", f'"830"^^{xsd_int}'),
+        ("<http://e/e1>", None),
+        ("<http://e/e4>", None),
+        ("<http://e/e7>", f'"581"^^{xsd_int}'),
+    ]
+    assert n <= 5886, n
+
+
 def test_union(tri):
     out = sparql_select(
         tri,
