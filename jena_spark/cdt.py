@@ -48,9 +48,8 @@ CDT_TERM_SUFFIXES = (f"^^<{LIST_DT}>", f"^^<{MAP_DT}>")
 def cdt_term_cond(columns):
     """Spark condition: the row's ``subj`` or ``obj`` term (whichever of
     the two ``columns`` holds) is a cdt:List / cdt:Map literal; ``None``
-    when it holds neither.  Shared by the query-time CDT activation
-    probe (ops/sparql._probe_has_cdt) and the has_cdt flag the streaming
-    patch sink keeps in its store's _meta.json."""
+    when it holds neither.  The condition of the compile-time CDT
+    activation probe (ops/sparql._probe_has_cdt)."""
     from pyspark.sql import functions as F
 
     cond = None

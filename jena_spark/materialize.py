@@ -114,9 +114,8 @@ def atomic_write_json(path: str, obj) -> None:
     """Write ``obj`` as JSON to ``path`` so that readers only ever see
     the old or the complete new file: dump to a temp file in the same
     directory, fsync it, then ``os.replace``.  The temp name starts with
-    ``_`` because a store's sidecar sits inside a parquet directory, and
-    Spark's file listing skips ``_``-prefixed files — a temp file left by
-    a crash must not be read as data."""
+    ``_``, which Spark's file listing skips, so a temp file left by a
+    crash next to a store's parquet data is never read as data."""
     import tempfile
 
     fd, tmp = tempfile.mkstemp(

@@ -2,9 +2,10 @@
 
 Every UDF here is a vectorized pandas UDF over encoded term strings;
 eval errors (CdtError) become nulls, matching the engine's
-error-as-unbound convention.  These only enter a plan when the query
-text mentions the CDT namespace (the compiler's _CDT_ACTIVE gate), so
-non-CDT queries keep their pure-JVM plans.
+error-as-unbound convention.  The comparison and sort-key UDFs only
+enter a plan when the compiler's CDT switch is on (ops/sparql._cdt_active:
+the query text mentions the CDT namespace or the data holds a CDT
+literal), so non-CDT queries keep their pure-JVM plans.
 
 Reference: org/apache/jena/sparql/function/library/cdt/*.java
 (function semantics), QueryIterUnfold.java (row expansion).

@@ -2105,11 +2105,11 @@ def _typed(e: Expr, avail: Optional[set] = None) -> Tuple[F.Column, str]:
             return F.when(simple, built), "term"
         if name in ("IRI", "URI"):
             s = plain(0)
-            active_base = _ACTIVE_BASE.get()
-            if active_base:
+            scope = _SCOPE.get()
+            if scope is not None and scope.base:
                 s = F.when(
                     s.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*:"), s
-                ).otherwise(F.concat(F.lit(active_base), s))
+                ).otherwise(F.concat(F.lit(scope.base), s))
             return tf.mk_iri_col(s), "iri"
         if name == "LANGMATCHES":
             lang_c = F.lower(plain(0))
@@ -2216,124 +2216,56 @@ def _numish(c: F.Column) -> F.Column:
     return F.coalesce(c.try_cast("double"), tf.numeric_value(c.cast("string")))
 
 
-# Query base IRI for the IRI()/URI() builtin, scoped per compile via a
-# ContextVar (set from the AST's recorded base at each public entry point,
-# restored on exit) — interleaved or threaded parse/compile can't leak a
-# BASE across queries.  Subquery compiles leave it untouched (their base
-# is the enclosing query's).
 import contextvars
 
-_ACTIVE_BASE: "contextvars.ContextVar[Optional[str]]" = contextvars.ContextVar(
-    "sparql_active_base", default=None
-)
-
-# CDT (cdt:List / cdt:Map) gate: set while compiling a query whose text
-# mentions the CDT namespace.  Only then do =, !=, < … and ORDER BY grow
-# their pandas-UDF composite branches — every other query keeps a pure
-# JVM plan.  (Limitation, documented in COVERAGE.md: CDT literals that
-# appear only in the *data* of a CDT-silent query compare as opaque
-# terms; Jena evaluates per-row so it has no such mode switch.)
-_CDT_ACTIVE: "contextvars.ContextVar[bool]" = contextvars.ContextVar(
-    "sparql_cdt_active", default=False
-)
-
-# Data-driven CDT activation (round-5): a CDT literal reaching =/</ORDER
-# BY must compare by VALUE even when the query text never mentions the
-# namespace (Jena dispatches per row: CompositeDatatypeList.isEqual).
-# Activation stays a COMPILE-time decision — that is what keeps pandas
-# UDFs entirely out of non-CDT plans — so for CDT-silent queries we
-# probe the DATA once: does any subj/obj term carry a cdt:List/cdt:Map
-# datatype?  The probe is one column-pruned scan with early exit on the
-# first hit, cached by the DataFrame's semantic hash so repeated queries
-# over the same store pay it once.  Round 6: quad stores kept by the
-# patch sink carry a ``has_cdt`` flag in their _meta.json sidecar —
-# _meta_has_cdt reads it and skips the probe entirely, so at warehouse
-# scale the default path costs zero scans.
 from ..cdt import cdt_term_cond
 
+_SCOPE: "contextvars.ContextVar[Optional[_compile_scope]]" = contextvars.ContextVar(
+    "sparql_compile_scope", default=None
+)
+
+
+class _compile_scope:
+    """One compile's scope: the base IRI for the IRI()/URI() builtins and
+    the CDT switch (cdt:List / cdt:Map value semantics).
+
+    Entered by every query entry point and by each SPARQL Update
+    operation with a WHERE clause, and reset on exit, so interleaved or
+    threaded compiles cannot leak a BASE or a switch across queries.
+    Subquery compiles share the enclosing scope.  The switch is decided
+    lazily by :func:`_cdt_active`."""
+
+    def __init__(self, base: Optional[str], text: str, frame: DataFrame):
+        self.base = base
+        self.mentioned = "SPARQL-CDTs" in text
+        self.frame = frame
+        self.cdt: Optional[bool] = None
+
+    def __enter__(self):
+        self.token = _SCOPE.set(self)
+
+    def __exit__(self, *exc):
+        _SCOPE.reset(self.token)
+
+
+def _cdt_active() -> bool:
+    """Does this compile give =, !=, <, … between terms and ORDER BY their
+    composite (pandas UDF) branches?  Yes when the query text mentions the
+    CDT namespace, or when the data holds a CDT literal: a CDT-silent
+    query must still compare them by VALUE (Jena dispatches per row:
+    CompositeDatatypeList.isEqual).  The answer stays a compile-time
+    switch, which keeps pandas UDFs out of every other plan; it is
+    computed the first time a compile asks and kept for the rest of it,
+    so a compile that neither compares nor orders terms never probes."""
+    scope = _SCOPE.get()
+    if scope is None:
+        return False
+    if scope.cdt is None:
+        scope.cdt = scope.mentioned or _data_has_cdt(scope.frame)
+    return scope.cdt
+
+
 _cdt_data_cache: "dict[tuple, bool]" = {}
-
-
-def _meta_has_cdt(df: DataFrame) -> Optional[bool]:
-    """``has_cdt`` from store metadata — zero probe jobs.
-
-    The patch sink (``streaming.apply_patch_batch``) keeps the flag in
-    its store's ``_meta.json`` fresh per micro-batch, so a query over
-    such a store never pays the probe scan.  Trusted only when the plan
-    is a pure file scan (filters/projections over one relation): a union or join with
-    in-memory rows (LocalRelation) could carry CDT literals invisible to
-    ``inputFiles()``, so those shapes fall back to the data probe — the
-    safe direction.
-
-    Why the sink keeps the flag rather than leaving every read to the
-    probe: the ``sparql_mix`` benchmark's read-after-patch over one
-    ``PatchStream(101)`` batch (``local[2]`` on a 4-core host,
-    2026-10-19) took 0.245 s with the flag (median of 10, quartiles
-    0.233–0.279) and 0.356 s (0.337–0.405) with the probe instead; the
-    probe alone took 0.225 s.
-    """
-    import json as _json
-    import os as _os
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return None
-    # markers could only false-POSITIVE via a literal in a filter string,
-    # which just falls back to the probe — never returns a wrong flag
-    for marker in (
-        "Union", "LocalRelation", "LogicalRDD", "Join",
-        # synthesizing operators: any of these can mint subj/obj values
-        # (e.g. an Aggregate concat, a Generate explode, a Python
-        # transform) that never existed in the scanned files
-        "Aggregate", "Generate", "Window", "Expand",
-        "MapIn", "EvalPython", "PythonUDF", "ScriptTransformation",
-        "Deserialize",
-    ):
-        if marker in plan:
-            return None
-    # a Project with an Alias can SYNTHESIZE subj/obj values (e.g.
-    # withColumn("obj", concat(..., '^^<…List>')) over a CDT-free store),
-    # so only attribute-only projections — which never print " AS " —
-    # keep the metadata trust; aliased ones fall back to the probe
-    for line in plan.splitlines():
-        s = line.lstrip(" +-:")
-        if s.startswith("Project") and " AS " in s:
-            return None
-    metas = set()
-    for f in files:
-        p = f[len("file:"):] if f.startswith("file:") else f
-        d = _os.path.dirname(p)
-        found = None
-        for _ in range(4):  # walk up from the part file to the store root
-            # the patch-sink sidecar (underscore keeps it out of Spark's
-            # file listing)
-            cand = _os.path.join(d, "_meta.json")
-            if _os.path.isfile(cand):
-                found = cand
-                break
-            nd = _os.path.dirname(d)
-            if nd == d:
-                break
-            d = nd
-        if found is None:
-            return None
-        metas.add(found)
-    if len(metas) != 1:  # files from two different stores: don't guess
-        return None
-    try:
-        with open(next(iter(metas))) as fh:
-            meta = _json.load(fh)
-    except Exception:
-        return None
-    v = meta.get("has_cdt")
-    return v if isinstance(v, bool) else None
 
 
 def _probe_has_cdt(df: DataFrame) -> bool:
@@ -2354,19 +2286,12 @@ def _data_has_cdt(df: DataFrame) -> bool:
         key = None
     if key is not None and key in _cdt_data_cache:
         return _cdt_data_cache[key]
-    has = _meta_has_cdt(df)
-    if has is None:
-        has = _probe_has_cdt(df)
+    has = _probe_has_cdt(df)
     if key is not None:
         while len(_cdt_data_cache) >= 512:  # bound a long-lived driver
             _cdt_data_cache.pop(next(iter(_cdt_data_cache)))
         _cdt_data_cache[key] = has
     return has
-
-
-def _resolve_cdt(q, triples: DataFrame) -> None:
-    if not getattr(q, "uses_cdt", False):
-        q.uses_cdt = _data_has_cdt(triples)
 
 # BNODE()/BNODE(str) support (E_BNode.java semantics: same row + same arg
 # → same bnode; distinct rows → distinct bnodes; no-arg → fresh per call).
@@ -2689,7 +2614,7 @@ def _compile_cmp(e: Expr, avail: Optional[set] = None) -> F.Column:
             return ~(ca == cb)
         return F.lit(None).cast("boolean")
     if ta == tb == "term":
-        if _CDT_ACTIVE.get() and op in ("=", "!=", "<", ">", "<=", ">="):
+        if op in ("=", "!=", "<", ">", "<=", ">=") and _cdt_active():
             # CDT-active query: run the whole term comparison in ONE
             # vectorized UDF (composite isEqual/compare + the scalar
             # value spaces).  Two reasons: composites need per-row
@@ -3707,7 +3632,7 @@ def _compile_select(
         """order_key, widened with a composite sort key when the query
         touches CDT (cdt literals order element-wise, compareAlways)."""
         k = tf.order_key(termcol)
-        if not _CDT_ACTIVE.get():
+        if not _cdt_active():
             return k
         from . import cdt_funcs as _cf
 
@@ -3765,23 +3690,7 @@ def _parse_query(query: str, base: Optional[str]):
     parser = SparqlParser(query, base)
     ast = parser.parse()
     ast.base = parser.resolver.base
-    ast.uses_cdt = "SPARQL-CDTs" in query
     return ast
-
-
-class _with_base:
-    """Scope _ACTIVE_BASE to one query's compile (set/reset)."""
-
-    def __init__(self, q):
-        self.q = q
-
-    def __enter__(self):
-        self.token = _ACTIVE_BASE.set(self.q.base)
-        self.cdt_token = _CDT_ACTIVE.set(getattr(self.q, "uses_cdt", False))
-
-    def __exit__(self, *exc):
-        _ACTIVE_BASE.reset(self.token)
-        _CDT_ACTIVE.reset(self.cdt_token)
 
 
 def sparql_select(
@@ -3790,23 +3699,13 @@ def sparql_select(
     """Run a SPARQL SELECT (documented subset) over a triples DataFrame
     (columns subj/pred/obj in canonical encoding).  Aggregate outputs are
     native values (long/double/string), not encoded terms."""
-    q = _parse_query(query, base)
-    if not isinstance(q, SelectQuery):
-        raise RDFSyntaxError("not a SELECT query — use sparql_query()")
-    _resolve_cdt(q, triples)
-    with _with_base(q):
-        return _compile_select(triples, q)
+    return _run_query(triples, query, base, SelectQuery)
 
 
 def sparql_ask(
     triples: DataFrame, query: str, base: Optional[str] = None,
 ) -> bool:
-    q = _parse_query(query, base)
-    if not isinstance(q, AskQuery):
-        raise RDFSyntaxError("not an ASK query")
-    _resolve_cdt(q, triples)
-    with _with_base(q):
-        return not _compile_group(_apply_datasets(triples, q), q.where).isEmpty()
+    return _run_query(triples, query, base, AskQuery)
 
 
 def sparql_construct(
@@ -3814,12 +3713,7 @@ def sparql_construct(
 ) -> DataFrame:
     """CONSTRUCT: instantiate the template per solution → distinct triples
     DataFrame (subj, pred, obj)."""
-    q = _parse_query(query, base)
-    if not isinstance(q, ConstructQuery):
-        raise RDFSyntaxError("not a CONSTRUCT query")
-    _resolve_cdt(q, triples)
-    with _with_base(q):
-        return _sparql_construct_body(triples, q)
+    return _run_query(triples, query, base, ConstructQuery)
 
 
 def _sparql_construct_body(triples: DataFrame, q: "ConstructQuery") -> DataFrame:
@@ -3903,12 +3797,7 @@ def sparql_describe(
     bounded description of each solution/constant node — subject triples
     plus the recursive closure over blank-node objects (the reference's
     default handler, sparql/core/describe/DescribeBNodeClosure.java)."""
-    q = _parse_query(query, base)
-    if not isinstance(q, DescribeQuery):
-        raise RDFSyntaxError("not a DESCRIBE query")
-    _resolve_cdt(q, triples)
-    with _with_base(q):
-        return _sparql_describe_body(triples, q)
+    return _run_query(triples, query, base, DescribeQuery)
 
 
 def _sparql_describe_body(triples: DataFrame, q: DescribeQuery) -> DataFrame:
@@ -3973,13 +3862,28 @@ def sparql_query(
 ):
     """Dispatch on query form: SELECT → DataFrame, ASK → bool,
     CONSTRUCT / DESCRIBE → triples DataFrame."""
+    return _run_query(triples, query, base)
+
+
+def _sparql_ask_body(triples: DataFrame, q: AskQuery) -> bool:
+    return not _compile_group(_apply_datasets(triples, q), q.where).isEmpty()
+
+
+# query form → (its compile body, the error a form-specific entry point
+# raises for another form)
+_FORMS = {
+    SelectQuery: (_compile_select, "not a SELECT query — use sparql_query()"),
+    AskQuery: (_sparql_ask_body, "not an ASK query"),
+    ConstructQuery: (_sparql_construct_body, "not a CONSTRUCT query"),
+    DescribeQuery: (_sparql_describe_body, "not a DESCRIBE query"),
+}
+
+
+def _run_query(triples: DataFrame, query: str, base: Optional[str], form=None):
+    """Every entry point's one path: parse once, check the form (when
+    ``form`` is given), and compile the body in the query's scope."""
     q = _parse_query(query, base)
-    if isinstance(q, AskQuery):
-        # dispatch through sparql_ask so the _with_base scope applies —
-        # a query-level BASE must reach IRI()/URI() here too
-        return sparql_ask(triples, query, base)
-    if isinstance(q, ConstructQuery):
-        return sparql_construct(triples, query, base)
-    if isinstance(q, DescribeQuery):
-        return sparql_describe(triples, query, base)
-    return sparql_select(triples, query, base)
+    if form is not None and not isinstance(q, form):
+        raise RDFSyntaxError(_FORMS[form][1])
+    with _compile_scope(q.base, query, triples):
+        return _FORMS[type(q)][0](triples, q)

@@ -46,6 +46,7 @@ from .sparql import (
     SparqlParser,
     TriplePat,
     _compile_group,
+    _compile_scope,
 )
 
 Quad = Tuple[Optional[str], str, str, str]
@@ -73,6 +74,7 @@ class DeleteData:
 @dataclass
 class DeleteWhere:
     quads: List[Tuple[Optional[str], TriplePat]]
+    base: Optional[str] = None  # the operation's BASE
 
 
 @dataclass
@@ -82,6 +84,7 @@ class Modify:
     where: Group
     with_g: Optional[str] = None
     using: Optional[Tuple[List[str], List[str]]] = None  # (USING, USING NAMED)
+    base: Optional[str] = None  # the operation's BASE, for IRI()/URI()
 
 
 @dataclass
@@ -197,7 +200,7 @@ class UpdateParser(SparqlParser):
                 self._advance()
                 quads = self._quad_block()
                 self._check_quads(quads, "DELETE WHERE", allow_bnodes=False)
-                return DeleteWhere(quads)
+                return DeleteWhere(quads, self.resolver.base)
             dele = self._quad_block()
             self._check_quads(dele, "DELETE template", allow_bnodes=False)
             ins: List = []
@@ -254,7 +257,7 @@ class UpdateParser(SparqlParser):
         self._expect_kw("where")
         where = self._group()
         using = (frm, named) if (frm or named) else None
-        return Modify(dele, ins, where, using=using)
+        return Modify(dele, ins, where, using=using, base=self.resolver.base)
 
     def _silent(self) -> bool:
         if self._kw() == "silent":
@@ -688,6 +691,12 @@ def sparql_update(
         muts += 1
         return df.localCheckpoint(eager=True) if muts % 8 == 0 else df
 
+    def _solutions(data: DataFrame, op, where: Group, graph_term=None):
+        # a WHERE clause compiles in its operation's scope, probing the
+        # data it reads (an earlier operation may have added CDT literals)
+        with _compile_scope(op.base, request, data):
+            return _compile_group(data, where, graph_term=graph_term)
+
     for idx, op in enumerate(ops):
         if isinstance(op, InsertData):
             quads = _ground_quads(op.quads, alloc, True, "INSERT DATA")
@@ -709,7 +718,7 @@ def sparql_update(
                         raise RDFSyntaxError(
                             "blank nodes are not allowed in DELETE WHERE"
                         )
-            sol = _compile_group(store, _pattern_group(op.quads))
+            sol = _solutions(store, op, _pattern_group(op.quads))
             removal = _instantiate(sol, op.quads, None, False, f"u{idx}")
             store = _trim(_minus(store, removal))
         elif isinstance(op, Modify):
@@ -719,7 +728,7 @@ def sparql_update(
                 graph_term = None
             else:
                 graph_term = op.with_g
-            sol = _compile_group(data, op.where, graph_term=graph_term)
+            sol = _solutions(data, op, op.where, graph_term)
             # both templates instantiate from the SAME pre-update solutions
             if op.delete:
                 removal = _instantiate(sol, op.delete, op.with_g, False, f"u{idx}")

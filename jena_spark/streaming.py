@@ -16,7 +16,8 @@ equivalents:
 - :func:`patch_ops_stream` + :func:`apply_patch_batch` — RDF Patch
   documents stream in, parse to ordered (op, quad) rows (rdfpatch.py,
   aborted transactions dropped), and fold into a parquet-backed store
-  with the same delta-shaped set operations as SPARQL Update.
+  with the same delta-shaped set operations as SPARQL Update.  The sink
+  keeps no sidecar file next to the store's ``p_part=`` partitions.
 - :func:`stream_dedup_stateful` — cross-micro-batch exact dedup as a
   custom stateful operator (``applyInPandasWithState``).
 """
@@ -26,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import TRIPLES_SCHEMA, extract_triples, detect
+from .extract import run_extraction
 from .sources import SOURCE_SCHEMA
 
 
@@ -42,7 +43,7 @@ def stream_extract(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-    return extract_triples(detect(files)).filter(F.col("error").isNull()).drop("error")
+    return run_extraction(files)
 
 
 def stream_predicate_counts(triples_stream: DataFrame) -> DataFrame:
@@ -141,13 +142,17 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
     for an empty store.  Only ``p_part``-partitioned stores written by
     this sink are supported: a store with parquet files in its root and
     no ``p_part=`` directories reads them as ``p_part = null``, so their
-    rows are hidden once the first batch writes its partitions."""
+    rows are hidden once the first batch writes its partitions.
+
+    Besides the parquet committer's ``_SUCCESS`` marker, the sink writes
+    nothing outside the ``p_part=`` directories.  Whether the store holds
+    CDT literals is not recorded: a query learns it from the compiler's
+    cached data probe, and only when its compile compares or orders
+    terms (``ops/sparql._cdt_active``)."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         import os
 
-        from .cdt import cdt_term_cond
-        from .materialize import atomic_write_json
         from .ops.update import _minus, _union
         from .pinning import overwrite_partitions, pin
 
@@ -159,16 +164,12 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         spark = batch.sparkSession
         part = F.pmod(F.xxhash64(F.col("pred")), F.lit(n_parts)).cast("int")
         # last op per quad decides membership after this batch; the
-        # touched partitions and whether the delta adds a CDT literal are
-        # observed in the same pass
+        # touched partitions are observed in the same pass
         last, summary = pin(
             batch.groupBy("graph", "subj", "pred", "obj")
             .agg(F.max_by("op", "seq").alias("op"))
             .withColumn("p_part", part),
             touched=F.collect_set("p_part"),
-            adds_cdt=F.bool_or(
-                (F.col("op") == "A") & cdt_term_cond(("subj", "obj"))
-            ),
         )
         touched = summary["touched"]
         if not touched:
@@ -178,8 +179,7 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         dels = last.filter(F.col("op") == "D").drop("op")
 
         quad_cols = ["graph", "subj", "pred", "obj"]
-        exists = os.path.isdir(target_dir)
-        if exists:
+        if os.path.isdir(target_dir):
             cur = spark.read.schema(QUAD_STORE_SCHEMA).parquet(target_dir)
         else:
             cur = spark.createDataFrame([], QUAD_STORE_SCHEMA)
@@ -194,36 +194,6 @@ def apply_patch_batch(target_dir: str, n_parts: int = 16):
         # directory (the Iceberg MERGE analog does this through the
         # catalog)
         overwrite_partitions(nxt, target_dir, touched)
-        # keep the store's CDT flag fresh (ops/sparql._meta_has_cdt
-        # trusts it): OR in the delta's CDT presence — the check is
-        # delta-sized, never a store scan.  Deletes only ever leave a
-        # conservative true, which costs a pessimized plan, never a wrong
-        # answer.
-        import json
-
-        # "_"-prefixed so Spark's parquet reader skips it (the sidecar
-        # lives NEXT TO the p_part= dirs)
-        meta_path = os.path.join(target_dir, "_meta.json")
-        try:
-            with open(meta_path) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            # ValueError/JSONDecodeError: a crash mid-write left a
-            # truncated sidecar — treat as missing rather than failing
-            # every subsequent micro-batch
-            meta = None
-        if meta is None:
-            # a pre-existing store with no meta must NOT get a flag derived
-            # from this delta alone (its old rows are unknown) — only a
-            # store this sink created from scratch starts at has_cdt=False
-            meta = {"layout": "quads", "n_partitions": n_parts}
-            if exists:
-                meta["has_cdt"] = None
-            else:
-                meta["has_cdt"] = False
-        if meta.get("has_cdt") is False:
-            meta["has_cdt"] = bool(summary["adds_cdt"])
-        atomic_write_json(meta_path, meta)
         last.unpersist()  # thousands of micro-batches would otherwise
         # pin one checkpointed RDD each until GC
 

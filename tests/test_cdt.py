@@ -245,8 +245,8 @@ def test_cdt_probe_not_stale_after_overwrite(spark, tmp_path):
 
 
 def _patch_store(spark, path, rows):
-    """A quad store built by the patch sink, which keeps has_cdt in its
-    _meta.json sidecar; returns its (subj, pred, obj) scan."""
+    """A quad store built by the patch sink; returns its (subj, pred,
+    obj) scan."""
     from jena_spark.streaming import apply_patch_batch
 
     batch = spark.createDataFrame(
@@ -256,102 +256,124 @@ def _patch_store(spark, path, rows):
     return spark.read.parquet(path).select("subj", "pred", "obj")
 
 
+# a CDT-silent self-join whose FILTER compares two terms
+_SAME_VALUE = ("SELECT ?a ?b WHERE { ?a <http://e/p> ?o1 . ?b <http://e/p> ?o2 . "
+               "FILTER(?o1 = ?o2 && ?a != ?b) }")
+
+
 def test_cdt_meta_flag_skips_probe(spark, tmp_path, monkeypatch):
-    """A store kept by the patch sink carries has_cdt in _meta.json; a
-    CDT-silent query over it must trigger ZERO probe jobs (the round-5
-    judge's `weak` #1: the default path paid a full scan per snapshot).
+    """Over a patch store, and over the store united with an in-memory
+    delta, queries that neither compare nor order terms compile with
+    ZERO probe jobs: the BGP read, CONSTRUCT, DESCRIBE and ASK.
     Asserted by making the probe itself raise."""
+    from jena_spark.ops import sparql as sp
+    from jena_spark.ops.sparql import (
+        sparql_ask, sparql_construct, sparql_describe, sparql_select)
+
+    rows = [("<http://e/a>", "<http://e/p>", '"v"'),
+            ("<http://e/b>", "<http://e/p>", '"w"')]
+    store = _patch_store(spark, str(tmp_path / "store"), rows)
+    delta = spark.createDataFrame(
+        [("<http://e/c>", "<http://e/p>", '"x"')], ["subj", "pred", "obj"])
+    sp._cdt_data_cache.clear()
+    monkeypatch.setattr(
+        sp, "_probe_has_cdt",
+        lambda _df: (_ for _ in ()).throw(AssertionError("probe scan ran")))
+    for df, n in ((store, 2), (store.unionByName(delta), 3)):
+        read = sparql_select(df, "SELECT ?s ?o WHERE { ?s <http://e/p> ?o }")
+        assert read.count() == n
+        built = sparql_construct(
+            df, "CONSTRUCT { ?s <http://e/q> ?o } WHERE { ?s <http://e/p> ?o }")
+        assert built.count() == n
+        assert sparql_describe(df, "DESCRIBE <http://e/a>").count() == 1
+        assert sparql_ask(df, "ASK { ?s <http://e/p> \"w\" }")
+
+
+def test_cdt_meta_flag_true_for_cdt_store(spark, tmp_path):
+    """A CDT-silent comparison over a patch store holding cdt:List
+    literals compares them by value: [2] = [02]."""
+    from jena_spark.ops.sparql import sparql_select
+
+    rows = [("<http://e/a>", "<http://e/p>", f'"[2]"^^<{CDT_LIST}>'),
+            ("<http://e/b>", "<http://e/p>", f'"[02]"^^<{CDT_LIST}>')]
+    store = _patch_store(spark, str(tmp_path / "store"), rows)
+    assert len(sparql_select(store, _SAME_VALUE).collect()) == 2
+
+
+def test_cdt_meta_not_trusted_past_union(spark, tmp_path):
+    """A CDT literal that reaches the query only through a union with
+    in-memory rows still compares by value against the store's."""
+    from jena_spark.ops.sparql import sparql_select
+
+    rows = [("<http://e/a>", "<http://e/p>", f'"[2]"^^<{CDT_LIST}>')]
+    store = _patch_store(spark, str(tmp_path / "store"), rows)
+    delta = spark.createDataFrame(
+        [("<http://e/b>", "<http://e/p>", f'"[02]"^^<{CDT_LIST}>')],
+        ["subj", "pred", "obj"])
+    assert len(sparql_select(store.unionByName(delta), _SAME_VALUE).collect()) == 2
+
+
+def test_cdt_meta_not_trusted_past_aliasing_project(spark, tmp_path):
+    """CDT literals synthesized by a projection (withColumn concat) over
+    a CDT-free patch store compare by value."""
+    from pyspark.sql import functions as F
+
+    from jena_spark.ops.sparql import sparql_select
+
+    rows = [("<http://e/a>", "<http://e/p>", '"v"'),
+            ("<http://e/b>", "<http://e/p>", '"w"')]
+    store = _patch_store(spark, str(tmp_path / "store"), rows)
+    synth = store.withColumn("obj", F.concat(
+        F.lit('"['),
+        F.when(F.col("subj") == "<http://e/a>", "2").otherwise("02"),
+        F.lit(f']"^^<{CDT_LIST}>')))
+    assert len(sparql_select(synth, _SAME_VALUE).collect()) == 2
+
+
+def test_cdt_probe_once_per_compile_then_cached(spark, monkeypatch):
+    """A compile that compares terms twice probes the data once, and a
+    second run over the same frame hits the probe cache."""
     from jena_spark.ops import sparql as sp
 
     rows = [("<http://e/a>", "<http://e/p>", '"v"'),
             ("<http://e/b>", "<http://e/p>", '"w"')]
-    df = _patch_store(spark, str(tmp_path / "store"), rows)
+    tri = spark.createDataFrame(rows, ["subj", "pred", "obj"])
+    probes = []
+    probe = sp._probe_has_cdt
+    monkeypatch.setattr(sp, "_probe_has_cdt",
+                        lambda df: probes.append(1) or probe(df))
     sp._cdt_data_cache.clear()
-    monkeypatch.setattr(
-        sp, "_probe_has_cdt",
-        lambda _df: (_ for _ in ()).throw(AssertionError("probe scan ran")))
-    assert sp._data_has_cdt(df) is False
-    # filtered/projected scans still resolve through the metadata
-    assert sp._data_has_cdt(df.filter("pred is not null")) is False
-
-
-def test_cdt_meta_flag_true_for_cdt_store(spark, tmp_path, monkeypatch):
-    from jena_spark.ops import sparql as sp
-
-    rows = [("<http://e/a>", "<http://e/p>", f'"[1]"^^<{CDT_LIST}>')]
-    df = _patch_store(spark, str(tmp_path / "store"), rows)
-    sp._cdt_data_cache.clear()
-    monkeypatch.setattr(
-        sp, "_probe_has_cdt",
-        lambda _df: (_ for _ in ()).throw(AssertionError("probe scan ran")))
-    assert sp._data_has_cdt(df) is True
-
-
-def test_cdt_meta_not_trusted_past_union(spark, tmp_path):
-    """A union with in-memory rows can add CDT literals invisible to
-    inputFiles(); the metadata shortcut must refuse such plans and fall
-    back to the probe — otherwise a CDT-silent query over store+delta
-    would compare the new CDT literals lexically (wrong answers)."""
-    from jena_spark.ops import sparql as sp
-
-    rows = [("<http://e/a>", "<http://e/p>", '"v"')]
-    store = _patch_store(spark, str(tmp_path / "store"), rows)
-    delta = spark.createDataFrame(
-        [("<http://e/b>", "<http://e/p>", f'"[1]"^^<{CDT_LIST}>')],
-        ["subj", "pred", "obj"])
-    sp._cdt_data_cache.clear()
-    assert sp._meta_has_cdt(store.unionByName(delta)) is None
-    assert sp._data_has_cdt(store.unionByName(delta)) is True
-
-
-def test_cdt_meta_not_trusted_past_aliasing_project(spark, tmp_path):
-    """A Project that SYNTHESIZES subj/obj (withColumn concat) over a
-    CDT-free store can mint CDT literals invisible to the store's
-    has_cdt=false flag; the metadata shortcut must refuse alias-bearing
-    projections and fall back to the probe.  Attribute-only projections
-    (select of plain columns) keep the zero-probe trust."""
-    from pyspark.sql import functions as F
-
-    from jena_spark.ops import sparql as sp
-
-    rows = [("<http://e/a>", "<http://e/p>", '"v"')]
-    store = _patch_store(spark, str(tmp_path / "store"), rows)
-    sp._cdt_data_cache.clear()
-    assert sp._meta_has_cdt(store) is False  # attribute-only: trusted
-    synth = store.withColumn(
-        "obj", F.concat(F.lit('"[1]"^^<'), F.lit(CDT_LIST), F.lit(">"))
-    )
-    assert sp._meta_has_cdt(synth) is None   # aliased: probe fallback
-    assert sp._data_has_cdt(synth) is True
+    q = ("SELECT ?a ?b WHERE { ?a <http://e/p> ?o1 . ?b <http://e/p> ?o2 . "
+         "FILTER(?o1 != ?o2 && ?o1 < ?o2) }")
+    assert len(sp.sparql_select(tri, q).collect()) == 1
+    assert len(probes) == 1
+    assert len(sp.sparql_select(tri, q).collect()) == 1
+    assert len(probes) == 1
 
 
 def test_patch_sink_keeps_cdt_meta_fresh(spark, tmp_path):
-    """apply_patch_batch creates/updates the store's has_cdt flag per
-    micro-batch (delta-sized check, never a store scan)."""
-    import json
+    """apply_patch_batch writes nothing outside its p_part= partition
+    directories (no metadata sidecar), whatever the batches add or
+    delete."""
+    import os
 
     from jena_spark.streaming import apply_patch_batch
 
     store = str(tmp_path / "quads")
     apply = apply_patch_batch(store, n_parts=4)
-    b1 = spark.createDataFrame(
-        [(1, "A", None, "<http://e/a>", "<http://e/p>", '"v"')],
-        "seq long, op string, graph string, subj string, pred string, obj string")
-    apply(b1, 0)
-    with open(store + "/_meta.json") as f:
-        assert json.load(f)["has_cdt"] is False
-    b2 = spark.createDataFrame(
-        [(1, "A", None, "<http://e/b>", "<http://e/p>",
-          f'"[1]"^^<{CDT_LIST}>')],
-        "seq long, op string, graph string, subj string, pred string, obj string")
-    apply(b2, 1)
-    with open(store + "/_meta.json") as f:
-        assert json.load(f)["has_cdt"] is True
-    # deletes leave a conservative true
-    b3 = spark.createDataFrame(
-        [(1, "D", None, "<http://e/b>", "<http://e/p>",
-          f'"[1]"^^<{CDT_LIST}>')],
-        "seq long, op string, graph string, subj string, pred string, obj string")
-    apply(b3, 2)
-    with open(store + "/_meta.json") as f:
-        assert json.load(f)["has_cdt"] is True
+    schema = "seq long, op string, graph string, subj string, pred string, obj string"
+    cdt_quad = (None, "<http://e/b>", "<http://e/p>", f'"[1]"^^<{CDT_LIST}>')
+    for i, op in enumerate([
+        ("A", None, "<http://e/a>", "<http://e/p>", '"v"'),
+        ("A",) + cdt_quad,
+        ("D",) + cdt_quad,
+    ]):
+        apply(spark.createDataFrame([(1,) + op], schema), i)
+    outside = [
+        name for name in os.listdir(store)
+        if not name.startswith("p_part=")
+        # the parquet committer's own success marker and its checksum
+        and name not in ("_SUCCESS", "._SUCCESS.crc")
+    ]
+    assert outside == []
+    assert os.listdir(store)

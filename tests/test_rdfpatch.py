@@ -418,24 +418,28 @@ def test_patch_batch_without_seq_raises(spark, tmp_path):
 
 def test_crashed_sidecar_write_leaves_store_readable(spark, tmp_path, monkeypatch):
     """A crash between the sidecar's temp write and its os.replace
-    leaves the temp file inside the p_part store.  Its ``_`` prefix
-    keeps it out of Spark's file listing, so the store reads the same
-    rows, and the sidecar keeps its last complete version."""
+    leaves the temp file next to an encoded store's ``meta.json``.  Its
+    ``_`` prefix keeps it out of Spark's file listing, the store reads
+    the same rows, and the sidecar keeps its last complete version."""
     import glob
     import json
-    import os
 
-    from jena_spark.materialize import atomic_write_json
-    from jena_spark.streaming import apply_patch_batch
+    from jena_spark.materialize import (
+        atomic_write_json, choose_index_encoded, materialize_encoded)
 
-    store = str(tmp_path / "quads")
-    apply_patch_batch(store, n_parts=4)(spark.createDataFrame(
-        [(1, "A", None, "<http://e/a>", "<http://e/p>", '"v1"'),
-         (2, "A", None, "<http://e/b>", "<http://e/q>", '"v2"')],
-        "seq long, op string, graph string, subj string, pred string, obj string",
-    ), 0)
-    before = _store_quads(spark, store)
-    meta_path = os.path.join(store, "_meta.json")
+    store = str(tmp_path / "enc")
+    materialize_encoded(spark.createDataFrame(
+        [(None, "<http://e/a>", "<http://e/p>", '"v1"'),
+         (None, "<http://e/b>", "<http://e/q>", '"v2"')],
+        "graph string, subj string, pred string, obj string",
+    ), store, n_partitions=4)
+
+    def rows():
+        return sorted(tuple(r) for r in
+                      choose_index_encoded(spark, store, p="<http://e/p>").collect())
+
+    before = rows()
+    meta_path = os.path.join(store, "meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
 
@@ -446,22 +450,21 @@ def test_crashed_sidecar_write_leaves_store_readable(spark, tmp_path, monkeypatc
         m.setattr(os, "replace", killed)
         m.setattr(os, "unlink", lambda _path: None)  # a kill cleans nothing up
         with pytest.raises(RuntimeError):
-            atomic_write_json(meta_path, {**meta, "has_cdt": True})
+            atomic_write_json(meta_path, {**meta, "n_salts": 1})
     leftovers = [p for p in glob.glob(os.path.join(store, "*"))
                  if os.path.isfile(p) and p != meta_path]
     assert len(leftovers) == 1
     assert os.path.basename(leftovers[0]).startswith("_")
-    assert _store_quads(spark, store) == before
+    assert rows() == before and before
     with open(meta_path) as f:
         assert json.load(f) == meta
 
 
 def test_apply_patch_batch_job_ceiling(spark, tmp_path, jobs_of):
     """One batch of 100 adds and 100 deletes over 8 predicates and 16
-    partitions: the touched partitions and the CDT flag are observed
-    while the delta is pinned, and the partitions left after the
-    rewrite while the result is pinned (14 jobs with those read by side
-    queries)."""
+    partitions: the touched partitions are observed while the delta is
+    pinned, and the partitions left after the rewrite while the result
+    is pinned (14 jobs with those read by side queries)."""
     from jena_spark.streaming import apply_patch_batch
 
     store = str(tmp_path / "store")

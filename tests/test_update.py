@@ -52,6 +52,38 @@ def test_modify_with_where(store):
     assert len(got) == 2
 
 
+CDT_LIST = "http://w3id.org/awslabs/neptune/SPARQL-CDTs/List"
+
+
+def test_update_where_compares_cdt_lists_by_value(spark):
+    """A CDT-silent WHERE of an update compares cdt:List literals by
+    value, as the same FILTER does in sparql_select: [2] = [02]."""
+    from jena_spark.ops.sparql import sparql_select
+
+    rows = [(None, "<http://e/a>", "<http://e/p>", f'"[2]"^^<{CDT_LIST}>')]
+    data = spark.createDataFrame(
+        rows, "graph string, subj string, pred string, obj string")
+    flt = f'FILTER(?o = "[02]"^^<{CDT_LIST}>)'
+    assert len(sparql_select(
+        data, f"SELECT ?s WHERE {{ ?s ?p ?o {flt} }}").collect()) == 1
+    out = sparql_update(
+        data, f"DELETE {{ ?s ?p ?o }} WHERE {{ ?s ?p ?o {flt} }}")
+    assert quads(out) == []
+
+
+def test_update_where_resolves_iri_against_base(store):
+    """IRI() in an update's WHERE resolves against the request's BASE,
+    as it does in SELECT."""
+    out = sparql_update(
+        store,
+        """BASE <http://ex/>
+           INSERT { ?s <http://e/q> ?x }
+           WHERE { ?s <http://e/p> ?o BIND(IRI("rel") AS ?x) }""",
+    )
+    added = {o for _, _, p, o in quads(out) if p == "<http://e/q>"}
+    assert added == {"<http://ex/rel>"}
+
+
 def test_graph_management(store):
     out = sparql_update(
         store,
